@@ -1684,18 +1684,13 @@ def q_stream_match(spark, sf):
     import shutil
     import tempfile
 
-    from entitymatch_spark.operators.blocking import (
-        lsh_band_keys,
-        minhash_signature,
-        prune_oversized_blocks,
-        token_blocking_keys,
+    from entitymatch_spark.operators.blocking import prune_oversized_blocks
+    from entitymatch_spark.operators.posting import build_posting, token_idf
+    from entitymatch_spark.plans.pipeline import (
+        MatchConfig,
+        blocking_keys,
+        prepare_docs,
     )
-    from entitymatch_spark.operators.posting import (
-        build_posting,
-        collect_idf_map,
-        token_idf,
-    )
-    from entitymatch_spark.plans.pipeline import MatchConfig, prepare_docs
     from entitymatch_spark.streaming.incremental import incremental_match
 
     pages = _t(spark, sf, "documents").select(
@@ -1709,29 +1704,13 @@ def q_stream_match(spark, sf):
     static_pages = pages.filter(F.col("url") % 3 != 0)
     arrivals = pages.filter(F.col("url") % 3 == 0)
     docs = prepare_docs(static_pages, cfg)
-    posting = build_posting(docs)
-    idf = token_idf(posting, n_docs=docs.count())
-    keys = token_blocking_keys(posting, idf, min_idf=cfg.min_idf).unionByName(
-        lsh_band_keys(
-            minhash_signature(
-                docs, num_hashes=cfg.num_hashes, seed=cfg.seed,
-                token_hash=cfg.minhash_token_hash,
-            ),
-            bands=cfg.bands, rows_per_band=cfg.rows_per_band,
-            band_hash=cfg.lsh_band_hash,
-        )
-    )
-    keys = prune_oversized_blocks(keys, cfg.max_block)
+    idf = token_idf(build_posting(docs), n_docs=docs.count())
+    keys = prune_oversized_blocks(blocking_keys(docs, idf, cfg), cfg.max_block)
     d = tempfile.mkdtemp(prefix="em_stream_match_")
     try:
         arrivals.write.mode("overwrite").parquet(d)
         stream = spark.readStream.schema(arrivals.schema).parquet(d)
-        scored = incremental_match(
-            stream, docs, keys, idf, collect_idf_map(idf),
-            min_idf=cfg.min_idf, num_hashes=cfg.num_hashes, bands=cfg.bands,
-            rows_per_band=cfg.rows_per_band, seed=cfg.seed,
-            token_hash=cfg.minhash_token_hash, band_hash=cfg.lsh_band_hash,
-        )
+        scored = incremental_match(stream, docs, keys, idf, cfg)
         out = _drain_stream_to_table(spark, scored, "stream_match")
     finally:
         shutil.rmtree(d, ignore_errors=True)  # rows live in the memory sink

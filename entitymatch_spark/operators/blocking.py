@@ -272,14 +272,22 @@ def prune_oversized_blocks(keys: DataFrame, max_block: int) -> DataFrame:
     an id-named knob here would imply per-id behavior it doesn't have.)
 
     Bounded blocks make per-block pair output <= cap^2/2 and leave no
-    skewed shuffle key behind. candidate_pairs folds this purge into
-    its block grouping; this standalone form serves callers that need
-    a purged KEY table itself (e.g. the streaming matcher's static
-    side, which stream-static-joins against it every micro-batch).
+    skewed shuffle key behind. Count-first: the oversized keys are
+    found by one aggregate and removed with a broadcast anti-join (hot
+    keys are FEW — that is why they are purged), so the key table
+    keeps its columns and layout. candidate_pairs' "prepurge" policy
+    and the batch-incremental block expansion run this before their
+    collect; callers that need a purged KEY table itself use it too
+    (e.g. the streaming matcher's static side, which stream-static-
+    joins against it every micro-batch).
     """
-    sizes = keys.groupBy("key").agg(F.count("*").alias("n"))
-    ok = sizes.filter(F.col("n") <= max_block).select("key")
-    return keys.join(ok, "key")
+    oversized = (
+        keys.groupBy("key")
+        .agg(F.count("*").alias("__n"))
+        .filter(F.col("__n") > max_block)
+        .select("key")
+    )
+    return keys.join(F.broadcast(oversized), "key", "left_anti")
 
 
 def salt_oversized_blocks(
@@ -372,14 +380,7 @@ def candidate_pairs(
     if oversize_policy == "salt":
         keys = salt_oversized_blocks(keys, max_block, id_col)
     elif oversize_policy == "prepurge":
-        oversized = (
-            keys.groupBy("key")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_block)
-            .select("key")
-        )
-        # hot keys are FEW (that is why they're purged) -> broadcast
-        keys = keys.join(F.broadcast(oversized), "key", "left_anti")
+        keys = prune_oversized_blocks(keys, max_block)
     elif oversize_policy != "purge":
         raise ValueError(f"unknown oversize_policy: {oversize_policy!r}")
     if n_partitions:

@@ -59,7 +59,7 @@ LEV_BAND = 32
 JW_PREFIX = 256   # chars compared by Jaro-Winkler (O(n^2) window scan)
 
 
-def _pair_udf(idf_bcast, jw_prefix: int = JW_PREFIX, default_idf: float = 1e-5):
+def _pair_udf(idf_bcast, default_idf: float = 1e-5):
     """Arrow payload: ids + prefix-capped texts + SPACE-JOINED token
     strings (split back in Python). A string column transfers as one
     contiguous buffer; an array<string> column materializes one child
@@ -100,8 +100,8 @@ def _pair_udf(idf_bcast, jw_prefix: int = JW_PREFIX, default_idf: float = 1e-5):
         for ia, ib, ta, tb, ka, kb in zip(
             id_a, id_b, text_a, text_b, toks_a, toks_b
         ):
-            ta = (ta or "")[:jw_prefix]
-            tb = (tb or "")[:jw_prefix]
+            ta = (ta or "")[:JW_PREFIX]
+            tb = (tb or "")[:JW_PREFIX]
             # Jaro is symmetric: iterate the SHORTER string and profile
             # the longer — the char loop shrinks and the profile cache
             # serves a doc no matter which side of the pair it lands on
@@ -127,16 +127,16 @@ def hydration_exprs(
     text_col: str = "norm_text",
     tokens_col: str = "tokens",
     lev_prefix: int = LEV_PREFIX,
-    jw_prefix: int = JW_PREFIX,
 ) -> list:
     """The four per-doc hydration columns score_hydrated consumes
     (``jwt_/levt_/toksj_/toksd_<suffix>``) as bare expressions. ONE
     place defines them: hydration_side below projects them from a docs
-    table, and the streaming matcher splices them into its stream-side
-    select (a stream cannot be re-joined to itself, so it cannot call
-    hydration_side) — a schema change here reaches both paths."""
+    table, and plans.pipeline.score_stage splices them into the
+    streaming matcher's pair rows (a stream cannot be re-joined to
+    itself, so its side cannot go through hydration_side) — a schema
+    change here reaches both paths."""
     return [
-        F.substring(text_col, 1, jw_prefix).alias(f"jwt_{suffix}"),
+        F.substring(text_col, 1, JW_PREFIX).alias(f"jwt_{suffix}"),
         F.substring(text_col, 1, lev_prefix).alias(f"levt_{suffix}"),
         F.array_join(tokens_col, " ").alias(f"toksj_{suffix}"),
         F.array_distinct(tokens_col).alias(f"toksd_{suffix}"),
@@ -150,16 +150,13 @@ def hydration_side(
     text_col: str = "norm_text",
     tokens_col: str = "tokens",
     lev_prefix: int = LEV_PREFIX,
-    jw_prefix: int = JW_PREFIX,
 ) -> DataFrame:
     """Per-DOC precompute for one side of the pair scorer: prefix
     slices, distinct token set, joined token string (docs << pairs, so
-    anything computable per doc is never recomputed per pair). Public
-    so the streaming matcher can hydrate its stream side directly
-    (stream-side joins back to the stream are not expressible)."""
+    anything computable per doc is never recomputed per pair)."""
     return docs.select(
         F.col(id_col).alias(f"id_{suffix}"),
-        *hydration_exprs(suffix, text_col, tokens_col, lev_prefix, jw_prefix),
+        *hydration_exprs(suffix, text_col, tokens_col, lev_prefix),
     )
 
 
@@ -173,8 +170,6 @@ def score_pairs(
     weights: dict[str, float] | None = None,
     threshold: float | None = None,
     lev_prefix: int = LEV_PREFIX,
-    lev_band: int | None = LEV_BAND,
-    jw_prefix: int = JW_PREFIX,
     cascade_min_jaccard: float | None = None,
     default_idf: float = 1e-5,
 ) -> DataFrame:
@@ -193,7 +188,7 @@ def score_pairs(
     the non-cascaded path.
     """
     sides = [
-        hydration_side(docs, s, id_col, text_col, tokens_col, lev_prefix, jw_prefix)
+        hydration_side(docs, s, id_col, text_col, tokens_col, lev_prefix)
         for s in ("a", "b")
     ]
     hydrated = pairs.join(sides[0], "id_a").join(sides[1], "id_b")
@@ -202,8 +197,6 @@ def score_pairs(
         idf_map,
         weights=weights,
         threshold=threshold,
-        lev_band=lev_band,
-        jw_prefix=jw_prefix,
         cascade_min_jaccard=cascade_min_jaccard,
         default_idf=default_idf,
     )
@@ -214,8 +207,6 @@ def score_hydrated(
     idf_map: dict[str, float],
     weights: dict[str, float] | None = None,
     threshold: float | None = None,
-    lev_band: int | None = LEV_BAND,
-    jw_prefix: int = JW_PREFIX,
     cascade_min_jaccard: float | None = None,
     default_idf: float = 1e-5,
 ) -> DataFrame:
@@ -233,22 +224,17 @@ def score_hydrated(
     idf_bcast = spark.sparkContext.broadcast(idf_map)
 
     maxlen = F.greatest(F.length("levt_a"), F.length("levt_b"))
-    if lev_band is None:
-        lev_sim = F.when(maxlen == 0, F.lit(1.0)).otherwise(
-            1.0 - F.levenshtein("levt_a", "levt_b") / maxlen
-        )
-    else:
-        # 3-arg levenshtein (Spark >= 3.5) runs the banded DP and
-        # returns -1 above the band -> similarity 0.0
-        d = F.levenshtein(F.col("levt_a"), F.col("levt_b"), lev_band)
-        lev_sim = F.when(maxlen == 0, F.lit(1.0)).otherwise(
-            F.when(d < 0, F.lit(0.0)).otherwise(1.0 - d / maxlen)
-        )
+    # 3-arg levenshtein (Spark >= 3.5) runs the banded DP and returns
+    # -1 above the band -> similarity 0.0
+    d = F.levenshtein(F.col("levt_a"), F.col("levt_b"), LEV_BAND)
+    lev_sim = F.when(maxlen == 0, F.lit(1.0)).otherwise(
+        F.when(d < 0, F.lit(0.0)).otherwise(1.0 - d / maxlen)
+    )
     inter = F.size(F.array_intersect("toksd_a", "toksd_b"))
     union = F.size("toksd_a") + F.size("toksd_b") - inter
     jaccard = F.when(union == 0, F.lit(0.0)).otherwise(inter / union)
 
-    udf = _pair_udf(idf_bcast, jw_prefix, default_idf)
+    udf = _pair_udf(idf_bcast, default_idf)
     cheap = hydrated.withColumn("lev_sim", lev_sim).withColumn("jaccard", jaccard)
     if cascade_min_jaccard is None:
         survivors, rejected = cheap, None
@@ -259,7 +245,7 @@ def score_hydrated(
         gate = F.col("jaccard") >= cascade_min_jaccard
         survivors, rejected = cheap.filter(gate), cheap.filter(~gate)
     # Trim the Arrow transfer JVM-side: texts cut to the JW prefix (not
-    # whole web pages; the [:jw_prefix] in the UDF is then a no-op kept
+    # whole web pages; the [:JW_PREFIX] in the UDF is then a no-op kept
     # as a guard), token arrays flattened to one joined string per side.
     scored_full = (
         survivors.withColumn(

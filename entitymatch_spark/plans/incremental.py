@@ -39,7 +39,12 @@ the incremental run has already matched — transitive clustering is
 monotone and never retracts). New pairs are purged at UNION block
 sizes, exactly like the full run: the semi-join pulls every old member
 of each batch-touched key, so the single-pass block expansion sees the
-whole block.
+whole block. ``oversize_policy="purge"`` and ``"prepurge"`` keep this
+contract; ``"salt"`` is rejected (:func:`initial_state` and
+:func:`incremental_match` raise ValueError): a salted block of n
+members splits into ceil(n / max_block) sub-blocks, so a growing block
+changes its sub-block count and re-salts its old members — old pairs
+the full run would drop or gain, which no batch-local step can match.
 
 The reference has no incremental mode (TestMatcher/Program.cs rebuilds
 its index per run); this implements the north_star's "resumes without
@@ -59,16 +64,16 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from entitymatch_spark.operators.blocking import prune_oversized_blocks
 from entitymatch_spark.operators.clustering import assign_clusters, connected_components
-from entitymatch_spark.operators.posting import (
-    collect_idf_map,
-    collect_idf_map_bounded,
-)
-from entitymatch_spark.operators.scoring import score_pairs
 from entitymatch_spark.plans.pipeline import (
     MatchConfig,
+    blocking_keys,
     match_pipeline,
     prepare_docs,
+    score_stage,
+    scorer_idf_map,
+    scorer_layout,
 )
 
 
@@ -167,6 +172,7 @@ def initial_state(
     result; pass a fixed snapshot when that equivalence matters.
     """
     cfg = cfg or MatchConfig()
+    _reject_salt(cfg)
     res = match_pipeline(pages, cfg, idf=idf)
     return MatchState(
         docs=res.docs, keys=res.keys, idf=res.idf,
@@ -174,25 +180,30 @@ def initial_state(
     )
 
 
-def _batch_keys(new_docs: DataFrame, state: MatchState) -> DataFrame:
-    # THE pipeline key construction (plans.pipeline.blocking_keys) —
-    # the incremental == full-recompute exactness contract REQUIRES
-    # batch keys built exactly like full-run keys, so this must not be
-    # a hand copy that can drift
-    from entitymatch_spark.plans.pipeline import blocking_keys
-
-    return blocking_keys(new_docs, state.idf, state.cfg)
+def _reject_salt(cfg: MatchConfig) -> None:
+    if cfg.oversize_policy == "salt":
+        raise ValueError(
+            'oversize_policy="salt" cannot grow incrementally: a block of n '
+            "members is salted into ceil(n / max_block) sub-blocks, so a "
+            "batch that grows a block re-salts its old members and the "
+            "result no longer equals a full recompute; use \"purge\" or "
+            '"prepurge"'
+        )
 
 
 def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalResult:
     """Match a batch of new pages against the state without touching
     old-old pairs. See the module docstring for cost and exactness."""
     cfg = state.cfg
+    _reject_salt(cfg)
     new_docs = prepare_docs(new_pages, cfg)
     if cfg.cache:
         new_docs = new_docs.persist()
 
-    new_keys = _batch_keys(new_docs, state)
+    # THE pipeline key construction: the incremental == full-recompute
+    # exactness contract REQUIRES batch keys built exactly like
+    # full-run keys
+    new_keys = blocking_keys(new_docs, state.idf, cfg)
 
     # Blocks that can produce a NEW pair are exactly the blocks holding
     # >= 1 batch doc. The semi-join pulls every old member of those
@@ -204,17 +215,10 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
         new_keys.withColumn("is_new", F.lit(True))
     )
     if cfg.oversize_policy == "prepurge":
-        # bound the collect buffers below BEFORE grouping (same dial as
-        # candidate_pairs): count-first at UNION size, broadcast the
-        # few oversized keys, anti-join them away — identical output to
-        # the post-collect purge filter, bounded reduce memory
-        oversized = (
-            sub.groupBy("key")
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > cfg.max_block)
-            .select("key")
-        )
-        sub = sub.join(F.broadcast(oversized), "key", "left_anti")
+        # bound the collect buffers below BEFORE grouping, at UNION
+        # size (same dial as candidate_pairs) — identical output to the
+        # post-collect purge filter, bounded reduce memory
+        sub = prune_oversized_blocks(sub, cfg.max_block)
     # Asymmetric single-pass block expansion: each block's members are
     # collected into separate old/new lists and only new x old plus
     # new x new pairs are generated — a block of k old + b new members
@@ -261,16 +265,7 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_keys"))
     )
-    if cfg.score_partitions is not None:
-        n_part = (
-            4 * new_pages.sparkSession.sparkContext.defaultParallelism
-            if cfg.score_partitions == "auto"
-            else int(cfg.score_partitions)
-        )
-        # same layout as the full pipeline: hash by id_a + local sort
-        # keeps the Arrow scorer's per-doc profile memo hot (see the
-        # measured rationale in plans/pipeline.py).
-        pairs = pairs.repartition(n_part, "id_a").sortWithinPartitions("id_a", "id_b")
+    pairs = scorer_layout(pairs, cfg)
     if cfg.cache:
         pairs = pairs.persist()
 
@@ -287,16 +282,7 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
     # is both simpler and measured-equal.
     docs_union = state.docs.unionByName(new_docs)
 
-    if cfg.idf_max_entries is not None:
-        idf_map, default_idf = collect_idf_map_bounded(state.idf, cfg.idf_max_entries)
-    else:
-        idf_map, default_idf = collect_idf_map(state.idf), 1e-5
-    scored = score_pairs(
-        pairs, docs_union, idf_map,
-        weights=cfg.weights, lev_prefix=cfg.lev_prefix,
-        cascade_min_jaccard=cfg.cascade_min_jaccard,
-        default_idf=default_idf,
-    )
+    scored = score_stage(pairs, docs_union, *scorer_idf_map(state.idf, cfg), cfg)
     # the STATE's predicate (model when recalibrated, else affine) so
     # grown clusters stay coherent with the stored ones
     matches = _match_edges(state, scored)
@@ -684,15 +670,14 @@ def rethreshold(
     else:
         from dataclasses import replace
 
-        cfg = replace(
-            state.cfg,
-            threshold=state.cfg.threshold if threshold is None else threshold,
-            weights=dict(state.cfg.weights if weights is None else weights),
-        )
+        cfg = state.cfg
+        if threshold is not None:
+            cfg = replace(cfg, threshold=threshold)
         scored = state.scored
         if weights is not None:
+            cfg = replace(cfg, weights=dict(weights))
             blend = sum(
-                (F.col(k) * F.lit(w) for k, w in cfg.weights.items()), F.lit(0.0)
+                (F.col(k) * F.lit(w) for k, w in weights.items()), F.lit(0.0)
             )
             scored = scored.withColumn("score", blend)
         matches = scored.filter(F.col("score") >= cfg.threshold)

@@ -32,6 +32,7 @@ from entitymatch_spark.operators.blocking import (
 )
 from entitymatch_spark.operators.clustering import assign_clusters, connected_components
 from entitymatch_spark.operators.posting import (
+    IDF_FLOOR,
     build_posting,
     collect_idf_map,
     collect_idf_map_bounded,
@@ -40,6 +41,9 @@ from entitymatch_spark.operators.posting import (
 from entitymatch_spark.operators.scoring import (
     DEFAULT_THRESHOLD,
     DEFAULT_WEIGHTS,
+    hydration_exprs,
+    hydration_side,
+    score_hydrated,
     score_pairs,
 )
 
@@ -86,14 +90,6 @@ class MatchConfig:
     # None leaves AQE's layout (right when pairs are huge and
     # byte-proportional); an int pins it.
     score_partitions: int | str | None = "auto"
-    # Minimum partition count for the INPUT scan. Parquet cannot split
-    # below a row group, so a small input (one or few files) floors the
-    # whole narrow front of the pipeline — normalize, tokenize, the
-    # MinHash fold — at one task per file regardless of cluster size.
-    # "auto" fans pages out to defaultParallelism when the scan arrives
-    # below it (a no-op at real corpus scale, where splits ≫ cores);
-    # None trusts the source layout; an int pins a floor.
-    input_partitions: int | str | None = "auto"
     seed: int = 42
     cache: bool = True  # persist docs + pairs (reused by several stages)
     # block-cap enforcement: "purge" (single-pass; reduce buffer = the
@@ -142,14 +138,15 @@ class MatchResult:
 
 
 def prepare_docs(pages: DataFrame, cfg: MatchConfig) -> DataFrame:
-    if cfg.input_partitions is not None:
-        floor = (
-            pages.sparkSession.sparkContext.defaultParallelism
-            if cfg.input_partitions == "auto"
-            else int(cfg.input_partitions)
-        )
-        if pages.rdd.getNumPartitions() < floor:
-            pages = pages.repartition(floor)
+    # Parquet cannot split below a row group, so a small input (one or
+    # few files) would floor the whole narrow front of the pipeline —
+    # normalize, tokenize, the MinHash fold — at one task per file
+    # regardless of cluster size. Fan such a scan out to
+    # defaultParallelism (a no-op at real corpus scale, where splits ≫
+    # cores).
+    floor = pages.sparkSession.sparkContext.defaultParallelism
+    if pages.rdd.getNumPartitions() < floor:
+        pages = pages.repartition(floor)
     return pages.select(
         F.col(cfg.id_col).alias("doc_id"),
         normalize_text(cfg.text_col).alias("norm_text"),
@@ -158,27 +155,128 @@ def prepare_docs(pages: DataFrame, cfg: MatchConfig) -> DataFrame:
 
 
 def blocking_keys(docs: DataFrame, idf: DataFrame, cfg: MatchConfig) -> DataFrame:
-    """(doc_id, key, family): the pipeline's blocking-key table —
+    """(doc_id, key): the pipeline's blocking-key table —
     rare-token keys (narrow per-doc array_distinct + broadcast IDF
     join, no global distinct shuffle) unioned with MinHash-LSH band
-    keys when ``cfg.use_lsh``. THE one construction: the bench's timed
-    chains call this too, so what the bench measures cannot drift from
-    what the pipeline runs (hash variants, band geometry, use_lsh gate).
+    keys when ``cfg.use_lsh``. THE one construction: the resumable,
+    batch-incremental and streaming matchers and the bench's timed
+    chains call this too, so none of them can drift from what the
+    pipeline runs (hash variants, band geometry, use_lsh gate). Every
+    step is per-row, so ``docs`` may be a stream, and ``doc_id`` passes
+    through untouched whatever its type.
     """
     keys = token_blocking_keys_from_docs(docs, idf, min_idf=cfg.min_idf)
     if cfg.use_lsh:
-        sigs = minhash_signature(
-            docs, id_col="doc_id", tokens_col="tokens",
-            num_hashes=cfg.num_hashes, seed=cfg.seed,
-            token_hash=cfg.minhash_token_hash,
-        )
-        keys = keys.unionByName(
-            lsh_band_keys(
-                sigs, bands=cfg.bands, rows_per_band=cfg.rows_per_band,
-                band_hash=cfg.lsh_band_hash, sig_len=cfg.num_hashes,
-            )
-        )
+        keys = keys.unionByName(lsh_keys(docs, cfg))
     return keys
+
+
+def lsh_keys(docs: DataFrame, cfg: MatchConfig) -> DataFrame:
+    """(doc_id, key): the MinHash-LSH band keys of ``blocking_keys``."""
+    sigs = minhash_signature(
+        docs, id_col="doc_id", tokens_col="tokens",
+        num_hashes=cfg.num_hashes, seed=cfg.seed,
+        token_hash=cfg.minhash_token_hash,
+    )
+    return lsh_band_keys(
+        sigs, bands=cfg.bands, rows_per_band=cfg.rows_per_band,
+        band_hash=cfg.lsh_band_hash, sig_len=cfg.num_hashes,
+    )
+
+
+def pair_stage(keys: DataFrame, cfg: MatchConfig) -> DataFrame:
+    """Candidate pairs under ``cfg``'s block cap and oversize policy,
+    in the scorer's layout (``scorer_layout``)."""
+    return scorer_layout(
+        candidate_pairs(
+            keys, max_block=cfg.max_block, oversize_policy=cfg.oversize_policy
+        ),
+        cfg,
+    )
+
+
+def scorer_layout(pairs: DataFrame, cfg: MatchConfig) -> DataFrame:
+    """The pair layout feeding the Arrow scorer, over
+    ``cfg.score_partitions`` partitions (see MatchConfig).
+
+    Hash-partition by id_a + local sort, NOT round-robin: the Arrow
+    scorer memoizes per-doc tf-idf/Jaro profiles PER BATCH, and on a
+    round-robin layout a doc's pairs scatter across all partitions so
+    nearly every lookup misses (the memo dict also balloons to one
+    entry per distinct doc per batch — GC pressure that grows with
+    corpus size, not pair count). Sorted runs of id_a make the a-side
+    profile a guaranteed hit and keep the working set small. Measured
+    on a 105k-doc / 5.1M-pair corpus (scripts/stress_scale.py shape,
+    interleaved 3-round A/B): 50-56s sorted vs 105-122s round-robin —
+    ~2x. Skew is bounded: max_block caps any one doc's pair count.
+
+    CAVEAT: the local sort only materializes through a persist
+    boundary (match_pipeline's cfg.cache=True, the default) — with
+    cache=False Catalyst's EliminateSorts drops a Sort under the
+    hydration joins as semantically unordered, leaving hash
+    partitioning alone (still co-locates each doc's pairs; the
+    per-batch hit rate just loses the contiguity bonus). The resumable
+    path bakes the layout into written parquet instead, which has no
+    such exposure (plans/resumable.py).
+    """
+    if cfg.score_partitions is None:
+        return pairs
+    n_part = (
+        4 * pairs.sparkSession.sparkContext.defaultParallelism
+        if cfg.score_partitions == "auto"
+        else int(cfg.score_partitions)
+    )
+    return pairs.repartition(n_part, "id_a").sortWithinPartitions("id_a", "id_b")
+
+
+def scorer_idf_map(idf: DataFrame, cfg: MatchConfig) -> tuple[dict[str, float], float]:
+    """(idf_map, default_idf): the IDF dictionary the scorer broadcasts,
+    capped at ``cfg.idf_max_entries`` (see
+    posting.collect_idf_map_bounded), and the IDF of tokens outside it.
+    A driver-side collect — callers that may not need to score defer
+    it (plans/resumable.py)."""
+    if cfg.idf_max_entries is not None:
+        return collect_idf_map_bounded(idf, cfg.idf_max_entries)
+    return collect_idf_map(idf), IDF_FLOOR
+
+
+def score_stage(
+    pairs: DataFrame,
+    docs: DataFrame,
+    idf_map: dict[str, float],
+    default_idf: float,
+    cfg: MatchConfig,
+    stream_side: str | None = None,
+) -> DataFrame:
+    """THE scorer call: ``pairs`` + features + ``score`` under ``cfg``'s
+    blend weights, Levenshtein prefix and cascade gate, each side
+    hydrated from ``docs``.
+
+    ``stream_side``: the streaming matcher's form. Names a struct
+    column on ``pairs`` holding the id_a side's ``norm_text`` and
+    ``tokens``; that side is hydrated in place, because a stream cannot
+    be re-joined to itself, and only id_b joins ``docs``.
+    """
+    if stream_side is None:
+        return score_pairs(
+            pairs, docs, idf_map,
+            weights=cfg.weights, lev_prefix=cfg.lev_prefix,
+            cascade_min_jaccard=cfg.cascade_min_jaccard,
+            default_idf=default_idf,
+        )
+    hydrated = pairs.select(
+        *[c for c in pairs.columns if c != stream_side],
+        *hydration_exprs(
+            "a", f"{stream_side}.norm_text", f"{stream_side}.tokens",
+            lev_prefix=cfg.lev_prefix,
+        ),
+    ).join(hydration_side(docs, "b", lev_prefix=cfg.lev_prefix), "id_b")
+    return score_hydrated(
+        hydrated, idf_map,
+        weights=cfg.weights,
+        cascade_min_jaccard=cfg.cascade_min_jaccard,
+        default_idf=default_idf,
+    )
 
 
 def match_pipeline(
@@ -203,49 +301,11 @@ def match_pipeline(
     # No keys persist: candidate_pairs is single-pass (one groupBy over
     # the key table), so there is no multi-reference recompute to avoid
     # and nothing to leak from the cache.
-    pairs = candidate_pairs(
-        keys, max_block=cfg.max_block, oversize_policy=cfg.oversize_policy
-    )
-    if cfg.score_partitions is not None:
-        n_part = (
-            4 * pages.sparkSession.sparkContext.defaultParallelism
-            if cfg.score_partitions == "auto"
-            else int(cfg.score_partitions)
-        )
-        # Hash-partition by id_a + local sort, NOT round-robin: the
-        # Arrow scorer memoizes per-doc tf-idf/Jaro profiles PER BATCH,
-        # and on a round-robin layout a doc's pairs scatter across all
-        # partitions so nearly every lookup misses (the memo dict also
-        # balloons to one entry per distinct doc per batch — GC
-        # pressure that grows with corpus size, not pair count).
-        # Sorted runs of id_a make the a-side profile a guaranteed hit
-        # and keep the working set small. Measured on a 105k-doc /
-        # 5.1M-pair corpus (scripts/stress_scale.py shape, interleaved
-        # 3-round A/B): 50-56s sorted vs 105-122s round-robin — ~2x.
-        # Skew is bounded: max_block caps any one doc's pair count.
-        # CAVEAT: the local sort only materializes through the persist
-        # boundary below (cfg.cache=True, the default) — with
-        # cache=False Catalyst's EliminateSorts drops a Sort under the
-        # hydration joins as semantically unordered, leaving hash
-        # partitioning alone (still co-locates each doc's pairs; the
-        # per-batch hit rate just loses the contiguity bonus). The
-        # resumable path bakes the same layout into written parquet
-        # instead, which has no such exposure (plans/resumable.py).
-        pairs = pairs.repartition(n_part, "id_a").sortWithinPartitions(
-            "id_a", "id_b"
-        )
+    pairs = pair_stage(keys, cfg)
     if cfg.cache:
         pairs = pairs.persist()
-    if cfg.idf_max_entries is not None:
-        idf_map, default_idf = collect_idf_map_bounded(idf, cfg.idf_max_entries)
-    else:
-        idf_map, default_idf = collect_idf_map(idf), 1e-5
-    scored = score_pairs(
-        pairs, docs, idf_map,
-        weights=cfg.weights, lev_prefix=cfg.lev_prefix,
-        cascade_min_jaccard=cfg.cascade_min_jaccard,
-        default_idf=default_idf,
-    )
+    idf_map, default_idf = scorer_idf_map(idf, cfg)
+    scored = score_stage(pairs, docs, idf_map, default_idf, cfg)
     matches = scored.filter(F.col("score") >= cfg.threshold)
 
     def _clusters() -> DataFrame:

@@ -13,27 +13,24 @@ partition predicates and the manifest to table snapshots.
 
 from __future__ import annotations
 
+import dataclasses
+from functools import cache
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from entitymatch_spark.operators.blocking import (
-    candidate_pairs,
-    lsh_band_keys,
-    minhash_signature,
-    token_blocking_keys_from_docs,
-)
 from entitymatch_spark.operators.clustering import assign_clusters, connected_components
-from entitymatch_spark.operators.posting import (
-    build_posting,
-    collect_idf_map,
-    collect_idf_map_bounded,
-    token_idf,
-)
-from entitymatch_spark.operators.scoring import score_pairs
+from entitymatch_spark.operators.posting import build_posting, token_idf
 from entitymatch_spark.plans.checkpoint import CheckpointManager
-from entitymatch_spark.plans.pipeline import MatchConfig, prepare_docs
+from entitymatch_spark.plans.pipeline import (
+    MatchConfig,
+    blocking_keys,
+    pair_stage,
+    prepare_docs,
+    score_stage,
+    scorer_idf_map,
+)
 
 
 def resumable_match_pipeline(
@@ -49,8 +46,6 @@ def resumable_match_pipeline(
     # changed threshold/num_hashes/weights/... would silently return
     # stages committed under the old semantics (the bucketing string
     # below guards only n_score_buckets)
-    import dataclasses
-
     ck.pin(
         "match_config",
         {f.name: getattr(cfg, f.name) for f in dataclasses.fields(cfg)},
@@ -60,76 +55,24 @@ def resumable_match_pipeline(
     n_docs = docs.count()
 
     idf = ck.stage("idf", lambda: token_idf(build_posting(docs), n_docs=n_docs))
+    keys = ck.stage("keys", lambda: blocking_keys(docs, idf, cfg))
+    # The scorer layout is baked into the WRITTEN parquet (writes
+    # preserve per-partition order, and the bucket filter below
+    # preserves file order), so every score bucket reads sorted runs of
+    # id_a — no EliminateSorts exposure, the files themselves are sorted.
+    pairs = ck.stage("pairs", lambda: pair_stage(keys, cfg))
 
-    def _keys() -> DataFrame:
-        keys = token_blocking_keys_from_docs(docs, idf, min_idf=cfg.min_idf)
-        if cfg.use_lsh:
-            sigs = minhash_signature(
-                docs, num_hashes=cfg.num_hashes, seed=cfg.seed,
-                token_hash=cfg.minhash_token_hash,
-            )
-            keys = keys.unionByName(
-                lsh_band_keys(
-                    sigs, bands=cfg.bands, rows_per_band=cfg.rows_per_band,
-                    band_hash=cfg.lsh_band_hash, sig_len=cfg.num_hashes,
-                )
-            )
-        return keys
-
-    keys = ck.stage("keys", _keys)
-
-    def _pairs() -> DataFrame:
-        # Same scorer-locality layout as plans/pipeline.py: hash-by-id_a
-        # + local sort. Here the layout is baked into the WRITTEN
-        # parquet (writes preserve per-partition order, and the bucket
-        # filter below preserves file order), so every score bucket
-        # reads sorted runs of id_a and the Arrow scorer's per-batch
-        # doc-profile memo hits — no EliminateSorts exposure, the files
-        # themselves are sorted.
-        out = candidate_pairs(keys, max_block=cfg.max_block)
-        if cfg.score_partitions is not None:
-            n_part = (
-                4 * spark.sparkContext.defaultParallelism
-                if cfg.score_partitions == "auto"
-                else int(cfg.score_partitions)
-            )
-            out = out.repartition(n_part, "id_a").sortWithinPartitions("id_a", "id_b")
-        return out
-
-    pairs = ck.stage("pairs", _pairs)
-
-    # Mirror pipeline.py: honor the broadcast cap (the long-job scenario
-    # this resumable path targets is exactly where an unbounded vocab
-    # collect would kill the driver). LAZY: the collect runs only when a
-    # bucket actually needs scoring — a fully-resumed rerun (every
-    # bucket committed) must not pay a vocabulary-sized driver collect
-    # just to read parquet back.
-    _idf_cache: dict = {}
-
-    def _get_idf() -> tuple[dict, float]:
-        if not _idf_cache:
-            if cfg.idf_max_entries is not None:
-                m, d = collect_idf_map_bounded(idf, cfg.idf_max_entries)
-            else:
-                m, d = collect_idf_map(idf), 1e-5
-            _idf_cache["map"], _idf_cache["default"] = m, d
-        return _idf_cache["map"], _idf_cache["default"]
+    # LAZY and once: the IDF collect runs only when a bucket actually
+    # needs scoring — a fully-resumed rerun (every bucket committed)
+    # must not pay a vocabulary-sized driver collect just to read
+    # parquet back.
+    idf_map = cache(lambda: scorer_idf_map(idf, cfg))
 
     def _score_bucket(b: int) -> DataFrame:
-        idf_map, default_idf = _get_idf()
         bucket = pairs.filter(
             F.pmod(F.xxhash64("id_a", "id_b"), F.lit(n_score_buckets)) == b
         )
-        # the FULL scoring config, exactly as plans/pipeline.py passes
-        # it — dropping lev_prefix/cascade_min_jaccard here silently
-        # scored with defaults and diverged from the batch pipeline
-        return score_pairs(
-            bucket, docs, idf_map,
-            weights=cfg.weights,
-            lev_prefix=cfg.lev_prefix,
-            cascade_min_jaccard=cfg.cascade_min_jaccard,
-            default_idf=default_idf,
-        )
+        return score_stage(bucket, docs, *idf_map(), cfg)
 
     # the bucketing string pins n_score_buckets in the manifest: a
     # resume at a different count would silently lose or duplicate

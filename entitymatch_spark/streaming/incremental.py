@@ -8,9 +8,10 @@ as new pages arrive, emit their normalized fingerprints / MinHash
 blocking keys so the batch pipeline's state tables stay current, and
 keep watermarked event-time aggregates for monitoring.
 
-All transformations here are the SAME columnar expressions the batch
-operators use (normalize/tokenize/minhash are stateless per-row), so
-batch/stream parity is by construction.
+The matchers here run the batch pipeline's own stages
+(plans/pipeline.py) under the index's MatchConfig, and every stream-side
+step of those stages is a stateless per-row expression, so batch/stream
+parity is by construction.
 """
 
 from __future__ import annotations
@@ -19,11 +20,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from entitymatch_spark.functions.text import normalize_text, tokenize
-from entitymatch_spark.operators.blocking import (
-    lsh_band_keys,
-    lsh_band_keys_expr,
-    minhash_sig_expr,
-    minhash_signature,
+from entitymatch_spark.plans.pipeline import (
+    MatchConfig,
+    blocking_keys,
+    lsh_keys,
+    score_stage,
+    scorer_idf_map,
 )
 
 
@@ -39,36 +41,17 @@ def incremental_fingerprints(pages_stream: DataFrame) -> DataFrame:
 
 
 def incremental_minhash_keys(
-    pages_stream: DataFrame,
-    num_hashes: int = 64,
-    bands: int = 16,
-    rows_per_band: int = 4,
-    seed: int = 42,
-    token_hash: str = "xxhash64",
-    band_hash: str = "xxhash64",
+    pages_stream: DataFrame, cfg: MatchConfig | None = None
 ) -> DataFrame:
-    """Streaming (url, key): LSH blocking keys for newly arrived pages.
-
-    minhash_signature aggregates per url; on a stream this is a
-    stateless per-row aggregation only because each url appears once
-    per micro-batch — enforced by the upstream source contract.
-
-    ``token_hash``/``band_hash`` MUST match the static index's
-    configuration (MatchConfig.minhash_token_hash / lsh_band_hash):
-    keys built with a different hash variant never collide with the
-    indexed keys, so recall silently drops to zero on the LSH branch.
+    """Streaming (doc_id, key): the pipeline's LSH blocking keys
+    (plans.pipeline.lsh_keys under ``cfg``) for newly arrived pages.
+    Every step is a per-row expression, so the stream needs no state.
     """
+    cfg = cfg or MatchConfig()
     docs = pages_stream.select(
-        F.col("url").alias("doc_id"), tokenize("text").alias("tokens")
+        F.col(cfg.id_col).alias("doc_id"), tokenize(cfg.text_col).alias("tokens")
     )
-    sigs = minhash_signature(
-        docs, id_col="doc_id", num_hashes=num_hashes, seed=seed,
-        token_hash=token_hash,
-    )
-    return lsh_band_keys(
-        sigs, bands=bands, rows_per_band=rows_per_band, id_col="doc_id",
-        band_hash=band_hash, sig_len=num_hashes,
-    )
+    return lsh_keys(docs, cfg)
 
 
 def incremental_match(
@@ -76,42 +59,27 @@ def incremental_match(
     static_docs: DataFrame,
     static_keys: DataFrame,
     idf: DataFrame,
-    idf_map: dict[str, float],
-    min_idf: float = 1.0,
-    num_hashes: int = 64,
-    bands: int = 16,
-    rows_per_band: int = 4,
-    seed: int = 42,
-    token_hash: str = "xxhash64",
-    band_hash: str = "xxhash64",
-    weights: dict[str, float] | None = None,
-    threshold: float | None = None,
-    default_idf: float = 1e-5,
+    cfg: MatchConfig | None = None,
     dedup_within_watermark: bool = False,
     event_time_col: str = "warc_ts",
-    lev_prefix: int | None = None,
-    jw_prefix: int | None = None,
-    lev_band: int | None = None,
 ) -> DataFrame:
     """Streaming record linkage: score newly arrived pages against the
     already-indexed corpus. (Stream-vs-static scoring only; for BATCH
     corpus growth that also merges cluster state and proves equality
     with a full recompute, see plans/incremental.py's function of the
-    same name.) Uses the SAME keys and the SAME scorer as
-    the batch pipeline (batch/stream parity by shared code, not by
-    re-implementation).
+    same name.) Runs the batch pipeline's own stages under the index's
+    ``cfg`` — blocking_keys, scorer_idf_map, score_stage — so
+    batch/stream parity holds by shared code, not by re-implementation.
 
     Plan (all stream-side steps are stateless/narrow, so the query is a
     valid append-mode Structured Streaming plan):
 
-      new page -> normalize/tokenize -> hydration cols (prefixes, token
-      set/string — computed ONCE, carried through; a stream cannot be
-      re-joined to itself)
-      -> blocking keys: rare-token keys (broadcast IDF membership;
-         array_distinct + explode is per-row distinct, no stateful
-         dropDuplicates needed since each url arrives once per the
-         source contract) UNION MinHash band keys (minhash_sig_expr is
-         a per-row column expression)
+      new page -> normalize/tokenize, packed into a struct that serves
+      as the page's doc id (a stream cannot be re-joined to itself, so
+      the page's text rides along to the scorer)
+      -> blocking_keys: rare-token keys (broadcast IDF membership) UNION
+         MinHash band keys — per-row expressions, no state, since each
+         url arrives once per the source contract
       -> stream-static equi-join against the PRE-PURGED static key
          table (block purging needs global key counts, a batch-side
          property of the index)
@@ -119,44 +87,19 @@ def incremental_match(
          most once per stream lifetime (set dedup_within_watermark and
          put a watermark on the stream to bound that state in a
          long-running job)
-      -> b-side hydration join against static docs (stream-static)
-      -> score_hydrated: the batch scorer's feature + blend stage.
+      -> score_stage: the stream side hydrated in place, the indexed
+         side joined from static docs (stream-static), the batch
+         scorer's feature + blend stage.
 
     static_docs: (doc_id, norm_text, tokens) of the indexed corpus.
     static_keys: (doc_id, key) — purged blocking keys of that corpus.
-    idf/idf_map: the index's IDF table (broadcast) and scorer dict.
-    token_hash/band_hash (and num_hashes/bands/rows_per_band/seed) MUST
-    mirror the static index's MatchConfig — keys built with a different
-    hash variant never equal the indexed keys, so the LSH branch of the
-    stream-static join silently matches nothing. Likewise lev_prefix /
-    jw_prefix (None = the batch defaults): a stream side hydrated at a
-    different prefix cap scores the same pair differently from the
-    batch pipeline — pass the index's MatchConfig.lev_prefix when it
-    was customized.
+    idf: the index's IDF table; the scorer's dictionary and its
+    default for tokens outside it derive from it as in the batch path.
 
-    Emits (id_a = new url, id_b = indexed doc, features..., score).
+    Emits (id_a = new page id, id_b = indexed doc, features..., score)
+    for every candidate pair.
     """
-    from entitymatch_spark.operators.blocking import (
-        _check_band_geometry,
-        token_key_expr,
-    )
-    from entitymatch_spark.operators.scoring import (
-        JW_PREFIX,
-        LEV_BAND,
-        LEV_PREFIX,
-        hydration_exprs,
-        score_hydrated,
-    )
-
-    # prefix/band knobs MUST mirror the static index's MatchConfig the
-    # same way the hash knobs must: a stream side hydrated at a
-    # different lev_prefix scores the same pair differently from the
-    # batch pipeline, silently breaking batch/stream score parity
-    lev_prefix = LEV_PREFIX if lev_prefix is None else lev_prefix
-    jw_prefix = JW_PREFIX if jw_prefix is None else jw_prefix
-    lev_band = LEV_BAND if lev_band is None else lev_band
-    _check_band_geometry(bands, rows_per_band, num_hashes)
-
+    cfg = cfg or MatchConfig()
     # the event-time (watermark) column must ride along when bounded
     # dedup state is requested — fail fast here rather than let
     # dropDuplicatesWithinWatermark error obscurely downstream (or
@@ -171,66 +114,29 @@ def incremental_match(
         extra = [event_time_col]
     else:
         extra = []
-    a = pages_stream.select(
-        F.col("url").alias("id_a"),
-        normalize_text("text").alias("_norm"),
-        tokenize("text").alias("_toks"),
+    idf_map, default_idf = scorer_idf_map(idf, cfg)
+    page = pages_stream.select(
+        F.col(cfg.id_col).alias("id"),
+        normalize_text(cfg.text_col).alias("norm_text"),
+        tokenize(cfg.text_col).alias("tokens"),
         *extra,
     )
-    # the scorer's own hydration recipe (shared with hydration_side),
-    # at the index's prefix caps
-    hyd_cols = hydration_exprs(
-        "a", "_norm", "_toks", lev_prefix=lev_prefix, jw_prefix=jw_prefix
-    )
-    a_hyd = a.select("id_a", *extra, *hyd_cols, "_toks")
-    carry = ["id_a", *extra, "jwt_a", "levt_a", "toksj_a", "toksd_a"]
-
-    rare = idf.filter(F.col("idf") >= min_idf).select("token")
-    tok_keys = (
-        a_hyd.select(*carry, F.explode("toksd_a").alias("token"))
-        .join(F.broadcast(rare), "token")
-        .select(*carry, token_key_expr(F.col("token")).alias("key"))
-    )
-    lsh_keys = (
-        a_hyd.withColumn(
-            "sig", minhash_sig_expr("_toks", num_hashes, seed, token_hash)
-        )
-        .select(
-            *carry,
-            F.explode(
-                lsh_band_keys_expr("sig", bands, rows_per_band, band_hash)
-            ).alias("key"),
-        )
-    )
-    keys_a = tok_keys.unionByName(lsh_keys)
-
+    new_docs = page.select(F.struct(*page.columns).alias("doc_id"), "tokens")
     cand = (
-        keys_a.join(
-            static_keys.select(F.col("doc_id").alias("id_b"), "key"), "key"
+        blocking_keys(new_docs, idf, cfg)
+        .join(static_keys.select(F.col("doc_id").alias("id_b"), "key"), "key")
+        .select(
+            F.col("doc_id.id").alias("id_a"), "id_b",
+            F.col("doc_id").alias("page"),
+            *[F.col(f"doc_id.{c}").alias(c) for c in extra],
         )
         .filter(F.col("id_a") != F.col("id_b"))
-        .drop("key")
     )
     if dedup_within_watermark:
         cand = cand.dropDuplicatesWithinWatermark(["id_a", "id_b"])
     else:
         cand = cand.dropDuplicates(["id_a", "id_b"])
-
-    from entitymatch_spark.operators.scoring import hydration_side
-
-    b_side = hydration_side(
-        static_docs, "b", lev_prefix=lev_prefix, jw_prefix=jw_prefix
-    )
-    hydrated = cand.join(b_side, "id_b")
-    return score_hydrated(
-        hydrated,
-        idf_map,
-        weights=weights,
-        threshold=threshold,
-        lev_band=lev_band,
-        jw_prefix=jw_prefix,
-        default_idf=default_idf,
-    )
+    return score_stage(cand, static_docs, idf_map, default_idf, cfg, stream_side="page")
 
 
 def streaming_event_counts(

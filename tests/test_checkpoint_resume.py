@@ -298,3 +298,23 @@ def test_resumable_scores_with_full_config(spark, tmp_path, small_corpus):
     a = {(r.id_a, r.id_b, round(r.lev_sim, 9)) for r in res["scored"].collect()}
     b = {(r.id_a, r.id_b, round(r.lev_sim, 9)) for r in full.scored.collect()}
     assert a == b
+
+
+def test_resumable_pipeline_honors_oversize_policy(spark, tmp_path, small_corpus):
+    """cfg.oversize_policy must reach the resumable pair stage: it used
+    to pass candidate_pairs the cap alone, so "salt" (and "prepurge")
+    silently ran as "purge" and the resumable pairs diverged from
+    match_pipeline under the identical config."""
+    from entitymatch_spark.plans.pipeline import match_pipeline
+
+    fx, pages = small_corpus
+    cfg = MatchConfig(oversize_policy="salt", max_block=8)
+    full = match_pipeline(pages, cfg)
+    # the cap bites: some block on this corpus is over it
+    sizes = full.keys.groupBy("key").count()
+    assert sizes.filter(F.col("count") > cfg.max_block).limit(1).count() == 1
+    res = resumable_match_pipeline(
+        spark, pages, tmp_path / "salt", cfg, n_score_buckets=1
+    )
+    got = sorted(map(tuple, res["pairs"].collect()))
+    assert got == sorted(map(tuple, full.pairs.collect()))

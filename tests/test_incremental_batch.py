@@ -57,6 +57,20 @@ def test_incremental_equals_full_recompute(setup):
     )
 
 
+def test_salt_policy_rejected(setup):
+    """oversize_policy="salt" cannot grow exactly (a growing block
+    changes its sub-block count and re-salts old members), so the
+    batch-incremental path must refuse it instead of silently purging
+    at union size."""
+    from dataclasses import replace
+
+    salt = replace(setup["cfg"], oversize_policy="salt")
+    with pytest.raises(ValueError, match="salt"):
+        initial_state(setup["base"], salt, idf=setup["idf"])
+    with pytest.raises(ValueError, match="salt"):
+        incremental_match(replace(setup["st0"], cfg=salt), setup["batch"])
+
+
 def test_pair_algebra(setup):
     """incremental pairs == full-run pairs minus base-run pairs, and
     every incremental pair touches a batch doc (no old-old rescoring)."""
@@ -338,7 +352,7 @@ def test_state_bucketed_keys_standing_side_never_shuffles(spark, setup):
     import shutil
     from urllib.parse import urlparse
 
-    from entitymatch_spark.plans.incremental import _batch_keys
+    from entitymatch_spark.plans.pipeline import blocking_keys
 
     prefix = "default.em_state_bk"
     parts = ("docs", "keys", "idf", "clusters", "scored", "cfg")
@@ -352,7 +366,9 @@ def test_state_bucketed_keys_standing_side_never_shuffles(spark, setup):
     try:
         loaded = load_state(spark, prefix, setup["cfg"])
         batch_keys = (
-            _batch_keys(prepare_docs(setup["batch"], setup["cfg"]), loaded)
+            blocking_keys(
+                prepare_docs(setup["batch"], setup["cfg"]), loaded.idf, loaded.cfg
+            )
             .select("key")
             .distinct()
         )

@@ -160,9 +160,7 @@ def test_streaming_match_plan_is_streamable(spark, tmp_path):
     from entitymatch_spark.operators.blocking import (
         lsh_band_keys, minhash_signature, token_blocking_keys,
     )
-    from entitymatch_spark.operators.posting import (
-        build_posting, collect_idf_map, token_idf,
-    )
+    from entitymatch_spark.operators.posting import build_posting, token_idf
     from entitymatch_spark.plans.pipeline import MatchConfig, prepare_docs
     from entitymatch_spark.sources.synthetic import corpus_to_spark, generate_corpus
     from entitymatch_spark.streaming.incremental import incremental_match
@@ -177,7 +175,7 @@ def test_streaming_match_plan_is_streamable(spark, tmp_path):
     stream = spark.readStream.schema(
         pages.drop("cluster_id").schema
     ).parquet(str(d))
-    out = incremental_match(stream, docs, keys, idf, collect_idf_map(idf))
+    out = incremental_match(stream, docs, keys, idf, cfg)
     assert out.isStreaming  # plan validates as a streaming query
     q = (
         out.writeStream.format("noop").outputMode("append")

@@ -61,13 +61,17 @@ def test_incremental_minhash_keys_match_batch(spark, pages_dir):
 def test_incremental_match_parity_with_batch(spark, tmp_path):
     """Streaming record linkage == batch scoring of the same (new x
     indexed) candidate pairs, value-for-value: the stream path reuses
-    the batch keys and the batch scorer, so scores must agree exactly."""
+    the batch keys and the batch scorer, so scores must agree exactly.
+    Also under a capped IDF dictionary: the stream then scores tokens
+    outside the dictionary at the same default as the batch path
+    (collect_idf_map_bounded's tail mean, not the 1e-5 floor)."""
     from entitymatch_spark.operators.blocking import (
         lsh_band_keys, minhash_signature, prune_oversized_blocks,
         token_blocking_keys,
     )
     from entitymatch_spark.operators.posting import (
-        build_posting, collect_idf_map, token_idf,
+        IDF_FLOOR, build_posting, collect_idf_map, collect_idf_map_bounded,
+        token_idf,
     )
     from entitymatch_spark.operators.scoring import score_pairs
     from entitymatch_spark.plans.pipeline import MatchConfig, prepare_docs
@@ -100,17 +104,9 @@ def test_incremental_match_parity_with_batch(spark, tmp_path):
         )
     )
     keys = prune_oversized_blocks(keys, cfg.max_block).persist()
-    idf_map = collect_idf_map(idf)
 
     d = tmp_path / "arrivals"
     new.write.mode("overwrite").parquet(str(d))
-    stream = spark.readStream.schema(new.schema).parquet(str(d))
-    out = _run_stream(
-        spark,
-        incremental_match(stream, docs, keys, idf, idf_map, seed=cfg.seed),
-        "match_sink",
-    )
-    got = {(r["id_a"], r["id_b"]): round(r["score"], 9) for r in out.collect()}
 
     # batch oracle: same keys for the new docs, joined to static keys
     new_docs = prepare_docs(new, cfg)
@@ -128,13 +124,31 @@ def test_incremental_match_parity_with_batch(spark, tmp_path):
         .distinct()
     )
     all_docs = docs.unionByName(new_docs)
-    want_rows = score_pairs(cand, all_docs, idf_map).collect()
-    want = {(r["id_a"], r["id_b"]): round(r["score"], 9) for r in want_rows}
 
-    assert got == want
-    assert got, "expected the new docs to match their indexed near-dups"
-    # matched near-dups exist above the default threshold
-    assert any(s >= cfg.threshold for s in got.values())
+    capped_map, capped_default = collect_idf_map_bounded(idf, 100)
+    # the cap really drops tokens (this corpus has ~170), so the
+    # default IDF is in play
+    assert len(capped_map) == 100 and capped_default != IDF_FLOOR
+    cases = [
+        (cfg, "match_sink", collect_idf_map(idf), IDF_FLOOR),
+        (MatchConfig(idf_max_entries=100), "match_sink_capped",
+         capped_map, capped_default),
+    ]
+    for run_cfg, sink, idf_map, default_idf in cases:
+        stream = spark.readStream.schema(new.schema).parquet(str(d))
+        out = _run_stream(
+            spark, incremental_match(stream, docs, keys, idf, run_cfg), sink
+        )
+        got = {(r["id_a"], r["id_b"]): round(r["score"], 9) for r in out.collect()}
+        want_rows = score_pairs(
+            cand, all_docs, idf_map, default_idf=default_idf
+        ).collect()
+        want = {(r["id_a"], r["id_b"]): round(r["score"], 9) for r in want_rows}
+
+        assert got == want, sink
+        assert got, "expected the new docs to match their indexed near-dups"
+        # matched near-dups exist above the default threshold
+        assert any(s >= cfg.threshold for s in got.values())
 
 
 def test_incremental_match_watermarked_dedup(spark, tmp_path):
@@ -145,9 +159,7 @@ def test_incremental_match_watermarked_dedup(spark, tmp_path):
         lsh_band_keys, minhash_signature, prune_oversized_blocks,
         token_blocking_keys,
     )
-    from entitymatch_spark.operators.posting import (
-        build_posting, collect_idf_map, token_idf,
-    )
+    from entitymatch_spark.operators.posting import build_posting, token_idf
     from entitymatch_spark.plans.pipeline import MatchConfig, prepare_docs
 
     cfg = MatchConfig()
@@ -163,7 +175,6 @@ def test_incremental_match_watermarked_dedup(spark, tmp_path):
         ),
         cfg.max_block,
     ).persist()
-    idf_map = collect_idf_map(idf)
 
     d = tmp_path / "wm_arrivals"
     new.write.mode("overwrite").parquet(str(d))
@@ -173,8 +184,7 @@ def test_incremental_match_watermarked_dedup(spark, tmp_path):
         if wm:
             stream = stream.withWatermark("warc_ts", "1 hour")
         out = incremental_match(
-            stream, docs, keys, idf, idf_map,
-            seed=cfg.seed, dedup_within_watermark=wm,
+            stream, docs, keys, idf, cfg, dedup_within_watermark=wm,
         )
         return {
             (r["id_a"], r["id_b"]): round(r["score"], 9)
