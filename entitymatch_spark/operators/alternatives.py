@@ -12,11 +12,18 @@ The reference expands each query token through a chain of expanders
   through the chain (Alternatives.cs:56).
 
 The trie is a single-process execution strategy; on Spark the same
-semantics are a **blocked fuzzy self-join on the vocabulary**:
-Levenshtein <= k implies |len(a) - len(b)| <= k, so we equi-join on
-candidate lengths (k+1-way explode of the probe side) and verify with
-the built-in JVM ``levenshtein`` — whole-stage-codegen'd, no Python.
-Vocabulary tables are tiny next to the corpus → broadcast joins.
+semantics are two **broadcast joins against the vocabulary**, each row
+of the probe side expanded where it stands — no distinct, no
+semi/anti join, no union, so the probe side is never shuffled:
+
+- a left join on the token flags the exact hits (the short-circuit);
+- Levenshtein <= k implies |len(a) - len(b)| <= k, so a miss equi-joins
+  the vocabulary on candidate lengths (a (2k+1)-way explode of its
+  length; a hit explodes only its own) and the built-in JVM
+  ``levenshtein`` verifies — whole-stage-codegen'd, no Python.
+
+Vocabulary tables are tiny next to the corpus, so the vocabulary side
+of both joins is broadcast.
 """
 
 from __future__ import annotations
@@ -31,40 +38,35 @@ def spelling_alternatives(
     max_edit: int = 1,
     token_col: str = "token",
 ) -> DataFrame:
-    """(token, alt_token, distance, weight) for each probe token.
+    """Probe columns + (alt_token, distance, weight), one row per probe
+    row and alternative.
 
-    probe_tokens: distinct tokens to expand (column ``token``).
-    vocab:        dictionary tokens (column ``token``).
+    probe_tokens: tokens to expand (column ``token``); every other
+                  column passes through, so a probe row may carry its
+                  query id and position. Duplicate probe rows expand
+                  to duplicate alternatives.
+    vocab:        distinct dictionary tokens (column ``token``).
 
     Exact-match short-circuit per the reference: a probe token present
     in the vocabulary yields only itself at weight 1.0; only absent
     tokens fan out to fuzzy matches at weight 1/(1+d).
     """
-    probes = probe_tokens.select(token_col).distinct()
-    voc = vocab.select(F.col(token_col).alias("alt_token")).distinct()
-
-    exact = (
-        probes.join(voc, probes[token_col] == voc["alt_token"], "left_semi")
-        .select(
-            F.col(token_col),
-            F.col(token_col).alias("alt_token"),
-            F.lit(0).alias("distance"),
-            F.lit(1.0).alias("weight"),
-        )
+    voc = vocab.select(F.col(token_col).alias("alt_token"))
+    hits = vocab.select(F.col(token_col).alias("__hit"))
+    flagged = probe_tokens.join(
+        F.broadcast(hits), F.col(token_col) == F.col("__hit"), "left"
     )
-
-    misses = probes.join(
-        voc, probes[token_col] == voc["alt_token"], "left_anti"
+    # length blocking: lev(a,b) <= k  =>  |len(a)-len(b)| <= k; an exact
+    # hit only needs its own length, where it finds itself
+    tlen = F.length(token_col)
+    lens = F.when(F.col("__hit").isNotNull(), F.array(tlen)).otherwise(
+        F.array(*[tlen + F.lit(d) for d in range(-max_edit, max_edit + 1)])
     )
-    # length blocking: lev(a,b) <= k  =>  |len(a)-len(b)| <= k
-    lens = F.array(
-        *[F.length(token_col) + F.lit(d) for d in range(-max_edit, max_edit + 1)]
-    )
-    blocked = (
-        misses.withColumn("cand_len", F.explode(lens))
+    return (
+        flagged.withColumn("__len", F.explode(lens))
         .join(
-            F.broadcast(voc.withColumn("cand_len", F.length("alt_token"))),
-            "cand_len",
+            F.broadcast(voc.withColumn("__len", F.length("alt_token"))),
+            "__len",
         )
         # banded 3-arg levenshtein (same early-exit form as
         # autocomplete/scoring): O(len * band) per pair instead of the
@@ -74,16 +76,17 @@ def spelling_alternatives(
             "distance",
             F.levenshtein(F.col(token_col), F.col("alt_token"), max_edit),
         )
-        .filter(F.col("distance") >= 0)
+        .filter(
+            (F.col("distance") >= 0)
+            & (F.col("__hit").isNull() | (F.col("distance") == 0))
+        )
         .select(
-            token_col,
+            *probe_tokens.columns,
             "alt_token",
             "distance",
             (F.lit(1.0) / (1.0 + F.col("distance"))).alias("weight"),
         )
-        .distinct()
     )
-    return exact.unionByName(blocked)
 
 
 def synonym_expand(

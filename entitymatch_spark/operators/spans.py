@@ -20,12 +20,76 @@ no loop, no driver iteration, fully parallel:
 Scoring (ref: Recognizer.cs:55-64): score = span_weight / entity_total,
 dropped below threshold. Top-k per (type, start) ordered by score desc
 (ref: Recognizer.cs:24-46) is a row_number window.
+
+``island_spans`` is that gap-and-island query and its scoring, the one
+implementation behind both ``extend_spans`` and the matcher's
+``interpret``. Its two groupings and its window are all keyed on
+(query, entity, ...), so input already partitioned by entity id — the
+matcher's resident index — reaches them with no exchange; only
+``topk_spans``, grouping by (query, type, start), shuffles.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def island_spans(
+    hits: DataFrame,
+    threshold: float = 0.0,
+    query_id: str = "query_id",
+    entity_id: str = "entity_id",
+    entity_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """Scored maximal spans from token hits.
+
+    hits: (query_id, entity_id, qpos, epos, weight, idf, total_weight,
+           *entity_cols) — one row per query token alternative matching
+           an entity token; ``total_weight`` and ``entity_cols`` depend
+           on the entity alone.
+
+    Returns (query_id, entity_id, *entity_cols, start, length, score).
+
+    The per-entity columns ride in the grouping keys, not in first()
+    buffers: they add nothing to a group, keep both aggregates hash
+    aggregates, and leave any partitioning on the entity id satisfying
+    every grouping.
+    """
+    carried = ["total_weight", *entity_cols]
+    diag = [query_id, entity_id, "diag"]
+    cand = hits.select(
+        query_id,
+        entity_id,
+        *carried,
+        "qpos",
+        (F.col("qpos") - F.col("epos")).alias("diag"),
+        (F.col("weight") * F.col("idf")).alias("wtok"),
+    )
+    # A query token may match the same (entity, epos) via several
+    # alternatives: keep max weight (ref: Recognizer.cs:135-194 UnionSorted).
+    cand = cand.groupBy(*diag, "qpos", *carried).agg(F.max("wtok").alias("wtok"))
+    w = Window.partitionBy(*diag).orderBy("qpos")
+    spans = (
+        cand.withColumn("island", F.col("qpos") - F.row_number().over(w))
+        .groupBy(*diag, "island", *carried)
+        .agg(
+            F.min("qpos").alias("start"),
+            F.count("*").alias("length"),
+            F.sum("wtok").alias("span_weight"),
+        )
+    )
+    out = spans.select(
+        query_id,
+        entity_id,
+        *entity_cols,
+        "start",
+        "length",
+        (F.col("span_weight") / F.col("total_weight")).alias("score"),
+    )
+    if threshold > 0.0:
+        out = out.filter(F.col("score") >= threshold)
+    return out
 
 
 def extend_spans(
@@ -47,48 +111,19 @@ def extend_spans(
     Returns (query_id, entity_id, start, length, score).
 
     The entity-side posting is the big table; idf and totals are
-    vocabulary/entity-count sized and broadcast. The only shuffle is the
-    token equi-join plus the window on (qid, entity, diag) — both keyed
-    on columns with map-side pruning.
+    vocabulary/entity-count sized and broadcast. The token equi-join
+    shuffles both sides unless one is small enough to broadcast, and
+    ``island_spans`` then regroups by (query, entity).
     """
     q = query_tokens
     if "weight" not in q.columns:
         q = q.withColumn("weight", F.lit(1.0))
-    cand = (
+    hits = (
         q.join(posting.withColumnRenamed("pos", "epos"), "token")
         .join(F.broadcast(idf.select("token", "idf")), "token")
-        .select(
-            query_id,
-            entity_id,
-            "qpos",
-            "epos",
-            (F.col("weight") * F.col("idf")).alias("wtok"),
-        )
-        .withColumn("diag", F.col("qpos") - F.col("epos"))
+        .join(F.broadcast(totals.select(entity_id, "total_weight")), entity_id)
     )
-    # A query token may match the same (entity, epos) via several
-    # alternatives: keep max weight (ref: Recognizer.cs:135-194 UnionSorted).
-    cand = cand.groupBy(query_id, entity_id, "diag", "qpos").agg(
-        F.max("wtok").alias("wtok")
-    )
-    w = Window.partitionBy(query_id, entity_id, "diag").orderBy("qpos")
-    spans = (
-        cand.withColumn("island", F.col("qpos") - F.row_number().over(w))
-        .groupBy(query_id, entity_id, "diag", "island")
-        .agg(
-            F.min("qpos").alias("start"),
-            F.count("*").alias("length"),
-            F.sum("wtok").alias("span_weight"),
-        )
-    )
-    out = (
-        spans.join(F.broadcast(totals), entity_id)
-        .withColumn("score", F.col("span_weight") / F.col("total_weight"))
-        .select(query_id, entity_id, "start", "length", "score")
-    )
-    if threshold > 0.0:
-        out = out.filter(F.col("score") >= threshold)
-    return out
+    return island_spans(hits, threshold, query_id=query_id, entity_id=entity_id)
 
 
 def topk_spans(

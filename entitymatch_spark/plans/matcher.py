@@ -11,6 +11,14 @@ per (type, start).
 Batch-of-queries semantics: instead of one utterance per call, the
 whole `queries(query_id, text)` DataFrame flows through at once — the
 per-query loop of the reference becomes one relational plan.
+
+The index is resident: ``build_matcher_index`` persists and
+materializes its tables once, the posting pre-joined with everything a
+request reads of an entity and hash-partitioned by entity id. A request
+is the stream-vs-static shape of a lookup join: its few hundred
+expanded query tokens are broadcast into that index, the span stage
+runs on the index's own partitioning, and the plan's one shuffle is
+``topk_spans``' grouping by (query, type, start).
 """
 
 from __future__ import annotations
@@ -27,28 +35,53 @@ from entitymatch_spark.operators.posting import (
     token_idf,
     total_token_weight,
 )
-from entitymatch_spark.operators.spans import extend_spans, topk_spans
+from entitymatch_spark.operators.spans import island_spans, topk_spans
 
 
 @dataclass
 class MatcherIndex:
-    """Build-time artifacts (AddEntities + Compute, Matcher.cs:28-41)."""
+    """Build-time artifacts (AddEntities + Compute, Matcher.cs:28-41).
+
+    Every table but ``entities`` (the caller's frame) is persisted and
+    materialized by ``build_matcher_index``; ``unpersist`` releases them.
+    """
 
     entities: DataFrame   # (entity_id, type, phrase)
     posting: DataFrame    # (entity_id, pos, token)
     idf: DataFrame        # (token, df, idf)
     totals: DataFrame     # (entity_id, total_weight)
     vocab: DataFrame      # (token) — the spelling trie's vocabulary
+    # (entity_id, epos, token, idf, total_weight, type, phrase),
+    # hash-partitioned by entity_id: what a request probes
+    weighted_posting: DataFrame
+
+    def unpersist(self) -> None:
+        """Release every table ``build_matcher_index`` persisted."""
+        for df in (self.posting, self.idf, self.totals, self.vocab,
+                   self.weighted_posting):
+            df.unpersist()
 
 
 def build_matcher_index(entities: DataFrame) -> MatcherIndex:
     toks = entities.select("entity_id", tokenize("phrase").alias("tokens"))
-    posting = build_posting(toks, id_col="entity_id")
+    posting = build_posting(toks, id_col="entity_id").persist()
     n = entities.count()
-    idf = token_idf(posting, n_docs=n)
-    totals = total_token_weight(posting, idf, "entity_id")
-    vocab = posting.select("token").distinct()
-    return MatcherIndex(entities, posting, idf, totals, vocab)
+    idf = token_idf(posting, n_docs=n).persist()
+    totals = total_token_weight(posting, idf, "entity_id").persist()
+    vocab = idf.select("token").persist()  # idf holds one row per token
+    weighted = (
+        posting.withColumnRenamed("pos", "epos")
+        .join(F.broadcast(idf.select("token", "idf")), "token")
+        .join(totals, "entity_id")
+        .join(entities.select("entity_id", "type", "phrase"), "entity_id")
+        .repartition(
+            entities.sparkSession.sparkContext.defaultParallelism, "entity_id"
+        )
+        .persist()
+    )
+    for df in (posting, idf, totals, vocab, weighted):
+        df.count()
+    return MatcherIndex(entities, posting, idf, totals, vocab, weighted)
 
 
 def interpret(
@@ -68,10 +101,7 @@ def interpret(
         "query_id", F.posexplode(tokenize("text")).alias("qpos", "token")
     )
     # --- alternatives chain (SynonymAlternatives(SpellingAlternatives(Base)))
-    probe = qtok.select("token").distinct()
-    spelled = spelling_alternatives(probe, index.vocab, max_edit=max_edit).select(
-        "token", "alt_token", "weight"
-    )
+    alts = spelling_alternatives(qtok, index.vocab, max_edit=max_edit)
     if synonyms is not None:
         # SynonymAlternatives is the OUTERMOST expander and *replaces* a
         # spelling alternative with its mapped synonyms, weights
@@ -79,52 +109,33 @@ def interpret(
         # the map yields only the mapped alternatives, so the map must
         # contain the identity to keep it, exactly as the reference's
         # own example does: mouse -> {mouse 1.0, mice 0.9},
-        # TestMatcher/Program.cs:279).
-        # NOTE: alternatives.synonym_expand is the KEEP-IDENTITY
-        # sibling of this replace-if-mapped block; the aliasing/
-        # broadcast shape is deliberately the same — if a fix lands in
-        # one (NULL keys, weight dedup), mirror it in the other.
+        # TestMatcher/Program.cs:279). Duplicate alternatives of one
+        # query token are left to island_spans' max-weight dedup.
         syn = synonyms.select(
             F.col("token").alias("__k"),
             F.col("alt_token").alias("__syn"),
             F.col("weight").alias("__w"),
         )
-        mapped = (
-            spelled.join(F.broadcast(syn), spelled["alt_token"] == F.col("__k"))
-            .select(
-                "token",
-                F.col("__syn").alias("alt_token"),
-                (spelled["weight"] * F.col("__w")).alias("weight"),
-            )
+        mapped = F.col("__k").isNotNull()
+        alts = alts.join(
+            F.broadcast(syn), F.col("alt_token") == F.col("__k"), "left"
+        ).select(
+            "query_id",
+            "qpos",
+            F.when(mapped, F.col("__syn"))
+            .otherwise(F.col("alt_token"))
+            .alias("alt_token"),
+            F.when(mapped, F.col("weight") * F.col("__w"))
+            .otherwise(F.col("weight"))
+            .alias("weight"),
         )
-        unmapped = spelled.join(
-            F.broadcast(syn.select("__k").distinct()),
-            spelled["alt_token"] == F.col("__k"),
-            "left_anti",
-        ).select("token", "alt_token", "weight")
-        alts = (
-            unmapped.unionByName(mapped)
-            .groupBy("token", "alt_token")
-            .agg(F.max("weight").alias("weight"))
-        )
-    else:
-        alts = spelled
-    expanded_q = (
-        qtok.join(alts, "token")
-        .select(
-            "query_id", "qpos",
-            F.col("alt_token").alias("token"),
-            F.col("weight"),
-        )
+    expanded = alts.select(
+        "query_id", "qpos", F.col("alt_token").alias("token"), "weight"
     )
-    spans = extend_spans(
-        expanded_q, index.posting, index.idf, index.totals, threshold=threshold
-    )
-    typed = spans.join(
-        F.broadcast(index.entities.select("entity_id", "type", "phrase")), "entity_id"
-    )
+    hits = index.weighted_posting.join(F.broadcast(expanded), "token")
+    spans = island_spans(hits, threshold, entity_cols=("type", "phrase"))
     return topk_spans(
-        typed,
+        spans,
         k=spans_per_position,
         partition_cols=("query_id", "type", "start"),
     ).select("query_id", "entity_id", "type", "phrase", "start", "length", "score")

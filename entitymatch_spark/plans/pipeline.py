@@ -136,6 +136,15 @@ class MatchResult:
             self._clusters = self._clusters_fn()
         return self._clusters
 
+    def unpersist(self) -> None:
+        """Drop this result's cached frames (``docs``, ``pairs`` —
+        persisted when cfg.cache). A long-lived application linking again and
+        again should call this once it is done with a result, or dead
+        cached partitions accumulate in executor storage for the
+        session's lifetime."""
+        for df in (self.docs, self.pairs):
+            df.unpersist()
+
 
 def prepare_docs(pages: DataFrame, cfg: MatchConfig) -> DataFrame:
     # Parquet cannot split below a row group, so a small input (one or

@@ -9,6 +9,7 @@ default.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
 import tempfile
@@ -45,15 +46,20 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
             f"{base} exists but is not owned by uid {os.getuid()}; "
             "remove it or point tempfile.gettempdir() elsewhere"
         )
-    tmp_zip = tempfile.mktemp(suffix=".zip", dir=str(base))
-    made = shutil.make_archive(
-        tmp_zip[:-4], "zip", root_dir=str(_PKG_ROOT), base_dir="entitymatch_spark"
-    )
-    import hashlib
-
-    digest = hashlib.md5(Path(made).read_bytes()).hexdigest()[:12]
-    final = base / f"entitymatch_spark-{digest}.zip"
-    Path(made).replace(final)
+    # build in a private directory (mkdtemp: created 0o700, name not
+    # guessable), so no other process can pre-place or race the archive
+    # before it is renamed into place
+    build = Path(tempfile.mkdtemp(dir=base))
+    try:
+        made = Path(shutil.make_archive(
+            str(build / "pkg"), "zip",
+            root_dir=str(_PKG_ROOT), base_dir="entitymatch_spark",
+        ))
+        digest = hashlib.md5(made.read_bytes()).hexdigest()[:12]
+        final = base / f"entitymatch_spark-{digest}.zip"
+        made.replace(final)
+    finally:
+        shutil.rmtree(build, ignore_errors=True)
     sc.addPyFile(str(final))
     sc._entitymatch_pyfile_added = True
 

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from entitymatch_spark.plans.pipeline import MatchConfig, match_pipeline
@@ -12,10 +13,15 @@ from entitymatch_spark.sources.synthetic import generate_corpus, corpus_to_spark
 
 
 @pytest.fixture(scope="module")
-def result(spark):
+def run(spark):
     fx = generate_corpus(n_clusters=150, seed=42)
     dfs = corpus_to_spark(spark, fx)
-    res = match_pipeline(dfs["pages"], MatchConfig())
+    return fx, match_pipeline(dfs["pages"], MatchConfig())
+
+
+@pytest.fixture(scope="module")
+def result(run):
+    fx, res = run
     scored = res.scored.select("id_a", "id_b", "score").toPandas()
     clusters = res.clusters.toPandas()
     return fx, scored, clusters
@@ -126,3 +132,13 @@ def test_all_labeled_pairs_blocked(result):
         if tuple(sorted((r.url_a, r.url_b))) not in have
     ]
     assert not missing, f"{len(missing)} positive pairs missed by blocking: {missing[:5]}"
+
+
+def test_match_result_unpersist(run, result):
+    """Last in the module: releases the shared run's caches, after every
+    other test has read what it needs of that run."""
+    _, res = run
+    cached = [res.docs, res.pairs]  # persisted under MatchConfig().cache
+    assert all(df.storageLevel != StorageLevel.NONE for df in cached)
+    res.unpersist()
+    assert [df.storageLevel for df in cached] == [StorageLevel.NONE] * 2

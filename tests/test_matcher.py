@@ -5,8 +5,10 @@ table, maximal spans scored by IDF containment, top-k per position."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from entitymatch_spark.plans.matcher import build_matcher_index, interpret
@@ -59,22 +61,37 @@ def test_typo_resolved_by_spelling(spark, index):
 
 
 def test_synonym_expansion(spark, index, synonyms):
-    q = spark.createDataFrame([(9, "mouse hunt")], "query_id long, text string")
+    # query 10's 'mous' is a typo of a synonym key: spelling reaches
+    # 'mouse' at 0.5, then the map replaces it (mouse 0.5, mice 0.45)
+    q = spark.createDataFrame([(9, "mouse hunt"), (10, "mous hunt")],
+                              "query_id long, text string")
     no_syn = {
         (r["entity_id"], r["length"]): r["score"]
         for r in interpret(q, index, spans_per_position=3, threshold=0.2).collect()
+        if r["query_id"] == 9
     }
     assert no_syn.get((2, 2)) == pytest.approx(1.0)  # exact 'Mouse Hunt'
     assert (4, 2) not in no_syn  # 'Mice Hunt' unreachable without synonyms
+    out = interpret(
+        q, index, synonyms=synonyms, spans_per_position=3, threshold=0.2
+    ).collect()
     with_syn = {
         (r["entity_id"], r["length"]): r["score"]
-        for r in interpret(
-            q, index, synonyms=synonyms, spans_per_position=3, threshold=0.2
-        ).collect()
+        for r in out if r["query_id"] == 9
     }
     assert with_syn.get((2, 2)) == pytest.approx(1.0)  # identity kept (weight 1.0)
     full_mice = with_syn.get((4, 2))
     assert full_mice is not None and 0.5 < full_mice < 1.0  # mice @ 0.9 discounts
+
+    typo = {(r["entity_id"], r["length"]): r["score"] for r in out if r["query_id"] == 10}
+    idf = {r["token"]: r["idf"] for r in index.idf.collect()}
+
+    def score(w, tok):  # 'tok' at weight w, then 'hunt' exact
+        return (w * idf[tok] + idf["hunt"]) / (idf[tok] + idf["hunt"])
+
+    assert typo.get((2, 2)) == pytest.approx(score(0.5, "mouse"), rel=1e-12)
+    assert typo.get((4, 2)) == pytest.approx(score(0.5 * 0.9, "mice"), rel=1e-12)
+    assert 0.0 < typo[(4, 2)] < typo[(2, 2)] < 1.0
 
 
 def test_threshold_and_topk(spark, index):
@@ -85,3 +102,55 @@ def test_threshold_and_topk(spark, index):
     # top-1 per (query, type, start): at most one span per start position
     starts = [(r["start"],) for r in out2]
     assert len(starts) == len(set(starts))
+
+
+def _shuffles(node) -> list:
+    """The shuffle exchanges of an executed plan, not counting those
+    inside cached tables."""
+    kind = node.getClass().getSimpleName()
+    if kind == "AdaptiveSparkPlanExec":
+        return _shuffles(node.executedPlan())
+    if kind in ("InMemoryTableScanExec", "TableCacheQueryStageExec"):
+        return []
+    if kind.endswith("QueryStageExec"):
+        return _shuffles(node.plan())
+    own = [node] if kind == "ShuffleExchangeExec" else []
+    ch = node.children()
+    return own + [x for i in range(ch.size()) for x in _shuffles(ch.apply(i))]
+
+
+def test_request_is_a_broadcast_probe_with_one_shuffle(spark, index, synonyms):
+    """A request probes the resident, entity-partitioned index with its
+    broadcast query tokens: the span stage needs no exchange, so the
+    plan's one shuffle is topk_spans' (query_id, type, start), and the
+    request runs in a handful of Spark jobs."""
+    q = spark.createDataFrame(
+        [(1, "please watch the dark knight now"), (7, "the dark knigt"),
+         (10, "mous hunt")],
+        "query_id long, text string",
+    )
+    out = interpret(q, index, synonyms=synonyms, spans_per_position=2)
+    sc = spark.sparkContext
+    sc.setJobGroup("interpret-request", "one interpret request")
+    try:
+        assert out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    shuffles = _shuffles(out._jdf.queryExecution().executedPlan())
+    assert len(shuffles) == 1, [x.toString() for x in shuffles]
+    keys = re.sub(r"#\d+L?", "", shuffles[0].toString())
+    assert "hashpartitioning(query_id, type, start," in keys, keys
+    jobs = sc.statusTracker().getJobIdsForGroup("interpret-request")
+    assert 0 < len(jobs) <= 8, len(jobs)
+
+
+def test_index_unpersist(spark):
+    ents = spark.createDataFrame(
+        [(0, "DVD", "Mouse Hunt"), (1, "CD", "Hunt")],
+        "entity_id long, type string, phrase string",
+    )
+    idx = build_matcher_index(ents)
+    tables = [idx.posting, idx.idf, idx.totals, idx.vocab, idx.weighted_posting]
+    assert all(t.storageLevel != StorageLevel.NONE for t in tables)
+    idx.unpersist()
+    assert [t.storageLevel for t in tables] == [StorageLevel.NONE] * len(tables)
