@@ -3,7 +3,7 @@
 A from-scratch reimplementation of the capabilities of the reference
 EntityMatch engine (C#, /root/reference) as an idiomatic Spark DataFrame
 pipeline: normalize/tokenize -> inverted-index (posting) + IDF weights ->
-blocking (token keys + MinHash-LSH, salted and skew-aware) -> batched
+blocking (token keys + MinHash-LSH, capped blocks) -> batched
 Arrow/pandas pair scoring (Jaro-Winkler, Levenshtein, TF-IDF cosine,
 weighted containment) -> transitive clustering via iterative DataFrame
 connected components -> stable cluster ids.

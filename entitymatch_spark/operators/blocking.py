@@ -14,8 +14,8 @@ skew-aware by construction:
   entirely JVM-side column expressions (no UDF, deterministic across
   partitionings), banded into key groups; two docs collide on a band
   iff their signatures agree on all rows of the band.
-- **Block purging + salting**: any key whose block exceeds ``max_block``
-  is dropped (an over-shared key has no discriminative power — the
+- **Block purging**: any key whose block exceeds ``max_block`` is
+  dropped (an over-shared key has no discriminative power — the
   blocking analog of the IDF floor); surviving blocks are bounded, so
   per-block pair output is bounded by cap^2/2. Pair generation is a
   SINGLE PASS over the key table (see candidate_pairs), with AQE skew
@@ -31,7 +31,7 @@ from __future__ import annotations
 import random
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 MERSENNE_31 = (1 << 31) - 1
@@ -153,8 +153,9 @@ def minhash_sig_expr(
     duplicated the hash into every min; higher-order functions
     evaluate without whole-stage-codegen subexpression elimination, so
     tokens were re-hashed 64x and the array traversed 64x. Measured
-    2.4x faster on the signature stage (scripts/micro_minhash.py,
-    17,741 docs, local[8]: 2.4s -> 1.0s), signatures bit-identical.
+    2.4x faster on the signature stage alone (synthetic corpus of
+    17,741 docs, local[8], A/B of the two shapes in one Spark session:
+    2.4s -> 1.0s), signatures bit-identical.
     """
     coeffs = minhash_coeffs(num_hashes, seed)
     p = F.lit(MERSENNE_31)
@@ -267,82 +268,41 @@ def lsh_band_keys(
 
 
 def prune_oversized_blocks(keys: DataFrame, max_block: int) -> DataFrame:
-    """Drop keys whose block exceeds ``max_block`` (block purging).
+    """Drop every row of a key whose block exceeds ``max_block`` (block
+    purging: an over-shared key has no discriminative power — the
+    blocking analog of the IDF floor). THE block cap: candidate_pairs,
+    the batch-incremental union-block expansion and the streaming
+    matcher's static side all run it.
     (No id_col parameter: the purge decision touches only ``key`` —
     an id-named knob here would imply per-id behavior it doesn't have.)
 
-    Bounded blocks make per-block pair output <= cap^2/2 and leave no
-    skewed shuffle key behind. Count-first: the oversized keys are
-    found by one aggregate and removed with a broadcast anti-join (hot
-    keys are FEW — that is why they are purged), so the key table
-    keeps its columns and layout. candidate_pairs' "prepurge" policy
-    and the batch-incremental block expansion run this before their
-    collect; callers that need a purged KEY table itself use it too
-    (e.g. the streaming matcher's static side, which stream-static-
-    joins against it every micro-batch).
+    One in-pass window count: ``count(*) over (partition by key)``
+    counts every row, duplicate (key, id) rows included, and the filter
+    keeps the rows whose count is at most the cap. The window's hash
+    exchange on ``key`` is the one the caller's block ``groupBy("key")``
+    needs, so Spark reuses it — no extra pass, no join — and because
+    the filter sits below the collect, no block buffer ever holds more
+    than ``max_block`` members. Bounded blocks make per-block pair
+    output <= cap^2/2 and leave no skewed shuffle key behind.
     """
-    oversized = (
-        keys.groupBy("key")
-        .agg(F.count("*").alias("__n"))
-        .filter(F.col("__n") > max_block)
-        .select("key")
-    )
-    return keys.join(F.broadcast(oversized), "key", "left_anti")
-
-
-def salt_oversized_blocks(
-    keys: DataFrame, max_block: int, id_col: str = "doc_id"
-) -> DataFrame:
-    """Split blocks larger than ``max_block`` into hash-salted sub-blocks.
-
-    A block of n docs becomes ceil(n / max_block) sub-blocks keyed by
-    ``key#salt`` with salt = xxhash64(id) mod s — deterministic, no
-    partition dependence. Pair generation then happens within
-    sub-blocks only: the join key cardinality is bounded (no skewed
-    reducer) at the cost of sampling cross-sub-block pairs away
-    (probability ~1/s of keeping a given pair of a hot key). For
-    near-dup discovery this is the standard recall/cost dial: truly
-    similar pairs share several keys, so they get several chances.
-
-    Only the OVERSIZED keys ride the broadcast: at web scale the full
-    key-size table is vocabulary-sized (10^9+, never broadcastable),
-    but keys with > max_block members are few by definition — Zipf's
-    head, not its tail. Normal keys pass through the left join
-    untouched with no per-key state.
-    """
-    sizes = keys.groupBy("key").agg(F.count("*").alias("__n"))
-    hot = sizes.filter(F.col("__n") > max_block)
-    s = F.ceil(F.col("__n") / F.lit(max_block)).cast("long")
-    return (
-        keys.join(F.broadcast(hot), "key", "left")
-        .withColumn(
-            "key",
-            F.when(F.col("__n").isNull(), F.col("key")).otherwise(
-                F.concat(
-                    F.col("key"), F.lit("#"),
-                    F.pmod(F.xxhash64(F.col(id_col)), s).cast("string"),
-                )
-            ),
-        )
-        .drop("__n")
-    )
+    n = F.count("*").over(Window.partitionBy("key"))
+    return keys.withColumn("__n", n).filter(F.col("__n") <= max_block).drop("__n")
 
 
 def candidate_pairs(
     keys: DataFrame,
     max_block: int = 64,
     id_col: str = "doc_id",
-    n_partitions: int | None = None,
-    oversize_policy: str = "purge",
     payload_cols: Sequence[str] = (),
 ) -> DataFrame:
     """(id_a, id_b, n_keys): unordered candidate pairs from blocking keys.
 
-    SINGLE-PASS block expansion: one groupBy(key) collects each block's
-    member ids (bounded by ``max_block`` after purge/salt, so the arrays
-    are small), then pairs with id_a < id_b explode WITHIN the block —
-    a narrow transformation. Pairs generated by several keys are deduped
-    and carry how many keys agreed (a free, cheap match signal).
+    SINGLE-PASS block expansion: prune_oversized_blocks caps each block
+    at ``max_block`` rows in the same pass, one groupBy(key) collects
+    each block's member ids (so the arrays are small), then pairs with
+    id_a < id_b explode WITHIN the block — a narrow transformation.
+    Pairs generated by several keys are deduped and carry how many keys
+    agreed (a free, cheap match signal).
 
     Why this beats the classic self-equi-join on key: the join form
     reads the key table three times (block-size aggregate + both join
@@ -350,41 +310,15 @@ def candidate_pairs(
     MinHash) is recomputed per reference, and with one it pays a
     cache-write barrier; either way the join shuffles the key table
     twice more. Here the key table is consumed ONCE, the plan has two
-    shuffles total (block groupBy + pair dedup groupBy), and reduce-side
-    memory stays bounded by the block cap. Measured on the
+    shuffles total (block window/groupBy + pair dedup groupBy), and
+    reduce-side memory stays bounded by the block cap. Measured on the
     dedup_minhash_lsh contract query at sf0.1 (median of 5): join form
     6.2s without persist / 3.6s with persist -> 2.85s single-pass with
     NO persist (warm rounds 2.2-2.5s). The contract queries and the
     pipeline dropped their key persists on the back of this (they were
     also leaking cached blocks across the driver session — ADVICE r2).
-
-    oversize_policy:
-      - "purge": drop blocks over ``max_block`` (an over-shared key has
-        no discriminative power — the blocking analog of the IDF floor).
-        CAVEAT: the purge is applied AFTER the collect, so the reduce
-        buffer for one pathological key is the block's PRE-purge size.
-        Fine when upstream already bounds key frequency (the IDF floor,
-        LSH bands over non-degenerate signatures); at true web scale
-        with adversarial boilerplate use "prepurge".
-      - "prepurge": same OUTPUT as "purge" (parity-tested), but the
-        oversized keys are identified by a count-first aggregate and
-        removed with a broadcast anti-join BEFORE the collect, so every
-        aggregation buffer is bounded by ``max_block``. Costs a second
-        pass over the key table (persist the keys or accept the
-        upstream recompute) — the safety/one-pass dial at 10^12 docs.
-      - "salt": keep oversized blocks, split into hash-salted
-        sub-blocks (bounded cost, sampled recall on hot keys — see
-        salt_oversized_blocks; sub-block sizes are ~max_block in
-        expectation, so the collected arrays stay bounded too).
     """
-    if oversize_policy == "salt":
-        keys = salt_oversized_blocks(keys, max_block, id_col)
-    elif oversize_policy == "prepurge":
-        keys = prune_oversized_blocks(keys, max_block)
-    elif oversize_policy != "purge":
-        raise ValueError(f"unknown oversize_policy: {oversize_policy!r}")
-    if n_partitions:
-        keys = keys.repartition(n_partitions, "key")
+    keys = prune_oversized_blocks(keys, max_block)
     # ``payload_cols`` carries NARROW per-id columns (e.g. an 8-byte
     # SimHash) through the block expansion so the verifier needs NO
     # join back to the id table — which, when the upstream is a narrow
@@ -399,14 +333,10 @@ def candidate_pairs(
         if payload_cols
         else F.col(id_col)
     )
-    # collect_list (not _set): duplicate (key, id) rows must count
-    # toward the purge threshold and the n_keys signal exactly as the
-    # row-level join form did.
+    # collect_list (not _set): duplicate (key, id) rows count toward
+    # the n_keys signal exactly as the row-level join form did (and
+    # toward the cap, see prune_oversized_blocks).
     blocks = keys.groupBy("key").agg(F.collect_list(member).alias("ids"))
-    if oversize_policy in ("purge", "prepurge"):
-        # prepurge already bounded the buffers; the filter is then a
-        # no-op kept for belt-and-braces output parity with purge
-        blocks = blocks.filter(F.size("ids") <= max_block)
     # blocks of one produce no pairs; skip their expansion entirely
     blocks = blocks.filter(F.size("ids") >= 2)
     expanded = (

@@ -98,11 +98,12 @@ def simhash_signature(
     row per document: at 10^12 docs that shuffle alone is ~0.5 PB,
     and it buys nothing because a document's occurrences already live
     in one partition. Locally the two are equal within noise (medians
-    2.7s vs 2.9s, alternating rounds, scripts/micro_simhash.py) and
-    signatures are bit-identical; the fold wins on the shuffle it
-    deletes. The sums array is materialized in its own projection so
-    the 64-element packing reads it once (CollapseProject keeps the
-    boundary for expensive multiply-referenced aliases).
+    2.7s vs 2.9s over alternating rounds of the signature stage alone,
+    synthetic corpus, one Spark session) and signatures are
+    bit-identical; the fold wins on the shuffle it deletes. The sums
+    array is materialized in its own projection so the 64-element
+    packing reads it once (CollapseProject keeps the boundary for
+    expensive multiply-referenced aliases).
 
     Docs with no tokens get no signature row (same as the explode-drop
     semantics of the old form).

@@ -126,7 +126,6 @@ def hydration_exprs(
     suffix: str,
     text_col: str = "norm_text",
     tokens_col: str = "tokens",
-    lev_prefix: int = LEV_PREFIX,
 ) -> list:
     """The four per-doc hydration columns score_hydrated consumes
     (``jwt_/levt_/toksj_/toksd_<suffix>``) as bare expressions. ONE
@@ -137,7 +136,7 @@ def hydration_exprs(
     change here reaches both paths."""
     return [
         F.substring(text_col, 1, JW_PREFIX).alias(f"jwt_{suffix}"),
-        F.substring(text_col, 1, lev_prefix).alias(f"levt_{suffix}"),
+        F.substring(text_col, 1, LEV_PREFIX).alias(f"levt_{suffix}"),
         F.array_join(tokens_col, " ").alias(f"toksj_{suffix}"),
         F.array_distinct(tokens_col).alias(f"toksd_{suffix}"),
     ]
@@ -149,14 +148,13 @@ def hydration_side(
     id_col: str = "doc_id",
     text_col: str = "norm_text",
     tokens_col: str = "tokens",
-    lev_prefix: int = LEV_PREFIX,
 ) -> DataFrame:
     """Per-DOC precompute for one side of the pair scorer: prefix
     slices, distinct token set, joined token string (docs << pairs, so
     anything computable per doc is never recomputed per pair)."""
     return docs.select(
         F.col(id_col).alias(f"id_{suffix}"),
-        *hydration_exprs(suffix, text_col, tokens_col, lev_prefix),
+        *hydration_exprs(suffix, text_col, tokens_col),
     )
 
 
@@ -169,27 +167,15 @@ def score_pairs(
     tokens_col: str = "tokens",
     weights: dict[str, float] | None = None,
     threshold: float | None = None,
-    lev_prefix: int = LEV_PREFIX,
-    cascade_min_jaccard: float | None = None,
     default_idf: float = 1e-5,
 ) -> DataFrame:
     """Score (id_a, id_b) candidate pairs against docs(id, text, tokens).
 
     Returns pairs + feature columns + blended ``score`` (+ filter when
     ``threshold`` given). All joins are equi-joins on the doc id.
-
-    ``cascade_min_jaccard``: verification cascade for scale — the cheap
-    JVM-side features (jaccard, lev_sim) are computed for every pair,
-    but the Arrow UDF (JW / cosine / containment) runs only on pairs
-    with jaccard >= the gate; gated-out pairs get 0.0 for the expensive
-    features. At web scale most candidates are junk that the cheap
-    features already reject, so the Python hop shrinks to the
-    plausible tail. Pairs at or above the gate score identically to
-    the non-cascaded path.
     """
     sides = [
-        hydration_side(docs, s, id_col, text_col, tokens_col, lev_prefix)
-        for s in ("a", "b")
+        hydration_side(docs, s, id_col, text_col, tokens_col) for s in ("a", "b")
     ]
     hydrated = pairs.join(sides[0], "id_a").join(sides[1], "id_b")
     return score_hydrated(
@@ -197,7 +183,6 @@ def score_pairs(
         idf_map,
         weights=weights,
         threshold=threshold,
-        cascade_min_jaccard=cascade_min_jaccard,
         default_idf=default_idf,
     )
 
@@ -207,7 +192,6 @@ def score_hydrated(
     idf_map: dict[str, float],
     weights: dict[str, float] | None = None,
     threshold: float | None = None,
-    cascade_min_jaccard: float | None = None,
     default_idf: float = 1e-5,
 ) -> DataFrame:
     """Feature + blend stage over an already-hydrated pair table
@@ -235,37 +219,23 @@ def score_hydrated(
     jaccard = F.when(union == 0, F.lit(0.0)).otherwise(inter / union)
 
     udf = _pair_udf(idf_bcast, default_idf)
-    cheap = hydrated.withColumn("lev_sim", lev_sim).withColumn("jaccard", jaccard)
-    if cascade_min_jaccard is None:
-        survivors, rejected = cheap, None
-    else:
-        # NOTE: a `when(gate, udf(...))` would NOT gate the work — Catalyst
-        # extracts Python UDFs into their own projection and evaluates them
-        # for every row. A filter + union genuinely bounds the Arrow stage.
-        gate = F.col("jaccard") >= cascade_min_jaccard
-        survivors, rejected = cheap.filter(gate), cheap.filter(~gate)
     # Trim the Arrow transfer JVM-side: texts cut to the JW prefix (not
     # whole web pages; the [:JW_PREFIX] in the UDF is then a no-op kept
     # as a guard), token arrays flattened to one joined string per side.
-    scored_full = (
-        survivors.withColumn(
+    feats = (
+        hydrated.withColumn("lev_sim", lev_sim)
+        .withColumn("jaccard", jaccard)
+        .withColumn(
             "_s",
             udf("id_a", "id_b", "jwt_a", "jwt_b", "toksj_a", "toksj_b"),
         )
         .withColumn("jw", F.col("_s.jw"))
         .withColumn("cosine", F.col("_s.cosine"))
         .withColumn("containment", F.col("_s.containment"))
-        .drop("_s")
-    )
-    if rejected is not None:
-        scored_full = scored_full.unionByName(
-            rejected.withColumn("jw", F.lit(0.0))
-            .withColumn("cosine", F.lit(0.0))
-            .withColumn("containment", F.lit(0.0))
+        .drop(
+            "_s", "jwt_a", "jwt_b", "levt_a", "levt_b",
+            "toksj_a", "toksj_b", "toksd_a", "toksd_b",
         )
-    feats = scored_full.drop(
-        "jwt_a", "jwt_b", "levt_a", "levt_b",
-        "toksj_a", "toksj_b", "toksd_a", "toksd_b",
     )
     score = sum(F.col(k) * F.lit(w) for k, w in weights.items())
     out = feats.withColumn("score", score)

@@ -38,13 +38,9 @@ members; a key that crosses would retroactively purge base-base pairs
 the incremental run has already matched — transitive clustering is
 monotone and never retracts). New pairs are purged at UNION block
 sizes, exactly like the full run: the semi-join pulls every old member
-of each batch-touched key, so the single-pass block expansion sees the
-whole block. ``oversize_policy="purge"`` and ``"prepurge"`` keep this
-contract; ``"salt"`` is rejected (:func:`initial_state` and
-:func:`incremental_match` raise ValueError): a salted block of n
-members splits into ceil(n / max_block) sub-blocks, so a growing block
-changes its sub-block count and re-salts its old members — old pairs
-the full run would drop or gain, which no batch-local step can match.
+of each batch-touched key, so the block cap
+(operators/blocking.prune_oversized_blocks, the one the full run
+applies) sees the whole block.
 
 The reference has no incremental mode (TestMatcher/Program.cs rebuilds
 its index per run); this implements the north_star's "resumes without
@@ -172,7 +168,6 @@ def initial_state(
     result; pass a fixed snapshot when that equivalence matters.
     """
     cfg = cfg or MatchConfig()
-    _reject_salt(cfg)
     res = match_pipeline(pages, cfg, idf=idf)
     return MatchState(
         docs=res.docs, keys=res.keys, idf=res.idf,
@@ -180,22 +175,10 @@ def initial_state(
     )
 
 
-def _reject_salt(cfg: MatchConfig) -> None:
-    if cfg.oversize_policy == "salt":
-        raise ValueError(
-            'oversize_policy="salt" cannot grow incrementally: a block of n '
-            "members is salted into ceil(n / max_block) sub-blocks, so a "
-            "batch that grows a block re-salts its old members and the "
-            "result no longer equals a full recompute; use \"purge\" or "
-            '"prepurge"'
-        )
-
-
 def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalResult:
     """Match a batch of new pages against the state without touching
     old-old pairs. See the module docstring for cost and exactness."""
     cfg = state.cfg
-    _reject_salt(cfg)
     new_docs = prepare_docs(new_pages, cfg)
     if cfg.cache:
         new_docs = new_docs.persist()
@@ -211,14 +194,12 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
     # evaluated at UNION size — identical to a full recompute.
     batch_block_keys = new_keys.select("key").distinct()
     old_in_blocks = state.keys.join(batch_block_keys, "key", "semi")
-    sub = old_in_blocks.withColumn("is_new", F.lit(False)).unionByName(
-        new_keys.withColumn("is_new", F.lit(True))
+    sub = prune_oversized_blocks(
+        old_in_blocks.withColumn("is_new", F.lit(False)).unionByName(
+            new_keys.withColumn("is_new", F.lit(True))
+        ),
+        cfg.max_block,
     )
-    if cfg.oversize_policy == "prepurge":
-        # bound the collect buffers below BEFORE grouping, at UNION
-        # size (same dial as candidate_pairs) — identical output to the
-        # post-collect purge filter, bounded reduce memory
-        sub = prune_oversized_blocks(sub, cfg.max_block)
     # Asymmetric single-pass block expansion: each block's members are
     # collected into separate old/new lists and only new x old plus
     # new x new pairs are generated — a block of k old + b new members
@@ -226,8 +207,8 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
     # expansion-then-filter would (measured: a uniform 10% batch at
     # bench scale touches nearly EVERY block, so the filter form
     # regenerated ~all old-old pairs only to drop them — the whole
-    # blocking stage's cost for a tenth of the output). Purge is
-    # evaluated on the combined size, so it still matches the full
+    # blocking stage's cost for a tenth of the output). The cap above
+    # is evaluated on the combined size, so it still matches the full
     # run; n_keys counts one per shared block, exactly like
     # candidate_pairs.
     blocks = (
@@ -239,7 +220,6 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
         .filter(
             (F.size("new_ids") >= 1)
             & ((F.size("new_ids") + F.size("old_ids")) >= 2)
-            & ((F.size("new_ids") + F.size("old_ids")) <= cfg.max_block)
         )
     )
     # Both pair kinds come out of ONE chained expansion: each new
@@ -265,7 +245,7 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("n_keys"))
     )
-    pairs = scorer_layout(pairs, cfg)
+    pairs = scorer_layout(pairs)
     if cfg.cache:
         pairs = pairs.persist()
 

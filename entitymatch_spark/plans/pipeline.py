@@ -51,7 +51,7 @@ from entitymatch_spark.operators.scoring import (
 @dataclass
 class MatchConfig:
     min_idf: float = 1.0          # token blocking: rare-token floor
-    max_block: int = 64           # block purging cap
+    max_block: int = 64           # block purging cap (operators/blocking.py)
     num_hashes: int = 64          # MinHash signature width
     bands: int = 16               # LSH bands (16 x 4: ~0.5 jaccard knee)
     rows_per_band: int = 4
@@ -64,14 +64,6 @@ class MatchConfig:
     lsh_band_hash: str = "xxhash64"
     weights: dict = field(default_factory=lambda: dict(DEFAULT_WEIGHTS))
     threshold: float = DEFAULT_THRESHOLD
-    lev_prefix: int = 128
-    # verification cascade: pairs below this jaccard skip the Arrow UDF.
-    # Safe at the default threshold (with jw/cosine/containment zeroed the
-    # blend caps at 0.30 < 0.60), but OFF by default: the filter+union
-    # re-hydrates both branches, so it only pays when a large fraction of
-    # candidates are junk (e.g. web-scale LSH bands over boilerplate) —
-    # measured 0% gated / 2.5x overhead on the labeled fixture.
-    cascade_min_jaccard: float | None = None
     # Cap on the broadcast IDF dictionary (None = full vocabulary). At
     # 10^12-doc scale the raw web vocabulary does not fit in a broadcast;
     # keep the top-K most frequent tokens and score dropped (rare) tokens
@@ -81,24 +73,8 @@ class MatchConfig:
     # driver-side collect; at test scale the vocabulary is far smaller
     # than the cap, so nothing is dropped and results are identical.
     idf_max_entries: int | None = 2_000_000
-    # Partition count for the pair table feeding the Arrow scorer.
-    # AQE coalesces shuffle output by BYTES (advisory 64 MB), but the
-    # scoring stage's cost is rows x python-time — on a mid-size corpus
-    # a few-MB pair table coalesces to 1-2 partitions and the Python
-    # scorer runs on 1-2 cores. "auto" repartitions to
-    # 4 x defaultParallelism (cheap: the pair table is narrow);
-    # None leaves AQE's layout (right when pairs are huge and
-    # byte-proportional); an int pins it.
-    score_partitions: int | str | None = "auto"
     seed: int = 42
     cache: bool = True  # persist docs + pairs (reused by several stages)
-    # block-cap enforcement: "purge" (single-pass; reduce buffer = the
-    # hot key's PRE-purge size) or "prepurge" (count-first + broadcast
-    # anti-join — every buffer bounded by max_block; one extra pass
-    # over the key table). Same output, parity-tested. Flip to
-    # "prepurge" for adversarially skewed corpora (boilerplate LSH
-    # bands at 10^12 docs); "salt" trades recall instead of dropping.
-    oversize_policy: str = "purge"
     id_col: str = "url"
     text_col: str = "text"
 
@@ -168,9 +144,8 @@ def blocking_keys(docs: DataFrame, idf: DataFrame, cfg: MatchConfig) -> DataFram
     rare-token keys (narrow per-doc array_distinct + broadcast IDF
     join, no global distinct shuffle) unioned with MinHash-LSH band
     keys when ``cfg.use_lsh``. THE one construction: the resumable,
-    batch-incremental and streaming matchers and the bench's timed
-    chains call this too, so none of them can drift from what the
-    pipeline runs (hash variants, band geometry, use_lsh gate). Every
+    batch-incremental and streaming matchers call this too, so none
+    of them can drift from what the pipeline runs (hash variants, band geometry, use_lsh gate). Every
     step is per-row, so ``docs`` may be a stream, and ``doc_id`` passes
     through untouched whatever its type.
     """
@@ -194,19 +169,18 @@ def lsh_keys(docs: DataFrame, cfg: MatchConfig) -> DataFrame:
 
 
 def pair_stage(keys: DataFrame, cfg: MatchConfig) -> DataFrame:
-    """Candidate pairs under ``cfg``'s block cap and oversize policy,
-    in the scorer's layout (``scorer_layout``)."""
-    return scorer_layout(
-        candidate_pairs(
-            keys, max_block=cfg.max_block, oversize_policy=cfg.oversize_policy
-        ),
-        cfg,
-    )
+    """Candidate pairs under ``cfg``'s block cap, in the scorer's
+    layout (``scorer_layout``)."""
+    return scorer_layout(candidate_pairs(keys, max_block=cfg.max_block))
 
 
-def scorer_layout(pairs: DataFrame, cfg: MatchConfig) -> DataFrame:
-    """The pair layout feeding the Arrow scorer, over
-    ``cfg.score_partitions`` partitions (see MatchConfig).
+def scorer_layout(pairs: DataFrame) -> DataFrame:
+    """The pair layout feeding the Arrow scorer: 4 x defaultParallelism
+    partitions. AQE coalesces shuffle output by BYTES (advisory 64 MB),
+    but the scoring stage's cost is rows x python-time — on a mid-size
+    corpus a few-MB pair table would coalesce to 1-2 partitions and the
+    Python scorer run on 1-2 cores. The fixed fan-out is cheap: the
+    pair table is narrow.
 
     Hash-partition by id_a + local sort, NOT round-robin: the Arrow
     scorer memoizes per-doc tf-idf/Jaro profiles PER BATCH, and on a
@@ -215,7 +189,7 @@ def scorer_layout(pairs: DataFrame, cfg: MatchConfig) -> DataFrame:
     entry per distinct doc per batch — GC pressure that grows with
     corpus size, not pair count). Sorted runs of id_a make the a-side
     profile a guaranteed hit and keep the working set small. Measured
-    on a 105k-doc / 5.1M-pair corpus (scripts/stress_scale.py shape,
+    on a 105k-doc / 5.1M-pair synthetic corpus (the full pipeline,
     interleaved 3-round A/B): 50-56s sorted vs 105-122s round-robin —
     ~2x. Skew is bounded: max_block caps any one doc's pair count.
 
@@ -228,13 +202,7 @@ def scorer_layout(pairs: DataFrame, cfg: MatchConfig) -> DataFrame:
     path bakes the layout into written parquet instead, which has no
     such exposure (plans/resumable.py).
     """
-    if cfg.score_partitions is None:
-        return pairs
-    n_part = (
-        4 * pairs.sparkSession.sparkContext.defaultParallelism
-        if cfg.score_partitions == "auto"
-        else int(cfg.score_partitions)
-    )
+    n_part = 4 * pairs.sparkSession.sparkContext.defaultParallelism
     return pairs.repartition(n_part, "id_a").sortWithinPartitions("id_a", "id_b")
 
 
@@ -258,8 +226,7 @@ def score_stage(
     stream_side: str | None = None,
 ) -> DataFrame:
     """THE scorer call: ``pairs`` + features + ``score`` under ``cfg``'s
-    blend weights, Levenshtein prefix and cascade gate, each side
-    hydrated from ``docs``.
+    blend weights, each side hydrated from ``docs``.
 
     ``stream_side``: the streaming matcher's form. Names a struct
     column on ``pairs`` holding the id_a side's ``norm_text`` and
@@ -268,23 +235,14 @@ def score_stage(
     """
     if stream_side is None:
         return score_pairs(
-            pairs, docs, idf_map,
-            weights=cfg.weights, lev_prefix=cfg.lev_prefix,
-            cascade_min_jaccard=cfg.cascade_min_jaccard,
-            default_idf=default_idf,
+            pairs, docs, idf_map, weights=cfg.weights, default_idf=default_idf
         )
     hydrated = pairs.select(
         *[c for c in pairs.columns if c != stream_side],
-        *hydration_exprs(
-            "a", f"{stream_side}.norm_text", f"{stream_side}.tokens",
-            lev_prefix=cfg.lev_prefix,
-        ),
-    ).join(hydration_side(docs, "b", lev_prefix=cfg.lev_prefix), "id_b")
+        *hydration_exprs("a", f"{stream_side}.norm_text", f"{stream_side}.tokens"),
+    ).join(hydration_side(docs, "b"), "id_b")
     return score_hydrated(
-        hydrated, idf_map,
-        weights=cfg.weights,
-        cascade_min_jaccard=cfg.cascade_min_jaccard,
-        default_idf=default_idf,
+        hydrated, idf_map, weights=cfg.weights, default_idf=default_idf
     )
 
 

@@ -102,19 +102,6 @@ def write_table(
     """
     from pyspark.errors import AnalysisException
 
-    if is_table_name(target) and mode in ("error", "errorifexists", "ignore"):
-        # the V2 writeTo path has only replace/append verbs, and the
-        # old coercion silently APPENDED under these modes — honor
-        # them explicitly instead: a caller using errorifexists as a
-        # double-write guard must not duplicate the table
-        if df.sparkSession.catalog.tableExists(target):
-            if mode == "ignore":
-                return
-            raise ValueError(
-                f"table {target!r} already exists (mode={mode!r})"
-            )
-        mode = "append"  # table absent: create it
-
     if buckets is not None:
         if not is_table_name(target):
             raise ValueError(
@@ -123,6 +110,23 @@ def write_table(
             )
         if not bucket_by:
             raise ValueError("buckets= requires bucket_by=")
+    if is_table_name(target) and mode in ("error", "errorifexists", "ignore"):
+        # a caller using errorifexists as a double-write guard must not
+        # duplicate the table: create it atomically (the catalog refuses
+        # an existing name inside the create itself, so no check-then-
+        # act window) and map "already exists" to the mode's answer
+        try:
+            _create_table(df, target, buckets, bucket_by, sort_by)
+        except AnalysisException as e:
+            if _condition(e) != "TABLE_OR_VIEW_ALREADY_EXISTS":
+                raise
+            if mode != "ignore":
+                raise ValueError(
+                    f"table {target!r} already exists (mode={mode!r})"
+                ) from e
+        return
+
+    if buckets is not None:
         (
             df.write.mode("overwrite" if mode == "overwrite" else "append")
             .bucketBy(buckets, bucket_by)
@@ -146,16 +150,46 @@ def write_table(
             else:
                 df.writeTo(target).append()
         except AnalysisException as e:
-            cond = (
-                e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
-            )
-            if cond not in _V1_FALLBACK_CONDITIONS:
+            if _condition(e) not in _V1_FALLBACK_CONDITIONS:
                 raise
             df.write.mode("overwrite" if mode == "overwrite" else "append").saveAsTable(
                 target
             )
     else:
         df.write.mode(mode).parquet(target)
+
+
+def _condition(e) -> str | None:
+    return e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
+
+
+def _create_table(
+    df: DataFrame,
+    target: str,
+    buckets: int | None,
+    bucket_by: str | None,
+    sort_by: str | None,
+) -> None:
+    """Create ``target`` from ``df``, raising TABLE_OR_VIEW_ALREADY_EXISTS
+    when it exists: the V2 ``writeTo(...).create()``, or the V1
+    ``mode("error")`` writer for bucketed tables and catalogs without
+    the V2 create."""
+    from pyspark.errors import AnalysisException
+
+    if buckets is not None:
+        (
+            df.write.mode("error")
+            .bucketBy(buckets, bucket_by)
+            .sortBy(sort_by or bucket_by)
+            .saveAsTable(target)
+        )
+        return
+    try:
+        df.writeTo(target).create()
+    except AnalysisException as e:
+        if _condition(e) not in _V1_FALLBACK_CONDITIONS:
+            raise
+        df.write.mode("error").saveAsTable(target)
 
 
 def read_csv_phrases(

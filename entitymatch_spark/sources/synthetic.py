@@ -15,7 +15,7 @@ case/whitespace jitter (both erased by the reference normalizer, ref:
 Language.cs:25-35). Cluster membership is recorded in `labels`.
 
 Token frequencies are Zipfian so a few hot tokens create skewed blocks —
-the skew/salting test surface.
+the block-cap test surface.
 """
 
 from __future__ import annotations
@@ -139,14 +139,7 @@ def generate_corpus(
     seed: int = 42,
     max_members: int = 6,
     hard_negative_groups: int = 12,
-    cluster_id_offset: int = 0,
 ) -> CorpusFixture:
-    """``cluster_id_offset`` shifts cluster ids (and the urls and
-    per-cluster discriminating tokens derived from them) so two
-    generated corpora are entity-DISJOINT while still sharing the
-    vocabulary family — the shape of unrelated web content. Used by the
-    bench's corpus-growth leg to build a larger standing corpus that
-    the same batch can be matched into."""
     rng = random.Random(seed)
     vocab = list(_FILLER) + TRIE_TEST_WORDS
     syn = {a: (b, w) for a, b, w in _SYNONYMS}
@@ -172,7 +165,7 @@ def generate_corpus(
     cluster_urls: dict[int, list[str]] = {}
     cluster_block: dict[int, str] = {}
     row_idx = 0
-    for cid in range(cluster_id_offset, cluster_id_offset + n_clusters):
+    for cid in range(n_clusters):
         uniq = f"uniq{cid}tok"
         cluster_block[cid] = uniq
         phrase = ent_rows[cid % len(ent_rows)][2]

@@ -270,66 +270,42 @@ def test_connected_components_empty(spark):
     assert connected_components(e, "src", "dst").count() == 0
 
 
-def test_salted_oversized_blocks(spark):
-    """Zipf-hot key: purge drops it entirely; salt keeps it with bounded
-    sub-blocks and generates only intra-sub-block pairs."""
-    from entitymatch_spark.operators.blocking import salt_oversized_blocks
-
+def test_hot_key_block_purged(spark):
+    """Zipf-hot key: purge drops it entirely."""
     rows = [(i, "hot") for i in range(500)] + [(i, f"cold{i % 5}") for i in range(20)]
     keys = spark.createDataFrame(rows, "doc_id long, key string")
 
-    purged = candidate_pairs(keys, max_block=50, oversize_policy="purge")
+    purged = candidate_pairs(keys, max_block=50)
     p_pairs = {(r["id_a"], r["id_b"]) for r in purged.collect()}
     # hot block gone; only the 5 cold blocks of 4 docs each -> 5 * C(4,2)
     assert len(p_pairs) == 30
     assert all(a < 20 and b < 20 for a, b in p_pairs)
 
-    salted_keys = salt_oversized_blocks(keys, max_block=50)
-    sizes = salted_keys.groupBy("key").count().collect()
-    # 500 docs over 10 salts: ~50 each, binomial spread (sd ~6.7)
-    assert max(r["count"] for r in sizes) <= 80
-    assert any(r["key"].startswith("hot#") for r in sizes)
-    assert any(r["key"].startswith("cold") for r in sizes)  # small keys untouched
-    # salting relabels, never drops
-    assert salted_keys.count() == keys.count()
-    # no small key got a salt suffix
-    assert not any("#" in r["key"] for r in sizes if r["key"].startswith("cold"))
-    # 100 TB: only OVERSIZED keys ride the broadcast (the full key-size
-    # table is vocabulary-sized, never broadcastable) — the broadcast
-    # build side must carry the > max_block filter
-    import re
 
-    plan = salted_keys._jdf.queryExecution().executedPlan().toString()
-    build_side = plan.split("BroadcastExchange", 1)[1]
-    assert re.search(r"__n#\d+L? > 50", build_side), build_side[:800]
-
-    salted = candidate_pairs(keys, max_block=50, oversize_policy="salt")
-    s_pairs = salted.count()
-    # bounded: each of 10 sub-blocks of ~50 docs -> ~C(50,2) pairs, plus cold
-    assert 0 < s_pairs < 10 * (60 * 59) // 2 + 100
-    # deterministic across partitionings
-    salted2 = candidate_pairs(keys.repartition(13), max_block=50, oversize_policy="salt")
-    assert {tuple(r) for r in salted.collect()} == {tuple(r) for r in salted2.collect()}
-
-
-def test_prepurge_parity_and_bounded_plan(spark):
-    """prepurge must emit exactly purge's pairs (it only moves the cap
-    enforcement BEFORE the collect) and must do it via a broadcast
-    anti-join of the oversized-key set."""
-    from pyspark.sql import functions as F
-
-    from entitymatch_spark.operators.blocking import candidate_pairs
-
+def test_block_cap_in_pass_bounded_plan(spark):
+    """The block cap runs in the same pass as the block collect: its
+    size filter sits BELOW the collect_list aggregate (no buffer ever
+    holds more than max_block members), the window's exchange on key
+    is reused by the block groupBy, and the plan stays two Exchanges
+    with no join."""
     # one hot key (6 members, over the cap of 4) + normal blocks +
-    # duplicate (key, id) rows which must count toward the threshold
+    # duplicate (key, id) rows which must count toward the cap: "c"
+    # has 3 distinct ids but 5 rows, so it is over the cap too
     rows = (
         [("hot", i) for i in range(6)]
         + [("a", 1), ("a", 2), ("a", 3)]
         + [("b", 7), ("b", 8), ("b", 8)]
+        + [("c", 10), ("c", 11), ("c", 11), ("c", 12), ("c", 12)]
     )
     keys = spark.createDataFrame(rows, "key string, doc_id long")
-    purge = candidate_pairs(keys, max_block=4, oversize_policy="purge")
-    pre = candidate_pairs(keys, max_block=4, oversize_policy="prepurge")
-    assert sorted(map(tuple, purge.collect())) == sorted(map(tuple, pre.collect()))
-    plan = pre._jdf.queryExecution().executedPlan().toString()
-    assert "LeftAnti" in plan and "Broadcast" in plan
+    pairs = candidate_pairs(keys, max_block=4)
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert sorted(map(tuple, pairs.collect())) == [
+        (1, 2, 1), (1, 3, 1), (2, 3, 1), (7, 8, 2),
+    ]
+    assert " Join" not in plan and "Join " not in plan, plan[:2000]
+    assert plan.count("Exchange") == 2, plan[:2000]
+    lines = plan.splitlines()
+    last_collect = max(i for i, l in enumerate(lines) if "collect_list" in l)
+    cap = [i for i, l in enumerate(lines) if "Filter" in l and "<= 4" in l]
+    assert cap and min(cap) > last_collect, plan[:2000]

@@ -284,37 +284,41 @@ def test_resume_with_changed_config_raises(spark, tmp_path, small_corpus):
 
 
 def test_resumable_scores_with_full_config(spark, tmp_path, small_corpus):
-    """lev_prefix (and the cascade gate) must reach the bucket scorer:
-    the resumable path used to score with the DEFAULTS and silently
-    diverge from match_pipeline under the identical config."""
-    from entitymatch_spark.plans.pipeline import match_pipeline
-
-    fx, pages = small_corpus
-    cfg = MatchConfig(lev_prefix=48)
-    res = resumable_match_pipeline(
-        spark, pages, tmp_path / "lp", cfg, n_score_buckets=2
-    )
-    full = match_pipeline(pages, cfg)
-    a = {(r.id_a, r.id_b, round(r.lev_sim, 9)) for r in res["scored"].collect()}
-    b = {(r.id_a, r.id_b, round(r.lev_sim, 9)) for r in full.scored.collect()}
-    assert a == b
-
-
-def test_resumable_pipeline_honors_oversize_policy(spark, tmp_path, small_corpus):
-    """cfg.oversize_policy must reach the resumable pair stage: it used
-    to pass candidate_pairs the cap alone, so "salt" (and "prepurge")
-    silently ran as "purge" and the resumable pairs diverged from
+    """The blend weights must reach the bucket scorer: the resumable
+    path used to score with the DEFAULTS and silently diverge from
     match_pipeline under the identical config."""
     from entitymatch_spark.plans.pipeline import match_pipeline
 
     fx, pages = small_corpus
-    cfg = MatchConfig(oversize_policy="salt", max_block=8)
+    cfg = MatchConfig(weights={"jaccard": 0.5, "lev_sim": 0.5})
+    res = resumable_match_pipeline(
+        spark, pages, tmp_path / "lp", cfg, n_score_buckets=2
+    )
+    full = match_pipeline(pages, cfg)
+    a = {(r.id_a, r.id_b, round(r.score, 9)) for r in res["scored"].collect()}
+    b = {(r.id_a, r.id_b, round(r.score, 9)) for r in full.scored.collect()}
+    assert a and a == b
+    # the scores are the cfg's blend, not the default one
+    assert all(
+        abs(r.score - 0.5 * (r.jaccard + r.lev_sim)) < 1e-9
+        for r in res["scored"].collect()
+    )
+
+
+def test_resumable_pipeline_honors_oversize_policy(spark, tmp_path, small_corpus):
+    """cfg.max_block must reach the resumable pair stage, on a corpus
+    where the cap bites: the resumable pairs equal match_pipeline's
+    under the identical config."""
+    from entitymatch_spark.plans.pipeline import match_pipeline
+
+    fx, pages = small_corpus
+    cfg = MatchConfig(max_block=8)
     full = match_pipeline(pages, cfg)
     # the cap bites: some block on this corpus is over it
     sizes = full.keys.groupBy("key").count()
     assert sizes.filter(F.col("count") > cfg.max_block).limit(1).count() == 1
     res = resumable_match_pipeline(
-        spark, pages, tmp_path / "salt", cfg, n_score_buckets=1
+        spark, pages, tmp_path / "cap", cfg, n_score_buckets=1
     )
     got = sorted(map(tuple, res["pairs"].collect()))
     assert got == sorted(map(tuple, full.pairs.collect()))

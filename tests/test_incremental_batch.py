@@ -57,20 +57,6 @@ def test_incremental_equals_full_recompute(setup):
     )
 
 
-def test_salt_policy_rejected(setup):
-    """oversize_policy="salt" cannot grow exactly (a growing block
-    changes its sub-block count and re-salts old members), so the
-    batch-incremental path must refuse it instead of silently purging
-    at union size."""
-    from dataclasses import replace
-
-    salt = replace(setup["cfg"], oversize_policy="salt")
-    with pytest.raises(ValueError, match="salt"):
-        initial_state(setup["base"], salt, idf=setup["idf"])
-    with pytest.raises(ValueError, match="salt"):
-        incremental_match(replace(setup["st0"], cfg=salt), setup["batch"])
-
-
 def test_pair_algebra(setup):
     """incremental pairs == full-run pairs minus base-run pairs, and
     every incremental pair touches a batch doc (no old-old rescoring)."""
@@ -618,7 +604,8 @@ def test_save_state_persists_config(spark, tmp_path, setup):
     """A state built under non-default blocking parameters must reload
     with THOSE parameters — the silent MatchConfig() fallback put batch
     keys in the wrong key space (missed matches, no error)."""
-    from dataclasses import replace
+    import json
+    from dataclasses import asdict, replace
 
     from entitymatch_spark.plans.incremental import load_state, save_state
 
@@ -628,6 +615,17 @@ def test_save_state_persists_config(spark, tmp_path, setup):
     save_state(replace(state, cfg=custom), p)
     loaded = load_state(spark, p)
     assert (loaded.cfg.num_hashes, loaded.cfg.bands, loaded.cfg.seed) == (32, 8, 7)
+    # a cfg saved by an older writer still carries options MatchConfig
+    # no longer has; the load drops them instead of crashing
+    raw = dict(
+        asdict(custom), oversize_policy="purge", cascade_min_jaccard=None,
+        score_partitions="auto", lev_prefix=128,
+    )
+    spark.createDataFrame([(json.dumps(raw),)], "cfg_json string").write.mode(
+        "overwrite"
+    ).parquet(f"{p}/cfg")
+    legacy = load_state(spark, p).cfg
+    assert (legacy.num_hashes, legacy.bands, legacy.seed) == (32, 8, 7)
     # explicit cfg argument still wins
     forced = load_state(spark, p, cfg=state.cfg)
     assert forced.cfg.num_hashes == state.cfg.num_hashes

@@ -86,14 +86,11 @@ def test_production_matches_portable_variant(spark, result):
 def test_scorer_parallelism_not_aqe_coalesced(spark):
     """AQE coalesces shuffles by BYTES, but the Arrow scorer's cost is
     rows x python-time: a few-MB pair table must still fan out across
-    cores. score_partitions='auto' (default) pins 4 x defaultParallelism;
-    None leaves AQE's layout; an int pins that int."""
+    cores: the scorer layout pins 4 x defaultParallelism."""
     pages = corpus_to_spark(spark, generate_corpus(n_clusters=10, seed=3))["pages"]
     res = match_pipeline(pages, MatchConfig())
     dp = spark.sparkContext.defaultParallelism
     assert res.pairs.rdd.getNumPartitions() == 4 * dp
-    res_pinned = match_pipeline(pages, MatchConfig(score_partitions=7, cache=False))
-    assert res_pinned.pairs.rdd.getNumPartitions() == 7
 
 
 def test_clustering_is_lazy(spark, monkeypatch):

@@ -202,7 +202,7 @@ def test_pipeline_pair_layout_hash_sorted(spark):
 
     pages = corpus_to_spark(spark, generate_corpus(n_clusters=12, seed=3))["pages"]
 
-    res = match_pipeline(pages, MatchConfig(score_partitions="auto"))
+    res = match_pipeline(pages, MatchConfig())
     res.scored.count()  # materialize the cache so the plan is final
     plan = _plan(res.scored)
     assert "hashpartitioning(id_a" in plan, plan[:2000]
@@ -212,7 +212,7 @@ def test_pipeline_pair_layout_hash_sorted(spark):
     for df in (res.docs, res.pairs, res.scored):
         df.unpersist()
 
-    res2 = match_pipeline(pages, MatchConfig(score_partitions="auto", cache=False))
+    res2 = match_pipeline(pages, MatchConfig(cache=False))
     plan2 = _plan(res2.scored)
     assert "hashpartitioning(id_a" in plan2, plan2[:2000]
 

@@ -110,6 +110,29 @@ def test_write_table_honors_error_and_ignore_modes(spark):
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
+def test_write_table_error_mode_has_no_check_then_act_race(spark, monkeypatch):
+    """error/ignore must not rest on a tableExists check: a table created
+    between the check and the write (here: a check that misses it) must
+    still raise / no-op, never get duplicate rows appended."""
+    import pytest
+
+    from entitymatch_spark.sources.readers import write_table
+
+    df = spark.createDataFrame([(1, "a")], "id long, v string")
+    name = "t_mode_race"
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    try:
+        write_table(df, name, mode="error")
+        monkeypatch.setattr(spark.catalog, "tableExists", lambda *a, **k: False)
+        with pytest.raises(ValueError, match="already exists"):
+            write_table(df, name, mode="error")
+        write_table(df, name, mode="ignore")
+        assert spark.table(name).count() == 1
+    finally:
+        monkeypatch.undo()
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
 def test_multimodal_guards_and_video_scoping(spark):
     import pytest
 
