@@ -55,7 +55,10 @@ cluster ids — with a provable full-recompute equivalence.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import json
+import re
+import uuid
+from dataclasses import asdict, dataclass, fields
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,15 +109,12 @@ class MatchState:
     # NOT persisted by save_state (the model is the caller's versioned
     # artifact); re-attach after load_state with dataclasses.replace.
     match_model: object | None = None
-    # Set by load_state: where this state was read from. save_state
-    # refuses that same target — overwrite mode truncates each table
-    # before the plan that still reads it executes (state destroyed).
-    source_path: str | None = None
-    # False once an in-memory mutation (remove_docs, rethreshold)
-    # diverges this state from its stored tables: commit_increment's
-    # append-only delta commit would silently skip that mutation, so
-    # it refuses and directs to save_state on a fresh target.
-    storage_synced: bool = True
+    # (qualified path, lineage) set by load_state: the lineage starts
+    # with the id of the manifest read, and each grow appends a fresh
+    # id, the one its commit publishes. A catalog prefix has no lineage
+    # (None). None (remove_docs, rethreshold, upsert_pages) commits as a
+    # full snapshot. See commit_increment.
+    source: tuple[str, tuple[str, ...] | None] | None = None
 
 
 def _match_edges(state: "MatchState", scored: DataFrame) -> DataFrame:
@@ -139,9 +139,6 @@ class IncrementalResult:
     # what commit_increment() deletes and appends on Iceberg
     affected_clusters: DataFrame
     cluster_changed: DataFrame
-    # False when the result retired stored rows (upsert_pages): the
-    # deltas are then not append-only and commit_increment() refuses
-    append_only: bool = True
 
     def unpersist(self) -> None:
         """Drop this result's cached frames (``new_docs``, ``pairs`` —
@@ -262,13 +259,20 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
     # is both simpler and measured-equal.
     docs_union = state.docs.unionByName(new_docs)
 
-    scored = score_stage(pairs, docs_union, *scorer_idf_map(state.idf, cfg), cfg)
+    # scored ONCE: the match edges, the cluster merge and the commit's
+    # scored delta read this cut instead of re-running the scorer
+    scored = score_stage(
+        pairs, docs_union, *scorer_idf_map(state.idf, cfg), cfg
+    ).localCheckpoint(eager=True)
     # the STATE's predicate (model when recalibrated, else affine) so
     # grown clusters stay coherent with the stored ones
     matches = _match_edges(state, scored)
 
     clusters, affected, changed = _merge_clusters(state.clusters, matches, new_docs)
 
+    source = state.source
+    if source is not None and source[1] is not None:
+        source = (source[0], (*source[1], uuid.uuid4().hex))
     new_state = MatchState(
         docs=docs_union,
         keys=state.keys.unionByName(new_keys),
@@ -279,8 +283,7 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
             state.scored.unionByName(scored) if state.scored is not None else None
         ),
         match_model=state.match_model,
-        source_path=state.source_path,
-        storage_synced=state.storage_synced,
+        source=source,
     )
     return IncrementalResult(
         state=new_state, new_docs=new_docs, new_keys=new_keys, pairs=pairs,
@@ -303,19 +306,17 @@ def _merge_clusters(
     collapsed. Unaffected clusters never enter the plan: their rows
     pass through an anti-join verbatim.
 
-    ``matches`` sits atop the whole blocking + Arrow-scoring chain and
-    is referenced by several branches here (endpoints, affected set,
-    CC input) — each branch would re-execute that chain, so the edge
-    set is materialized ONCE with an eager localCheckpoint (it is
-    small: matched pairs only). ``affected`` gets the same cut: it is
-    read by three branches and sits atop a scan of ``prior``.
-    ``prior`` itself is deliberately NOT cached — at corpus scale it
-    is a stored table, and the few narrow scans of it here are the
-    honest cost (measured: without these two cuts the bench's
-    incremental leg re-ran the scorer 4x, 63s for a batch whose
-    single-pass cost is a few seconds).
+    ``matches`` is referenced by several branches here (endpoints,
+    affected set, CC input); it filters the scored cut incremental_match
+    takes, so each branch re-reads materialized rows, never the scorer.
+    ``affected`` is cut once more: it is read by three branches and
+    sits atop a scan of ``prior``. ``prior`` itself is deliberately NOT
+    cached — at corpus scale it is a stored table, and the few narrow
+    scans of it here are the honest cost (measured: without these cuts
+    the bench's incremental leg re-ran the scorer 4x, 63s for a batch
+    whose single-pass cost is a few seconds).
     """
-    new_edges = matches.select("id_a", "id_b").localCheckpoint(eager=True)
+    new_edges = matches.select("id_a", "id_b")
     endpoint_ids = (
         new_edges.select(F.col("id_a").alias("doc_id"))
         .unionByName(new_edges.select(F.col("id_b").alias("doc_id")))
@@ -347,22 +348,125 @@ def _merge_clusters(
 _PARTS = ("docs", "keys", "idf", "clusters")
 
 
-def _state_target(path: str, part: str) -> str:
-    from entitymatch_spark.sources.readers import is_table_name
+def _rename(fs, src, dst) -> bool:
+    """The publish's one atomic step; a module function so a test can
+    fail a publish exactly here."""
+    return bool(fs.rename(src, dst))
 
-    return f"{path}_{part}" if is_table_name(path) else f"{path}/{part}"
+
+class _StateDir:
+    """A state under a filesystem path. Each part (``docs``, ``keys``,
+    ``idf``, ``clusters``, ``scored``) is a list of directories, each
+    written once under a fresh name tagged with its generation.
+    ``manifest-<generation>.json`` names the current generation: its
+    number, a random commit ``id``, the MatchConfig and each part's
+    directories relative to the root (so a copied state still loads). A
+    kill at any write leaves the old generation or the new one. All I/O
+    goes through Hadoop's FileSystem API, so ``file://`` and ``hdfs://``
+    paths behave alike.
+
+    Writers to one path take turns. The publish refuses a generation
+    that already exists, but it checks and then renames, and a local
+    rename replaces an existing file: two writers publishing at the
+    same moment can lose one commit."""
+
+    def __init__(self, spark: SparkSession, path: str):
+        self.spark, self._path = spark, spark._jvm.org.apache.hadoop.fs.Path
+        p = self._path(str(path))
+        self.fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+        # qualified: /x/st, /x/st/ and file:///x/st name one root
+        self.root = self.fs.makeQualified(p).toString()
+
+    def _ls(self, rel: str = "") -> list[str]:
+        p = self._path(f"{self.root}/{rel}")
+        if not self.fs.exists(p):
+            return []
+        return [s.getPath().getName() for s in self.fs.listStatus(p)]
+
+    def manifest(self, generation: int | None = None) -> dict | None:
+        """The manifest of ``generation`` (default: the newest), or None."""
+        if generation is None:
+            found = (re.fullmatch(r"manifest-(\d+)\.json", n) for n in self._ls())
+            generation = max((int(m[1]) for m in found if m), default=0)
+        p = self._path(f"{self.root}/manifest-{generation:06d}.json")
+        if not self.fs.exists(p):
+            return None
+        stream, io = self.fs.open(p), self.spark._jvm.org.apache.hadoop.io
+        try:
+            return json.loads(bytes(io.IOUtils.readFullyToByteArray(stream)))
+        finally:
+            stream.close()
+
+    def write(self, df: DataFrame, part: str, generation: int) -> str:
+        """Write ``df`` to a fresh directory; returns its relative name."""
+        rel = f"{part}/g{generation:06d}-{uuid.uuid4().hex[:12]}"
+        df.write.parquet(f"{self.root}/{rel}")
+        return rel
+
+    def read(self, rels: list[str]) -> DataFrame:
+        return self.spark.read.parquet(*[f"{self.root}/{r}" for r in rels])
+
+    def publish(self, manifest: dict) -> None:
+        """Make ``manifest`` (``generation``, ``id``, ``config``,
+        ``parts``) current with one rename. Then remove manifests older
+        than the generation before it, and the temporary manifests and
+        part directories of this generation or older that neither of the
+        two lists (a killed write's leftovers): a state loaded one
+        generation back stays readable, and a later generation's writer
+        keeps its directories."""
+        gen = manifest["generation"]
+        name = f"{self.root}/manifest-{gen:06d}.json"
+        final, tmp = self._path(name), self._path(f"{name}.{uuid.uuid4().hex}.tmp")
+        out = self.fs.create(tmp, False)
+        try:
+            out.write(bytearray(json.dumps(manifest, indent=1).encode("utf-8")))
+        finally:
+            out.close()
+        if self.fs.exists(final) or not _rename(self.fs, tmp, final):
+            self.fs.delete(tmp, False)
+            raise ValueError(
+                f"generation {gen} of {self.root} already exists: another "
+                "commit landed after this one began; load the state again "
+                "and redo the change"
+            )
+        keep = {
+            rel for m in (manifest, self.manifest(gen - 1) or {"parts": {}})
+            for rels in m["parts"].values() for rel in rels
+        }
+        for n in self._ls():
+            m = re.fullmatch(r"manifest-(\d+)\.json(\..+\.tmp)?", n)
+            if m and (int(m[1]) < gen - 1 or m[2] and int(m[1]) <= gen):
+                self.fs.delete(self._path(f"{self.root}/{n}"), False)
+        for part in (*_PARTS, "scored"):
+            for n in self._ls(part):
+                m = re.match(r"g(\d+)-", n)
+                if m and int(m[1]) <= gen and f"{part}/{n}" not in keep:
+                    self.fs.delete(self._path(f"{self.root}/{part}/{n}"), True)
+
+
+def _manifest(state: MatchState, generation: int, parts: dict) -> dict:
+    """The manifest publishing ``state``: its commit id is the last of
+    its lineage (the one a grow of it names as its base), or fresh."""
+    ids = state.source[1] if state.source is not None else None
+    return {
+        "generation": generation, "id": ids[-1] if ids else uuid.uuid4().hex,
+        "config": asdict(state.cfg), "parts": parts,
+    }
 
 
 def save_state(state: MatchState, path: str, *, key_buckets: int | None = None) -> None:
-    """Persist the state's tables under ``path``.
+    """Persist the state under ``path`` as a full snapshot.
 
-    ``path`` follows the sources.readers convention: a filesystem path
-    writes one parquet dir per part; a catalog name prefix (e.g.
+    ``path`` follows the sources.readers convention: at a filesystem
+    path every part goes to fresh directories that one manifest rename
+    publishes as the next generation (:class:`_StateDir`), so a kill
+    leaves the previous generation and saving over the path the state
+    was loaded from is safe. A catalog name prefix (e.g.
     ``db.match_state``) writes Iceberg/catalog tables
-    ``db.match_state_docs`` etc. through write_table — on Iceberg each
-    save is an atomic snapshot commit, which is also what lets a real
-    deployment save in place (the parquet form needs a fresh dir; see
-    the CLI's --state-out note).
+    ``db.match_state_docs`` etc. through write_table, one at a time.
+    The MatchConfig persists with the state: reloaded with the default
+    one, a state built under other blocking parameters would compute
+    batch keys in the wrong key space (missed matches, no error).
 
     ``key_buckets`` (catalog targets only) hash-buckets the ``keys``
     table by ``key``. This is THE standing-state layout decision at
@@ -387,8 +491,7 @@ def save_state(state: MatchState, path: str, *, key_buckets: int | None = None) 
 
     ``scored`` (when the state carries it) persists alongside — it is
     what makes post-hoc recalibration free of the Arrow scorer (see
-    rethreshold()). States saved before the table existed (or built
-    without it) load with ``scored=None``.
+    rethreshold()). A state built without it loads with ``scored=None``.
     """
     from entitymatch_spark.sources.readers import is_table_name, write_table
 
@@ -397,88 +500,66 @@ def save_state(state: MatchState, path: str, *, key_buckets: int | None = None) 
             "key_buckets= needs a catalog-name path (bucket metadata "
             f"lives in the metastore); got {path!r}"
         )
-    if state.source_path is not None and str(path) == str(state.source_path):
-        raise ValueError(
-            f"save_state cannot overwrite the state's own source "
-            f"({path!r}): overwrite truncates each table before the plan "
-            "that still reads it executes, destroying the state mid-save. "
-            "Write to a fresh target and swap."
-        )
-    # persist the CONFIG with the tables: a state built under
-    # non-default blocking parameters reloaded with MatchConfig()
-    # silently computes batch keys in the wrong key space (missed
-    # old-new matches, no error). One row of JSON, via the same
-    # write_table path so catalog targets work too.
-    import json as _json
-    from dataclasses import asdict
-
+    parts = {
+        part: getattr(state, part) for part in (*_PARTS, "scored")
+        if getattr(state, part) is not None
+    }
+    if not is_table_name(path):
+        d = _StateDir(state.docs.sparkSession, path)
+        top = d.manifest()
+        gen = top["generation"] + 1 if top else 1
+        rels = {part: [d.write(df, part, gen)] for part, df in parts.items()}
+        d.publish(_manifest(state, gen, rels))
+        return
     spark = state.docs.sparkSession
     cfg_df = spark.createDataFrame(
-        [(_json.dumps(asdict(state.cfg)),)], "cfg_json string"
+        [(json.dumps(asdict(state.cfg)),)], "cfg_json string"
     )
-    write_table(cfg_df, _state_target(path, "cfg"))
-    for part in _PARTS:
+    write_table(cfg_df, f"{path}_cfg")
+    for part, df in parts.items():
         kw = (
             {"buckets": key_buckets, "bucket_by": "key"}
             if part == "keys" and key_buckets is not None
             else {}
         )
-        write_table(getattr(state, part), _state_target(path, part), **kw)
-    if state.scored is not None:
-        write_table(state.scored, _state_target(path, "scored"))
-
-
-def _fs_path_exists(spark: SparkSession, p: str) -> bool:
-    """Existence check through Hadoop's FileSystem API, so it answers
-    for WHATEVER filesystem the path names (s3a://, hdfs://, file://,
-    bare local) — a driver-local ``pathlib.Path.exists()`` is always
-    False for remote URIs, which would silently load ``scored=None``
-    from a state that has the table."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(p)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
+        write_table(df, f"{path}_{part}", **kw)
 
 
 def load_state(
     spark: SparkSession, path: str, cfg: MatchConfig | None = None
 ) -> MatchState:
-    """Load a :func:`save_state` save. ``match_model`` is NOT persisted
-    (the calibrated model is the caller's versioned artifact): a state
+    """Load a :func:`save_state` save (at a path: exactly what the newest
+    manifest lists), stamped with its ``source``, under the saved config
+    unless ``cfg`` is given. ``match_model`` is NOT persisted (the
+    calibrated model is the caller's versioned artifact): a state
     recalibrated with rethreshold(model=...) loads with the affine
     predicate — re-attach the model with ``dataclasses.replace(state,
     match_model=m)`` before growing or deleting from it."""
     from entitymatch_spark.sources.readers import is_table_name, read_pages
 
-    dfs = {part: read_pages(spark, _state_target(path, part)) for part in _PARTS}
-
-    def _part_exists(part: str) -> bool:
-        t = _state_target(path, part)
-        return (
-            spark.catalog.tableExists(t)
-            if is_table_name(path)
-            else _fs_path_exists(spark, f"{path}/{part}")
-        )
-
-    scored = (
-        read_pages(spark, _state_target(path, "scored"))
-        if _part_exists("scored")
-        else None
-    )
-    if cfg is None and _part_exists("cfg"):
-        # the saved config travels with the state (save_state writes
-        # it); an explicit cfg argument still wins. Unknown keys from a
-        # newer writer are dropped rather than crashing the load.
-        import json as _json
-        from dataclasses import fields as _dc_fields
-
-        raw = _json.loads(
-            read_pages(spark, _state_target(path, "cfg")).collect()[0]["cfg_json"]
-        )
-        known = {f.name for f in _dc_fields(MatchConfig)}
-        cfg = MatchConfig(**{k: v for k, v in raw.items() if k in known})
+    if is_table_name(path):
+        found = [
+            p for p in ("scored", "cfg") if spark.catalog.tableExists(f"{path}_{p}")
+        ]
+        dfs = {p: read_pages(spark, f"{path}_{p}") for p in (*_PARTS, *found)}
+        saved = None
+        if cfg is None and "cfg" in dfs:
+            saved = json.loads(dfs["cfg"].collect()[0]["cfg_json"])
+        source = (path, None)
+    else:
+        d = _StateDir(spark, path)
+        m = d.manifest()
+        if m is None:
+            raise ValueError(f"no state manifest (manifest-*.json) under {path!r}")
+        dfs = {part: d.read(rels) for part, rels in m["parts"].items()}
+        saved, source = m["config"], (d.root, (m["id"],))
+    if cfg is None and saved is not None:
+        known = {f.name for f in fields(MatchConfig)}
+        cfg = MatchConfig(**{k: v for k, v in saved.items() if k in known})
     return MatchState(
-        cfg=cfg or MatchConfig(), scored=scored, source_path=str(path), **dfs
+        docs=dfs["docs"], keys=dfs["keys"], idf=dfs["idf"],
+        clusters=dfs["clusters"], cfg=cfg or MatchConfig(),
+        scored=dfs.get("scored"), source=source,
     )
 
 
@@ -487,16 +568,23 @@ def commit_increment(result: IncrementalResult, path: str) -> None:
     with O(batch) writes — the nightly-crawl commit.
 
     :func:`save_state` rewrites every table: O(corpus) per batch, which
-    at 10^12 docs dwarfs the batch's own compute. The grow step is
-    append-only everywhere except clusters, so this commits:
+    at 10^12 docs dwarfs the batch's own compute. The grow step only
+    adds rows, except to clusters, so when the result's base is the
+    commit stored at ``path`` (the last but one id of
+    ``result.state.source``'s lineage) this commits:
 
-    - ``docs`` / ``keys`` / ``scored``: APPEND the batch deltas
-      (``new_docs``, ``new_keys``, ``scored``) — O(batch);
+    - ``docs`` / ``keys`` / ``scored``: the batch deltas (``new_docs``,
+      ``new_keys``, ``scored``) — O(batch);
     - ``idf``: untouched — it is the frozen external dictionary the
       state was built under (see :func:`initial_state`);
-    - ``clusters``: the one table with in-place mutations. On a catalog
-      with row-level deletes (Iceberg), DELETE the affected clusters'
-      rows and APPEND their recomputed rows — O(affected clusters).
+    - ``clusters``: the one table with in-place mutations. At a
+      filesystem path the deltas and the merged clusters go to fresh
+      directories, and one manifest publish adds the deltas to the
+      base's lists and replaces the clusters list; a kill at any write
+      leaves the base. The clusters rewrite is still O(corpus), but it
+      is the narrowest table (two ids per doc). On a catalog with
+      row-level deletes (Iceberg), DELETE the affected clusters' rows
+      and APPEND their recomputed rows — O(affected clusters).
       CAVEAT: the DELETE and APPEND are two separate commits, not one
       transaction — a driver failure between them leaves the affected
       clusters' rows missing until the batch is recommitted from a
@@ -504,99 +592,86 @@ def commit_increment(result: IncrementalResult, path: str) -> None:
       should replace the pair with one Iceberg ``MERGE INTO`` (row-level
       upsert in one snapshot); this module keeps the two-verb form
       because the sandbox catalog has no MERGE support to test against.
-      The session catalog and parquet dirs have no row-level ops, so
-      they fall back to one full overwrite of the clusters table from
-      a materialized plan — still O(corpus), but clusters is the
-      narrowest table (two ids per doc) and it is the ONLY table that
-      pays it; on Iceberg nothing does.
+      The session catalog has no row-level ops, so it falls back to one
+      full overwrite of the clusters table from a materialized plan.
 
-    Ordering is load-bearing: every delta is materialized (eager
-    ``localCheckpoint``) BEFORE the first write, because the result's
-    plans lazily re-scan the stored tables this function mutates —
-    e.g. appending batch docs to the stored docs table before the
-    scored delta ran would hydrate batch pairs against doubled rows.
-    The deltas are O(batch)-sized, so the cuts are cheap; the parquet
-    fallback additionally materializes the merged clusters table.
-
-    Only valid for a result produced by ``incremental_match`` over the
-    state as stored at ``path``. :func:`upsert_pages` results RETIRE
-    stored rows (their deltas are not append-only) and refuse here —
-    commit those with :func:`save_state` to a fresh target, or with
-    engine row-level ops once the deployment has them.
+    If ``path`` holds a commit outside the result's lineage (another
+    commit landed after the base was loaded) this refuses: a delta
+    would lose that commit's rows, and so would a snapshot. Any other
+    result commits as a full snapshot through :func:`save_state`: one
+    with no ``source`` (upsert_pages, a remove_docs or rethreshold
+    base), one loaded elsewhere, or the last of several grows of which
+    the earlier ones were never committed. A publish keeps only what
+    the two newest generations list, so re-load the state after a
+    commit.
     """
     from pyspark.errors import AnalysisException
 
     from entitymatch_spark.sources.readers import is_table_name, write_table
 
-    if not result.append_only:
-        raise ValueError(
-            "result retired stored rows (upsert_pages); commit_increment "
-            "is append-only — use save_state to a fresh target"
-        )
-    if not result.state.storage_synced:
-        raise ValueError(
-            "the result's base state diverged from storage (remove_docs "
-            "or rethreshold mutated it in memory after load): an "
-            "append-only delta commit would silently skip that mutation "
-            "— save_state the full state to a fresh target instead"
-        )
-    new_docs = result.new_docs.localCheckpoint(eager=True)
-    new_keys = result.new_keys.localCheckpoint(eager=True)
-    # the scored delta is only written when the state carries the table
-    # — don't pay its eager materialization (a full hydration + Arrow
-    # pass) for a state built without scored persistence
-    scored = (
-        result.scored.localCheckpoint(eager=True)
-        if result.state.scored is not None
-        else None
-    )
-    spark = new_docs.sparkSession
-
-    clusters_t = _state_target(path, "clusters")
-    committed_clusters = False
-    if is_table_name(path):
-        # affected/cluster_changed are already checkpointed or sit atop
-        # checkpointed frames in _merge_clusters; cut them here anyway —
-        # the DELETE below mutates the table their lineage references.
-        affected = result.affected_clusters.localCheckpoint(eager=True)
-        changed = result.cluster_changed.localCheckpoint(eager=True)
-        view = "em_commit_affected_clusters"
-        affected.createOrReplaceTempView(view)
-        try:
-            spark.sql(
-                f"DELETE FROM {clusters_t} WHERE cluster_id IN "
-                f"(SELECT cluster_id FROM {view})"
+    state, src = result.state, result.state.source
+    if not is_table_name(path):
+        d = _StateDir(state.docs.sparkSession, path)
+        base = d.manifest()
+        if src is None or src[0] != d.root or base is None:
+            return save_state(state, path)
+        if base["id"] not in src[1]:
+            raise ValueError(
+                f"{path!r} holds commit {base['id']} (generation "
+                f"{base['generation']}), which this result does not build on: "
+                "another commit landed after the base was loaded. Load the "
+                "state again and re-run the batch."
             )
-            write_table(changed, clusters_t, mode="append")
-            committed_clusters = True
-        except AnalysisException as exc:
-            # only the capability gap falls back (session-catalog V1
-            # tables have no row-level ops); anything else is a real
-            # error — same narrowing discipline as readers.write_table
-            cond = (
-                exc.getCondition()
-                if hasattr(exc, "getCondition")
-                else exc.getErrorClass()
-            ) or ""
-            if not (
-                "UNSUPPORTED_FEATURE" in cond
-                or "supports_delete" in str(exc)
-                or "DELETE is only supported with v2 tables" in str(exc)
-            ):
-                raise
-        finally:
-            spark.catalog.dropTempView(view)
-    if not committed_clusters:
-        # no row-level ops: one full overwrite, from a materialized
-        # plan (the lazy merged plan reads the table being replaced)
-        write_table(
-            result.state.clusters.localCheckpoint(eager=True), clusters_t
-        )
+        if src[1][-2:-1] != (base["id"],):  # an ancestor further back
+            return save_state(state, path)
+        parts, gen = base["parts"], base["generation"] + 1
+        for part, delta in (("docs", result.new_docs), ("keys", result.new_keys),
+                            ("scored", result.scored)):
+            if part in parts:
+                parts[part].append(d.write(delta, part, gen))
+        parts["clusters"] = [d.write(state.clusters, "clusters", gen)]
+        d.publish(_manifest(state, gen, parts))
+        return
+    if src != (path, None):
+        return save_state(state, path)
 
-    write_table(new_docs, _state_target(path, "docs"), mode="append")
-    write_table(new_keys, _state_target(path, "keys"), mode="append")
-    if scored is not None:
-        write_table(scored, _state_target(path, "scored"), mode="append")
+    spark = state.docs.sparkSession
+    clusters_t = f"{path}_clusters"
+    # the DELETE below mutates the table the recomputed rows' lineage
+    # reads: cut them first (affected_clusters is a cut already)
+    changed = result.cluster_changed.localCheckpoint(eager=True)
+    view = "em_commit_affected_clusters"
+    result.affected_clusters.createOrReplaceTempView(view)
+    try:
+        spark.sql(
+            f"DELETE FROM {clusters_t} WHERE cluster_id IN "
+            f"(SELECT cluster_id FROM {view})"
+        )
+        write_table(changed, clusters_t, mode="append")
+    except AnalysisException as exc:
+        # only the capability gap falls back (session-catalog V1
+        # tables have no row-level ops); anything else is a real
+        # error — same narrowing discipline as readers.write_table
+        cond = (
+            exc.getCondition()
+            if hasattr(exc, "getCondition")
+            else exc.getErrorClass()
+        ) or ""
+        if not (
+            "UNSUPPORTED_FEATURE" in cond
+            or "supports_delete" in str(exc)
+            or "DELETE is only supported with v2 tables" in str(exc)
+        ):
+            raise
+        # one full overwrite, from a materialized plan (the lazy
+        # merged plan reads the table being replaced)
+        write_table(state.clusters.localCheckpoint(eager=True), clusters_t)
+    finally:
+        spark.catalog.dropTempView(view)
+    write_table(result.new_docs, f"{path}_docs", mode="append")
+    write_table(result.new_keys, f"{path}_keys", mode="append")
+    if state.scored is not None:
+        write_table(result.scored, f"{path}_scored", mode="append")
 
 
 def rethreshold(
@@ -673,8 +748,6 @@ def rethreshold(
         docs=state.docs, keys=state.keys, idf=state.idf,
         clusters=clusters, cfg=cfg, scored=scored,
         match_model=model,
-        source_path=state.source_path,
-        storage_synced=False,  # stored clusters no longer match
     )
 
 
@@ -754,8 +827,6 @@ def remove_docs(state: MatchState, doc_ids: DataFrame) -> MatchState:
         docs=docs, keys=keys, idf=state.idf,
         clusters=unchanged.unionByName(changed), cfg=cfg, scored=scored,
         match_model=state.match_model,
-        source_path=state.source_path,
-        storage_synced=False,  # stored rows were retired in memory only
     )
 
 
@@ -768,8 +839,6 @@ def upsert_pages(state: MatchState, pages: DataFrame) -> IncrementalResult:
     incremental_match. This is the nightly-crawl shape for a corpus
     keyed by url: the same url at a newer ``warc_ts`` supersedes.
     """
-    from dataclasses import replace
-
     idc = state.cfg.id_col
     # dedup WITHIN the batch first: a nightly crawl can carry the same
     # url twice — unfiltered, both copies match in as new docs and the
@@ -800,7 +869,6 @@ def upsert_pages(state: MatchState, pages: DataFrame) -> IncrementalResult:
 
     ids = pages.select(F.col(idc).alias("doc_id"))
     present = state.docs.join(ids, "doc_id", "semi").select("doc_id")
-    res = incremental_match(remove_docs(state, present), pages)
-    # the remove leg retired stored rows: this result's deltas are not
-    # append-only relative to the stored state — commit via save_state
-    return replace(res, append_only=False)
+    # remove_docs clears the state's source, so the result commits as a
+    # full snapshot: its deltas retire stored rows, not only add them
+    return incremental_match(remove_docs(state, present), pages)

@@ -13,11 +13,14 @@ import hashlib
 import os
 import shutil
 import tempfile
+import time
 from pathlib import Path
 
 from pyspark.sql import SparkSession
 
 _PKG_ROOT = Path(__file__).resolve().parent.parent
+# a shipped zip of another checkout unused this long is removed
+_ZIP_MAX_AGE_S = 7 * 24 * 3600
 
 
 def ensure_workers_can_import(spark: SparkSession) -> None:
@@ -60,6 +63,14 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
         made.replace(final)
     finally:
         shutil.rmtree(build, ignore_errors=True)
+    # mark this zip in use; drop other digests' zips unused that long
+    final.touch()
+    for old in base.glob("entitymatch_spark-*.zip"):
+        try:
+            if old != final and old.stat().st_mtime < time.time() - _ZIP_MAX_AGE_S:
+                old.unlink()
+        except FileNotFoundError:  # a concurrent session pruned it first
+            pass
     sc.addPyFile(str(final))
     sc._entitymatch_pyfile_added = True
 

@@ -11,31 +11,28 @@ One-shot run (the original surface):
 
 State lifecycle (plans/incremental.py — the nightly-crawl deployment):
 
-    ... run_pipeline.py --mode build  --input pages  --output out --state-out st0
+    ... run_pipeline.py --mode build  --input pages  --output out --state-out st
     ... run_pipeline.py --mode grow   --input batch  --output out \
-            --state-dir st0 --state-out st1          # score only batch-touching pairs
-    ... run_pipeline.py --mode grow   --input batch2 --output out \
-            --state-dir st1 --commit-in-place        # O(batch) delta commit, no st2
+            --state-dir st               # score only batch-touching pairs
     ... run_pipeline.py --mode upsert --input recrawl --output out \
-            --state-dir st1 --state-out st2          # same-url fresher-crawl replace
+            --state-dir st               # same-url fresher-crawl replace
     ... run_pipeline.py --mode remove --delete-ids ids_parquet --output out \
-            --state-dir st2 --state-out st3          # take-down / expiry
+            --state-dir st               # take-down / expiry
     ... run_pipeline.py --mode rethreshold --threshold 0.7 --output out \
-            --state-dir st3 --state-out st4          # recalibrate, no rescoring
+            --state-dir st               # recalibrate, no rescoring
 
 Every mode writes (url, cluster_id) parquet under --output plus a
-metrics.json. State-mutating modes write the successor state to
---state-out — a NEW directory, not in place: the grown tables are
-lazy plans READING the prior state's parquet, and parquet has no
-atomic replace (an Iceberg deployment would commit a snapshot instead;
-here the prior dir stays valid until the new one is fully written —
-retire it once the write returns). The exception is grow's
---commit-in-place, which routes through commit_increment(): the
-batch's deltas are MATERIALIZED first, then appended to the standing
-tables (clusters replaced — row-level delete+append on Iceberg, full
-overwrite here), so the nightly commit costs O(batch) writes instead
-of an O(corpus) rewrite. On a cluster, master/executor sizing come
-from spark-submit flags; this script only declares plans.
+metrics.json. State modes load the state under the MatchConfig saved
+with it; --no-lsh, --idf-max-entries and --threshold may only restate
+it (in rethreshold, --threshold is the new threshold). They commit the
+successor state to --state-out, which defaults to --state-dir: in
+place. A stored state is a set of immutable part directories made
+visible by one manifest rename, so a kill mid-commit leaves the
+previous generation. grow and upsert commit through commit_increment
+(grow as O(batch) delta writes when the target holds its base);
+remove and rethreshold save the whole state. On a cluster,
+master/executor sizing come from spark-submit flags; this script only
+declares plans.
 
 The --py-files zip is optional: ensure_workers_can_import() zips and
 ships the package to executor python workers automatically (works for
@@ -76,13 +73,8 @@ def build_parser() -> argparse.ArgumentParser:
                     help="existing MatchState dir (grow/upsert/remove/"
                     "rethreshold)")
     ap.add_argument("--state-out", default=None,
-                    help="where to save the successor state (build/grow/"
-                    "upsert/remove/rethreshold); must not equal --state-dir")
-    ap.add_argument("--commit-in-place", action="store_true",
-                    help="grow only: commit the batch to --state-dir "
-                    "itself via commit_increment (O(batch) delta appends; "
-                    "clusters replaced) instead of writing a full "
-                    "successor state to --state-out")
+                    help="where to commit the successor state (build/grow/"
+                    "upsert/remove/rethreshold); default --state-dir")
     ap.add_argument("--delete-ids", default=None,
                     help="one-column parquet of ids to retire (mode=remove)")
     return ap
@@ -90,6 +82,7 @@ def build_parser() -> argparse.ArgumentParser:
 
 def run(args, spark) -> dict:
     from entitymatch_spark.plans.incremental import (
+        commit_increment,
         incremental_match,
         initial_state,
         load_state,
@@ -103,28 +96,28 @@ def run(args, spark) -> dict:
 
     ensure_workers_can_import(spark)
 
-    cfg = MatchConfig(use_lsh=not args.no_lsh)
-    if args.idf_max_entries is not None:  # else: MatchConfig's bounded default
-        cfg.idf_max_entries = args.idf_max_entries
-    if args.threshold is not None and args.mode != "rethreshold":
-        cfg.threshold = args.threshold
+    # the MatchConfig fields the caller's flags set; the rest keep
+    # MatchConfig's defaults (idf_max_entries: its bounded default)
+    flags = {
+        "--no-lsh": ("use_lsh", False if args.no_lsh else None),
+        "--idf-max-entries": ("idf_max_entries", args.idf_max_entries),
+        "--threshold": (
+            "threshold", args.threshold if args.mode != "rethreshold" else None
+        ),
+    }
+    passed = {flag: fv for flag, fv in flags.items() if fv[1] is not None}
+    cfg = MatchConfig(**dict(passed.values()))
 
     needs_input = args.mode in ("run", "build", "grow", "upsert")
     if needs_input and not args.input:
         raise SystemExit(f"--input is required for mode={args.mode}")
-    if args.commit_in_place and args.mode != "grow":
-        raise SystemExit("--commit-in-place is only valid for mode=grow")
-    if args.mode != "run":
-        if args.state_out is None and not args.commit_in_place:
-            raise SystemExit("--state-out is required for state modes")
-        if args.mode != "build" and args.state_dir is None:
-            raise SystemExit(f"--state-dir is required for mode={args.mode}")
-        if args.state_out is not None and args.state_out == args.state_dir:
-            raise SystemExit(
-                "--state-out must differ from --state-dir: the successor "
-                "state's plans read the prior dir (no in-place replace "
-                "over parquet)"
-            )
+    state_out = args.state_out or args.state_dir
+    if args.mode not in ("run", "build") and args.state_dir is None:
+        raise SystemExit(f"--state-dir is required for mode={args.mode}")
+    if args.mode == "build" and state_out is None:
+        raise SystemExit("--state-out is required for mode=build")
+    if args.mode == "remove" and not args.delete_ids:
+        raise SystemExit("--delete-ids is required for mode=remove")
 
     t0 = time.time()
     metrics: dict = {"mode": args.mode}
@@ -144,44 +137,39 @@ def run(args, spark) -> dict:
     else:
         if args.mode == "build":
             state = initial_state(spark.read.parquet(args.input), cfg)
-        elif args.mode == "grow":
-            st = load_state(spark, args.state_dir, cfg)
-            res = incremental_match(st, spark.read.parquet(args.input))
-            metrics["n_batch_pairs"] = res.pairs.count()
-            metrics["n_batch_matches"] = res.matches.count()
-            state = res.state
-        elif args.mode == "upsert":
-            st = load_state(spark, args.state_dir, cfg)
-            res = upsert_pages(st, spark.read.parquet(args.input))
-            metrics["n_batch_pairs"] = res.pairs.count()
-            metrics["n_batch_matches"] = res.matches.count()
-            state = res.state
-        elif args.mode == "remove":
-            if not args.delete_ids:
-                raise SystemExit("--delete-ids is required for mode=remove")
-            st = load_state(spark, args.state_dir, cfg)
-            state = remove_docs(st, spark.read.parquet(args.delete_ids))
-        else:  # rethreshold
-            st = load_state(spark, args.state_dir, cfg)
-            state = rethreshold(st, threshold=args.threshold)
-        if args.commit_in_place:
-            from entitymatch_spark.plans.incremental import commit_increment
-
-            commit_increment(res, args.state_dir)
-            committed_to = args.state_dir
         else:
-            save_state(state, args.state_out)
-            committed_to = args.state_out
-        # clusters were just materialized by the commit; re-read for the
-        # output copy instead of re-running the CC plan
-        saved = spark.read.parquet(f"{committed_to}/clusters")
-        saved.write.mode("overwrite").parquet(f"{args.output}/clusters")
-        # count docs from the committed dir, not state.docs: after an
-        # in-place commit that lazy plan re-reads the appended table
-        # and would double-count the batch
+            # under the config saved with it: flags may restate it,
+            # never change it (batch keys would fall in another key
+            # space; rethreshold changes the threshold)
+            st = load_state(spark, args.state_dir)
+            clash = [
+                f"{flag} ({field}={value!r}, saved {getattr(st.cfg, field)!r})"
+                for flag, (field, value) in passed.items()
+                if getattr(st.cfg, field) != value
+            ]
+            if clash:
+                raise SystemExit(
+                    f"{args.state_dir} keeps the config it was built with; "
+                    f"these flags differ from it: {', '.join(clash)}"
+                )
+        if args.mode in ("grow", "upsert"):
+            grow = incremental_match if args.mode == "grow" else upsert_pages
+            res = grow(st, spark.read.parquet(args.input))
+            metrics["n_batch_pairs"] = res.pairs.count()
+            metrics["n_batch_matches"] = res.matches.count()
+            commit_increment(res, state_out)
+        else:
+            if args.mode == "remove":
+                state = remove_docs(st, spark.read.parquet(args.delete_ids))
+            elif args.mode == "rethreshold":
+                state = rethreshold(st, threshold=args.threshold)
+            save_state(state, state_out)
+        # the commit materialized the clusters: copy the stored ones
+        # instead of re-running the CC plan
+        stored = load_state(spark, state_out)
+        stored.clusters.write.mode("overwrite").parquet(f"{args.output}/clusters")
         metrics.update(
-            n_docs=spark.read.parquet(f"{committed_to}/docs").count(),
-            n_clusters_rows=saved.count(),
+            n_docs=stored.docs.count(), n_clusters_rows=stored.clusters.count()
         )
 
     metrics["wall_sec"] = round(time.time() - t0, 2)

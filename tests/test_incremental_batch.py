@@ -51,6 +51,21 @@ def _pairs(df):
     return {(r.id_a, r.id_b) for r in df.select("id_a", "id_b").collect()}
 
 
+def _rows(df):
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()
+    )
+
+
+def _state_rows(st):
+    """Every stored part of a state, as sorted row lists, plus its config."""
+    parts = ("docs", "keys", "idf", "clusters", "scored")
+    return st.cfg, {
+        part: _rows(getattr(st, part))
+        for part in parts if getattr(st, part) is not None
+    }
+
+
 def test_incremental_equals_full_recompute(setup):
     assert _clusters(setup["inc"].state.clusters) == _clusters(
         setup["full"].clusters
@@ -175,8 +190,8 @@ def test_rethreshold_model_path(setup):
 
 
 def test_rethreshold_state_roundtrip(setup, spark, tmp_path):
-    """scored persists with the state; a pre-scored-era save loads with
-    scored=None and rethreshold refuses it loudly."""
+    """scored persists with the state; a save without it (a pre-scored-era
+    writer) loads with scored=None and rethreshold refuses it loudly."""
     from entitymatch_spark.plans.incremental import rethreshold
 
     p = str(tmp_path / "st")
@@ -187,9 +202,13 @@ def test_rethreshold_state_roundtrip(setup, spark, tmp_path):
     direct = rethreshold(setup["inc"].state, threshold=0.70)
     assert _clusters(thr.clusters) == _clusters(direct.clusters)
 
-    import shutil
+    from entitymatch_spark.plans.incremental import _StateDir
 
-    shutil.rmtree(f"{p}/scored")
+    d = _StateDir(spark, p)
+    m = d.manifest()
+    del m["parts"]["scored"]
+    m["generation"] += 1
+    d.publish(m)
     legacy = load_state(spark, p, setup["cfg"])
     assert legacy.scored is None
     with pytest.raises(ValueError, match="scored"):
@@ -381,27 +400,52 @@ def test_bucketed_write_needs_catalog(tmp_path, setup):
         save_state(setup["st0"], str(tmp_path / "st"), key_buckets=8)
 
 
-def test_commit_increment_in_place(spark, tmp_path, setup):
-    """commit_increment appends the batch deltas to the stored state IN
-    PLACE — prior data files stay untouched (the O(batch) commit
-    evidence) — and the reloaded state equals the in-memory grown one."""
+def test_commit_increment_in_place(spark, tmp_path, setup, monkeypatch):
+    """commit_increment adds the batch deltas to the stored state IN
+    PLACE — the base generation's data files stay untouched and the
+    deltas add directories (the O(batch) commit evidence) — and the
+    reloaded state equals the in-memory grown one. The grow and the
+    commit together score each batch pair exactly once."""
     from pathlib import Path
 
-    from entitymatch_spark.plans.incremental import commit_increment
+    from entitymatch_spark.operators import scoring
+    from entitymatch_spark.plans.incremental import _StateDir, commit_increment
+
+    scored_rows = spark.sparkContext.accumulator(0)
+    pair_udf = scoring._pair_udf
+
+    def counting_pair_udf(idf_bcast, default_idf=1e-5):
+        fn = pair_udf(idf_bcast, default_idf).func
+
+        def batch(*cols):
+            scored_rows.add(len(cols[0]))
+            return fn(*cols)
+
+        return F.pandas_udf(
+            batch, "struct<jw:double,cosine:double,containment:double>"
+        )
 
     path = str(tmp_path / "state")
     save_state(setup["st0"], path)
-    files_before = {
-        part: sorted(p.name for p in (Path(path) / part).glob("*.parquet"))
-        for part in ("docs", "keys", "scored")
-    }
+
+    def files(rels):
+        return {
+            str(f): f.stat().st_mtime_ns
+            for r in rels for f in (Path(path) / r).glob("*.parquet")
+        }
+
+    before = _StateDir(spark, path).manifest()["parts"]
+    files_before = {part: files(before[part]) for part in ("docs", "keys", "scored")}
     loaded = load_state(spark, path, setup["cfg"])
+    monkeypatch.setattr(scoring, "_pair_udf", counting_pair_udf)
     res = incremental_match(loaded, setup["batch"])
     commit_increment(res, path)
-    for part, before in files_before.items():
-        after = sorted(p.name for p in (Path(path) / part).glob("*.parquet"))
-        assert set(before) <= set(after), part  # appended, never rewritten
-        assert len(after) > len(before), part
+    assert scored_rows.value == res.pairs.count() > 0
+    after = _StateDir(spark, path).manifest()["parts"]
+    for part, was in files_before.items():
+        assert after[part][: len(before[part])] == before[part], part  # kept
+        assert len(after[part]) > len(before[part]), part  # delta added
+        assert files(before[part]) == was, part  # never rewritten
     grown = load_state(spark, path, setup["cfg"])
     exp = setup["inc"].state
     assert _clusters(grown.clusters) == _clusters(exp.clusters)
@@ -414,12 +458,61 @@ def test_commit_increment_in_place(spark, tmp_path, setup):
     assert _pairs(grown.scored) == _pairs(exp.scored)
 
 
-def test_commit_increment_rejects_upsert(tmp_path, setup):
+def test_commit_increment_upsert_full_snapshot(spark, tmp_path, setup):
+    """An upsert result retires stored rows, so its deltas cannot be
+    added to the stored state: commit_increment writes it as a full
+    snapshot, which reloads equal to the in-memory state."""
     from entitymatch_spark.plans.incremental import commit_increment, upsert_pages
 
-    res = upsert_pages(setup["st0"], setup["batch"].limit(3))
-    with pytest.raises(ValueError, match="append-only"):
-        commit_increment(res, str(tmp_path / "nope"))
+    path = str(tmp_path / "st_up")
+    save_state(setup["st0"], path)
+    recrawl = setup["pages"].filter(F.pmod(F.xxhash64("url"), F.lit(9)) == 4)
+    res = upsert_pages(load_state(spark, path), recrawl)
+    assert res.state.source is None
+    commit_increment(res, path)
+    assert _state_rows(load_state(spark, path)) == _state_rows(res.state)
+
+
+def test_commit_refuses_stale_base(spark, tmp_path, setup):
+    """Results grown from one loaded commit: the first commits as a
+    delta, and a second one is refused, as is a grow chained on that
+    second one (by generation number alone it looks like a delta over
+    the first commit, and committing it would drop the first batch).
+    The stored state stays the first commit. A chain grown from the
+    committed state, whose middle grow is never committed, then commits
+    as a full snapshot equal to the full recompute, and the middle grow
+    is refused after it."""
+    from entitymatch_spark.plans.incremental import _StateDir, commit_increment
+
+    path = str(tmp_path / "st_stale")
+    save_state(setup["st0"], path)
+    loaded = load_state(spark, path)
+    q = [
+        setup["batch"].filter(F.pmod(F.xxhash64("url"), F.lit(3)) == i)
+        for i in range(3)
+    ]
+    first, second = (incremental_match(loaded, b) for b in q[:2])
+    chained = incremental_match(second.state, q[0])
+    commit_increment(first, path)
+    d = _StateDir(spark, path)
+    # the commit publishes the grown state's id: a grow of it is a delta
+    assert d.manifest()["id"] == first.state.source[1][-1]
+    assert len(d.manifest()["parts"]["docs"]) == 2
+    for stale in (second, chained):
+        with pytest.raises(ValueError, match="does not build on"):
+            commit_increment(stale, path)
+    assert _state_rows(load_state(spark, path)) == _state_rows(first.state)
+
+    mid = incremental_match(first.state, q[1])
+    last = incremental_match(mid.state, q[2])
+    commit_increment(last, path)
+    m = d.manifest()
+    assert (m["generation"], len(m["parts"]["docs"])) == (3, 1)  # a snapshot
+    assert _clusters(load_state(spark, path).clusters) == _clusters(
+        setup["full"].clusters
+    )
+    with pytest.raises(ValueError, match="does not build on"):
+        commit_increment(mid, path)
 
 
 def test_commit_increment_catalog_fallback(spark, setup):
@@ -621,51 +714,62 @@ def test_save_state_persists_config(spark, tmp_path, setup):
         asdict(custom), oversize_policy="purge", cascade_min_jaccard=None,
         score_partitions="auto", lev_prefix=128,
     )
-    spark.createDataFrame([(json.dumps(raw),)], "cfg_json string").write.mode(
-        "overwrite"
-    ).parquet(f"{p}/cfg")
+    from entitymatch_spark.plans.incremental import _StateDir
+
+    d = _StateDir(spark, p)
+    m = d.manifest()
+    m["config"] = json.loads(json.dumps(raw))
+    m["generation"] += 1
+    d.publish(m)
     legacy = load_state(spark, p).cfg
     assert (legacy.num_hashes, legacy.bands, legacy.seed) == (32, 8, 7)
     # explicit cfg argument still wins
     forced = load_state(spark, p, cfg=state.cfg)
     assert forced.cfg.num_hashes == state.cfg.num_hashes
     # and the loaded state remembers where it came from
-    assert loaded.source_path == p
+    assert loaded.source == (f"file:{p}", (m["id"],))
 
 
-def test_save_state_refuses_own_source(spark, tmp_path, setup):
-    import pytest
+def test_save_state_in_place(spark, tmp_path, setup):
+    """Saving a state over the path it was loaded from is safe however
+    the path is spelled: the save writes fresh directories and never
+    touches the ones the state's plans read. A publish removes unlisted
+    directories of its generation or older, and keeps a later
+    generation's (another writer may be writing them)."""
+    p = tmp_path / "st_own"
+    with pytest.raises(ValueError, match="manifest"):  # nothing saved yet
+        load_state(spark, str(p))
+    save_state(setup["st0"], str(p))
+    # a killed write of generation 2 and a later writer's generation 99
+    (p / "docs" / "g000002-killed").mkdir()
+    (p / "docs" / "g000099-writing").mkdir()
+    want = _state_rows(setup["st0"])
+    for spelling in (str(p), f"{p}/", f"file://{p}"):
+        save_state(load_state(spark, str(p)), spelling)
+        assert _state_rows(load_state(spark, spelling)) == want, spelling
+    # a publish removes its own generation's leftovers, not a later one's
+    assert not (p / "docs" / "g000002-killed").exists()
+    assert (p / "docs" / "g000099-writing").exists()
 
-    from entitymatch_spark.plans.incremental import load_state, save_state
 
-    p = str(tmp_path / "st_own")
-    save_state(setup["st0"], p)
-    loaded = load_state(spark, p)
-    with pytest.raises(ValueError, match="own source"):
-        save_state(loaded, p)
-    save_state(loaded, str(tmp_path / "st_own2"))  # fresh target fine
-
-
-def test_commit_refuses_diverged_state(spark, tmp_path, setup):
-    """remove_docs mutates the state in memory only; growing and then
-    delta-committing that state must refuse (the commit would silently
-    skip the removal)."""
-    import pytest
-    from pyspark.sql import functions as F
-
+def test_commit_diverged_state_full_snapshot(spark, tmp_path, setup):
+    """remove_docs changes a loaded state in memory only; a grow of it
+    must not commit as a delta (that would skip the removal). It
+    commits as a full snapshot that reloads equal to the state."""
     from entitymatch_spark.plans.incremental import (
         commit_increment,
         incremental_match,
         remove_docs,
     )
 
-    state, batch = setup["st0"], setup["batch"]
-    some = state.docs.select("doc_id").limit(3)
-    shrunk = remove_docs(state, some)
-    assert not shrunk.storage_synced
-    res = incremental_match(shrunk, batch)
-    with pytest.raises(ValueError, match="diverged"):
-        commit_increment(res, str(tmp_path / "nope2"))
+    path = str(tmp_path / "st_div")
+    save_state(setup["st0"], path)
+    loaded = load_state(spark, path)
+    shrunk = remove_docs(loaded, loaded.docs.select("doc_id").limit(3))
+    assert shrunk.source is None
+    res = incremental_match(shrunk, setup["batch"])
+    commit_increment(res, path)
+    assert _state_rows(load_state(spark, path)) == _state_rows(res.state)
 
 
 def test_upsert_dedups_batch_by_newest_warc_ts(spark, setup):
@@ -690,3 +794,146 @@ def test_upsert_dedups_batch_by_newest_warc_ts(spark, setup):
 
     with pytest.raises(ValueError, match="duplicate"):
         upsert_pages(state, dup.drop("warc_ts"))
+
+
+def _tiny_state(spark, ids, cfg):
+    """A hand-built MatchState over doc ids ``ids`` (no pipeline)."""
+    from entitymatch_spark.plans.incremental import MatchState
+
+    def df(rows, ddl):
+        return spark.createDataFrame(rows, ddl)
+
+    first = f"d{min(ids)}"
+    return MatchState(
+        docs=df(
+            [(f"d{i}", f"tok{i} common", [f"tok{i}", "common"]) for i in ids],
+            "doc_id string, norm_text string, tokens array<string>",
+        ),
+        keys=df([(f"d{i}", f"k{i % 2}") for i in ids], "doc_id string, key string"),
+        idf=df([("common", 3, 0.5)], "token string, df long, idf double"),
+        clusters=df(
+            [(f"d{i}", first) for i in ids], "doc_id string, cluster_id string"
+        ),
+        cfg=cfg,
+        scored=df(
+            [(first, f"d{i}", 0.9) for i in ids if f"d{i}" != first],
+            "id_a string, id_b string, score double",
+        ),
+    )
+
+
+def test_kill_at_every_write_leaves_old_or_new_state(spark, tmp_path, monkeypatch):
+    """A kill at any write of save_state or commit_increment leaves the
+    stored state exactly as it was, a retry succeeds, and its publish
+    removes every directory the killed write left. Each run works on a
+    shutil.copytree copy of a saved state, which must load from its own
+    files and commit; the originals stay unchanged."""
+    import shutil
+    from dataclasses import replace
+    from pathlib import Path
+
+    from pyspark.sql import DataFrameWriter
+
+    from entitymatch_spark.plans import incremental
+    from entitymatch_spark.plans.incremental import (
+        IncrementalResult,
+        _StateDir,
+        commit_increment,
+    )
+
+    cfg = MatchConfig(threshold=0.7)
+    s0 = _tiny_state(spark, [1, 2, 3], cfg)
+    s1 = _tiny_state(spark, [1, 2, 4, 5], cfg)
+    delta = _tiny_state(spark, [6, 7], cfg)
+    base0, base1 = tmp_path / "base0", tmp_path / "base1"
+    save_state(s0, str(base0))
+    shutil.copytree(base0, base1)
+    save_state(s1, str(base1))
+    originals = sorted(str(f) for b in (base0, base1) for f in b.rglob("*"))
+
+    def grow(work):
+        """A grow result over the state at ``work``, built by hand:
+        batch docs d6, d7 join d1's cluster."""
+        loaded = load_state(spark, work)
+        assert all(f"{work}/" in f for f in loaded.docs.inputFiles())
+        clusters = spark.createDataFrame(
+            [(f"d{i}", "d1") for i in (1, 2, 4, 5, 6, 7)],
+            "doc_id string, cluster_id string",
+        )
+        root, ids = loaded.source
+        state = replace(
+            loaded,
+            docs=loaded.docs.unionByName(delta.docs),
+            keys=loaded.keys.unionByName(delta.keys),
+            clusters=clusters,
+            scored=loaded.scored.unionByName(delta.scored),
+            source=(root, (*ids, "grown")),
+        )
+        return IncrementalResult(
+            state=state, new_docs=delta.docs, new_keys=delta.keys,
+            pairs=delta.scored, scored=delta.scored, matches=delta.scored,
+            affected_clusters=clusters.select("cluster_id").distinct(),
+            cluster_changed=clusters,
+        )
+
+    class Killed(Exception):
+        pass
+
+    calls = {"n": 0, "kill_at": 0}
+
+    def tick():
+        calls["n"] += 1
+        if calls["n"] == calls["kill_at"]:
+            raise Killed
+
+    real_parquet, real_rename = DataFrameWriter.parquet, incremental._rename
+
+    def parquet(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        tick()  # killed after the files landed, before anything lists them
+
+    def rename(fs, src, dst):
+        tick()  # killed before the manifest is renamed into place
+        return real_rename(fs, src, dst)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(incremental, "_rename", rename)
+
+    want0, want1 = _state_rows(s0), _state_rows(s1)
+    want2 = _state_rows(grow(str(base1)).state)
+    # the save over base0 writes 5 parts and renames once; the commit
+    # over base1 writes 4 parts and renames once. The last kill_at of
+    # each runs clean and checks that count.
+    for base, op, old, new, points in (
+        (base0, lambda w: save_state(s1, w), want0, want1, 6),
+        (base1, lambda w: commit_increment(grow(w), w), want1, want2, 5),
+    ):
+        for kill_at in range(1, points + 2):
+            work = str(tmp_path / f"{base.name}_kill{kill_at}")
+            shutil.copytree(base, work)
+            calls.update(n=0, kill_at=kill_at)
+            try:
+                op(work)
+            except Killed:
+                assert _state_rows(load_state(spark, work)) == old, kill_at
+                calls["kill_at"] = 0
+                op(work)  # the retry
+            else:
+                assert (kill_at, calls["n"]) == (points + 1, points)
+            assert _state_rows(load_state(spark, work)) == new, kill_at
+
+            d = _StateDir(spark, work)
+            top = d.manifest()
+            listed = {
+                rel for m in (top, d.manifest(top["generation"] - 1))
+                for rels in m["parts"].values() for rel in rels
+            }
+            on_disk = {
+                f"{p.parent.name}/{p.name}"
+                for p in Path(work).glob("*/*") if p.is_dir()
+            }
+            assert on_disk == listed, kill_at
+            assert not list(Path(work).glob("*.tmp")), kill_at
+
+    monkeypatch.undo()
+    assert sorted(str(f) for b in (base0, base1) for f in b.rglob("*")) == originals

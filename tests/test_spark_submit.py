@@ -51,9 +51,11 @@ def test_spark_submit_pipeline(spark, tmp_path):
 
 
 def test_cli_state_lifecycle(spark, tmp_path):
-    """build -> grow -> remove -> rethreshold through the CLI's run()
-    (in-process: the spark-submit plumbing itself is proven above);
-    the final clusters must equal the same chain through the library."""
+    """build -> grow -> remove -> rethreshold -> in-place grow through
+    the CLI's run() (in-process: the spark-submit plumbing itself is
+    proven above); the clusters after the last two steps must equal the
+    same chain through the library. The last grow passes no flags, so
+    it must run under the config saved with the state."""
     import importlib.util
 
     from pyspark.sql import functions as F
@@ -72,10 +74,13 @@ def test_cli_state_lifecycle(spark, tmp_path):
     )
     gone = base.limit(50).select("url")
     d = {k: str(tmp_path / k) for k in
-         ("base", "batch", "gone", "o1", "o2", "o3", "o4", "s0", "s1", "s2", "s3")}
+         ("base", "batch", "gone", "regrow", "o1", "o2", "o3", "o4", "o5",
+          "s0", "s1", "s2", "s3")}
     base.write.parquet(d["base"])
     batch.write.parquet(d["batch"])
     gone.write.parquet(d["gone"])
+    regrow = base.join(spark.read.parquet(d["gone"]), "url", "semi")
+    regrow.write.parquet(d["regrow"])
 
     p = cli.build_parser()
     m1 = cli.run(p.parse_args(
@@ -90,9 +95,20 @@ def test_cli_state_lifecycle(spark, tmp_path):
     m4 = cli.run(p.parse_args(
         ["--mode", "rethreshold", "--threshold", "0.70", "--output", d["o4"],
          "--state-dir", d["s2"], "--state-out", d["s3"], "--no-lsh"]), spark)
+    # a flag may not change the saved config (here: the 0.70 threshold)
+    with pytest.raises(SystemExit, match="--threshold"):
+        cli.run(p.parse_args(
+            ["--mode", "grow", "--input", d["regrow"], "--output", d["o5"],
+             "--state-dir", d["s3"], "--threshold", "0.6"]), spark)
+    # --state-out defaults to --state-dir: an in-place grow of s3, with
+    # no flags: it grows under the saved config (threshold 0.70, no LSH)
+    m5 = cli.run(p.parse_args(
+        ["--mode", "grow", "--input", d["regrow"], "--output", d["o5"],
+         "--state-dir", d["s3"]]), spark)
     assert m2["n_batch_pairs"] > 0
     assert m3["n_clusters_rows"] == m2["n_clusters_rows"] - 50
     assert m4["n_clusters_rows"] == m3["n_clusters_rows"]
+    assert m5["n_clusters_rows"] == m5["n_docs"] == m4["n_clusters_rows"] + 50
 
     from entitymatch_spark.plans.incremental import (
         incremental_match, initial_state, remove_docs, rethreshold,
@@ -106,14 +122,16 @@ def test_cli_state_lifecycle(spark, tmp_path):
             gone,
         ),
         threshold=0.70,
-    ).clusters
+    )
     got = spark.read.parquet(f"{d['o4']}/clusters")
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-    with pytest.raises(SystemExit, match="state-out"):
-        cli.run(p.parse_args(
-            ["--mode", "grow", "--input", d["batch"], "--output", d["o2"],
-             "--state-dir", d["s1"], "--state-out", d["s1"]]), spark)
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, want.clusters.collect())
+    )
+    regrown = incremental_match(want, regrow).state.clusters
+    got = spark.read.parquet(f"{d['o5']}/clusters")
+    assert sorted(map(tuple, got.collect())) == sorted(
+        map(tuple, regrown.collect())
+    )
 
 
 def test_get_spark_accepts_star_cpus_env(spark, monkeypatch):
