@@ -18,9 +18,8 @@ propagation), each round a pair of groupBy/join stages:
 Convergence: the edge multiset stops changing (checked by count +
 order-insensitive hash checksum — one cheap agg per round, no join).
 Each round ends in a lineage cut (iterative plans otherwise grow
-exponentially and re-execute history every action): ``localCheckpoint``
-by default, fault-tolerant ``checkpoint()`` with ``reliable=True``
-(see connected_components).
+exponentially and re-execute history every action): a lazy
+``localCheckpoint``.
 
 The reference has no clustering (spans are per-query); this implements
 the north_star's transitive-closure stage.
@@ -90,40 +89,19 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    reliable: bool = False,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(id, component) for every node appearing in ``edges``.
 
     component = min id of the node's connected component. Callers
     handle singletons (nodes with no edges) with a left join +
     coalesce(component, id).
-
-    ``reliable``: per-round lineage cuts default to ``localCheckpoint``
-    (executor-local blocks — fast, fine on local[*]), but on a real
-    multi-executor cluster a lost executor makes the truncated lineage
-    unrecoverable. ``reliable=True`` switches to fault-tolerant
-    ``checkpoint()`` writes under ``checkpoint_dir`` (or the context's
-    already-configured checkpoint dir) — the same durability the
-    resumable pipeline gets from its write-read barriers.
     """
-    if reliable:
-        sc = edges.sparkSession.sparkContext
-        if checkpoint_dir is not None:
-            sc.setCheckpointDir(checkpoint_dir)
-        elif sc.getCheckpointDir() is None:
-            raise ValueError(
-                "reliable=True needs a checkpoint dir: pass checkpoint_dir "
-                "or call sparkContext.setCheckpointDir first"
-            )
 
     def cut(df: DataFrame) -> DataFrame:
         # localCheckpoint can be LAZY: its blocks are saved as a side
         # effect of the next action — the per-round checksum — so each
-        # round runs ONE job instead of two. Reliable checkpoint()
-        # stays eager: a lazy reliable checkpoint recomputes the plan a
-        # second time to write the files.
-        return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=False)
+        # round runs ONE job instead of two.
+        return df.localCheckpoint(eager=False)
 
     # The init cut is load-bearing, not just hygiene: A/B'd removing it
     # (iterating straight over the caller's lineage) and round 0 went

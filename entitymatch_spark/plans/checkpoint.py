@@ -6,136 +6,108 @@ completed work. The reference's analog is the keyset-paginated
 resumable scan (ref: extract/Program.cs:69-79 — resume filter computed
 from the last persisted row).
 
-Design (storage-format-agnostic; parquet locally, Iceberg tables on a
-real cluster — the manifest logic is identical, Iceberg adds snapshot
-isolation on top):
+Design: a workdir is one manifest store (``plans/store.py``, the same
+one a stored match state uses), so it takes any Hadoop path or URI
+(local, ``file://``, ``hdfs://``).
 
-- ``CheckpointManager(base_dir)`` owns a directory of stages.
-- ``stage(name, fn)``: compute-once. The output parquet is written to a
-  temp dir and atomically renamed; a manifest JSON (row count, schema,
-  duration, completion flag) commits the stage. Re-running a committed
-  stage just reads it back — lineage is cut, no recompute.
+- ``CheckpointManager(spark, workdir, config)`` owns a workdir of
+  stages. ``config`` (e.g. the MatchConfig as a dict) is recorded in
+  the manifest on the first commit; a later manager given another
+  config refuses the workdir.
+- ``stage(name, fn)``: compute-once. The output is written to a fresh
+  directory and committed by publishing the next manifest generation,
+  whose stage record holds the row count, per-file row lineage, schema,
+  duration and completion flag. Re-running a committed stage just
+  reads it back — lineage is cut, no recompute.
 - ``bucketed_stage(name, bucket_ids, fn)``: partition-level resume. The
   work is split into deterministic buckets (e.g. hash ranges of the
-  blocking key); each bucket commits independently into the manifest.
-  A kill mid-stage loses only the in-flight bucket; rerun executes
-  missing buckets only ("without rescoring completed partitions").
-- per-stage metrics (rows, seconds, buckets) append to metrics.jsonl
-  and are queryable as a DataFrame via ``metrics_df``.
+  pair ids); each bucket writes its own directory and commits its own
+  generation. A kill mid-stage loses only the in-flight bucket; rerun
+  executes missing buckets only ("without rescoring completed
+  partitions").
+- per-stage metrics (rows, seconds, buckets) are read from the stage
+  records as a DataFrame via ``metrics_df``.
 """
 
 from __future__ import annotations
 
 import json
-import shutil
+import os
 import time
 from collections.abc import Callable, Sequence
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from entitymatch_spark.plans.store import _StateDir
 
 
 class CheckpointManager:
-    def __init__(self, spark: SparkSession, base_dir: str | Path):
+    def __init__(
+        self, spark: SparkSession, workdir: str | os.PathLike, config: dict | None = None
+    ):
         self.spark = spark
-        self.base = Path(base_dir)
-        self.base.mkdir(parents=True, exist_ok=True)
-
-    # -- paths --------------------------------------------------------------
-    def _dir(self, name: str) -> Path:
-        return self.base / name
-
-    def _manifest(self, name: str) -> Path:
-        return self.base / f"{name}.manifest.json"
-
-    def _read_manifest(self, name: str) -> dict | None:
-        p = self._manifest(name)
-        if p.exists():
-            return json.loads(p.read_text())
-        return None
-
-    def _write_manifest(self, name: str, manifest: dict) -> None:
-        tmp = self._manifest(name).with_suffix(".tmp")
-        tmp.write_text(json.dumps(manifest, indent=1))
-        tmp.replace(self._manifest(name))
-
-    def _log_metric(self, rec: dict) -> None:
-        rec = {"ts": time.time(), **rec}
-        with open(self.base / "metrics.jsonl", "a") as f:
-            f.write(json.dumps(rec) + "\n")
-
-    # -- pinned run parameters -------------------------------------------
-    def pin(self, key: str, value) -> None:
-        """Record a run parameter the committed stages depend on; RAISE
-        if a previous run of this workdir recorded a different value.
-        Same guard class as bucketed_stage's bucketing string: resuming
-        committed stages under changed semantics silently returns stale
-        results built for another configuration. A pre-existing workdir
-        without the pin (legacy) records it on first call."""
-        p = self.base / "pins.json"
-        pins = json.loads(p.read_text()) if p.exists() else {}
-        sval = json.dumps(value, sort_keys=True, default=str)
-        prev = pins.get(key)
-        if prev is not None and prev != sval:
+        self.store = _StateDir(spark, str(workdir))
+        # JSON-normalized, so it compares equal to the manifest's copy
+        self.config = json.loads(json.dumps(config, default=str))
+        top = self.store.manifest()
+        if config is not None and top is not None and top["config"] != self.config:
             raise ValueError(
-                f"checkpoint workdir {self.base} was built with "
-                f"{key}={prev}; this run uses {sval}. Resuming committed "
-                "stages under a changed configuration silently returns "
-                "stale results — use a fresh workdir"
+                f"checkpoint workdir {self.store.root} was built with "
+                f"{top['config']}; this run uses {self.config}. Resuming "
+                "committed stages under a changed configuration silently "
+                "returns stale results — use a fresh workdir"
             )
-        if prev is None:
-            pins[key] = sval
-            tmp = p.with_suffix(".tmp")
-            tmp.write_text(json.dumps(pins, indent=1))
-            tmp.replace(p)
+
+    def _next(self) -> dict:
+        """The newest manifest as the draft of the next generation."""
+        m = self.store.manifest() or {
+            "generation": 0, "config": self.config,
+            "parts": {}, "schemas": {}, "stages": {},
+        }
+        m["generation"] += 1
+        return m
+
+    def _publish(self, m: dict) -> dict:
+        """Commit ``m``; returns it as the draft of the next generation."""
+        self.store.publish(m)
+        m["generation"] += 1
+        return m
+
+    def manifest(self, name: str) -> dict | None:
+        """The committed record of stage ``name``, or None."""
+        return (self.store.manifest() or {"stages": {}})["stages"].get(name)
 
     # -- whole-stage checkpoint ----------------------------------------------
-    def is_complete(self, name: str) -> bool:
-        m = self._read_manifest(name)
-        return bool(m and m.get("complete"))
-
     def stage(self, name: str, fn: Callable[[], DataFrame]) -> DataFrame:
         """Compute-once stage: runs ``fn`` only if not already committed."""
-        out = self._dir(name)
-        if self.is_complete(name):
-            return self.spark.read.parquet(str(out))
+        m = self._next()
+        if m["stages"].get(name, {}).get("complete"):
+            return self.store.read(m, name)
         t0 = time.perf_counter()
-        df = fn()
-        tmp = self.base / f"_tmp_{name}"
-        if tmp.exists():
-            shutil.rmtree(tmp)
-        df.write.mode("overwrite").parquet(str(tmp))
-        if out.exists():
-            shutil.rmtree(out)
-        tmp.replace(out)  # atomic commit of the data dir
-        persisted = self.spark.read.parquet(str(out))
+        rel = self.store.write(m, name, fn())
+        persisted = self.store.read(m, name)
         # per-partition lineage: row count per output file in one pass
         # (file name = the physical partition the rows landed in)
-        from pyspark.sql import functions as F
-
         by_file = {
-            Path(r["f"]).name: r["n"]
+            r["f"].rsplit("/", 1)[-1]: r["n"]
             for r in persisted.groupBy(F.input_file_name().alias("f"))
             .agg(F.count("*").alias("n"))
             .collect()
         }
-        rows = sum(by_file.values())
-        files = sorted(p.name for p in out.glob("*.parquet"))
-        dur = time.perf_counter() - t0
-        self._write_manifest(
-            name,
-            {
-                "stage": name,
-                "complete": True,
-                "rows": rows,
-                "n_files": len(files),
-                "files": files,
-                "rows_by_file": {f: by_file.get(f, 0) for f in files},
-                "schema": persisted.schema.simpleString(),
-                "seconds": round(dur, 3),
-            },
-        )
-        self._log_metric({"stage": name, "rows": rows, "seconds": round(dur, 3)})
+        files = sorted(n for n in self.store.ls(rel) if n.endswith(".parquet"))
+        m["stages"][name] = {
+            "stage": name,
+            "complete": True,
+            "rows": sum(by_file.values()),
+            "n_files": len(files),
+            "files": files,
+            "rows_by_file": {f: by_file.get(f, 0) for f in files},
+            "schema": persisted.schema.simpleString(),
+            "seconds": round(time.perf_counter() - t0, 3),
+            "ts": time.time(),
+        }
+        self.store.publish(m)
         return persisted
 
     # -- partition-level (bucketed) checkpoint --------------------------------
@@ -160,69 +132,65 @@ class CheckpointManager:
         whose old slices do not cover the new ones (lost rows), and the
         reverse would double-cover (duplicated rows).
         """
-        out = self._dir(name)
-        out.mkdir(parents=True, exist_ok=True)
-        m = self._read_manifest(name) or {
-            "stage": name, "complete": False, "buckets_done": [], "rows_by_bucket": {},
-        }
-        if bucketing is not None:
-            prev = m.get("bucketing")
-            if prev is None:
-                m["bucketing"] = bucketing
-                # persist NOW, not just when a bucket runs: resuming an
-                # already-complete legacy checkpoint would otherwise record
-                # the bucketing in memory only and the guard never arms
-                self._write_manifest(name, m)
-            elif prev != bucketing:
-                raise ValueError(
-                    f"bucketed stage {name!r} was checkpointed with "
-                    f"bucketing={prev!r} but is being resumed with "
-                    f"bucketing={bucketing!r}; resume with the original "
-                    f"bucketing or clear {self._dir(name)} to recompute"
-                )
-        done = set(m["buckets_done"])
+        m = self._next()
+        rec = m["stages"].setdefault(name, {
+            "stage": name, "complete": False, "buckets_done": [],
+            "rows_by_bucket": {}, "seconds_by_bucket": {}, "ts_by_bucket": {},
+            "dir_by_bucket": {},
+        })
+        # a record change that no bucket commit has published yet
+        pending = bucketing is not None and "bucketing" not in rec
+        if pending:
+            rec["bucketing"] = bucketing
+        elif bucketing is not None and rec["bucketing"] != bucketing:
+            raise ValueError(
+                f"bucketed stage {name!r} was checkpointed with "
+                f"bucketing={rec['bucketing']!r} but is being resumed with "
+                f"bucketing={bucketing!r}; resume with the original "
+                f"bucketing or use a fresh workdir to recompute"
+            )
+        wanted = set(bucket_ids)
         for b in bucket_ids:
-            if b in done:
+            if b in rec["buckets_done"]:
                 continue
             t0 = time.perf_counter()
-            df = fn(b)
-            bdir = out / f"bucket={b}"
-            tmp = out / f"_tmp_bucket_{b}"
-            if tmp.exists():
-                shutil.rmtree(tmp)
-            df.write.mode("overwrite").parquet(str(tmp))
-            if bdir.exists():
-                shutil.rmtree(bdir)
-            tmp.replace(bdir)
-            rows = self.spark.read.parquet(str(bdir)).count()
-            dur = time.perf_counter() - t0
-            m["buckets_done"] = sorted(done | {b})
-            m["rows_by_bucket"][str(b)] = rows
-            done.add(b)
-            self._write_manifest(name, m)  # commit after EVERY bucket
-            self._log_metric(
-                {"stage": name, "bucket": b, "rows": rows, "seconds": round(dur, 3)}
-            )
+            rel = self.store.write(m, name, fn(b), append=True)
+            rows = self.store.read(m, name, [rel]).count()
+            rec["buckets_done"] = sorted({*rec["buckets_done"], b})
+            rec["complete"] = wanted <= set(rec["buckets_done"])
+            rec["rows_by_bucket"][str(b)] = rows
+            rec["seconds_by_bucket"][str(b)] = round(time.perf_counter() - t0, 3)
+            rec["ts_by_bucket"][str(b)] = time.time()
+            rec["dir_by_bucket"][str(b)] = rel
+            m, pending = self._publish(m), False  # commit after EVERY bucket
         # 'complete' is relative to the most recently requested bucket set
         # (a killed run can't know the full universe it never saw).
-        complete = set(bucket_ids) <= done
-        if m.get("complete") != complete:
-            m["complete"] = complete
-            self._write_manifest(name, m)
+        complete = wanted <= set(rec["buckets_done"])
+        if pending or rec["complete"] != complete:
+            # publish NOW even when no bucket ran: resuming an
+            # already-complete stage would otherwise record the
+            # bucketing in memory only and the guard never arms
+            rec["complete"] = complete
+            self._publish(m)
         # return the REQUESTED buckets (all done by this point), not
         # every historically-done bucket — a subset request must yield
         # only that subset's rows
-        return self.spark.read.option("basePath", str(out)).parquet(
-            *[str(out / f"bucket={b}") for b in sorted(set(bucket_ids))]
+        return self.store.read(
+            m, name, [rec["dir_by_bucket"][str(b)] for b in sorted(wanted)]
         )
 
-    # one explicit schema for BOTH the empty-dir fallback and the populated
-    # read: inference on a populated file would otherwise yield a different
-    # column order/type set (and drop `bucket`, which bucketed stages log)
     METRICS_SCHEMA = "ts double, stage string, bucket long, rows long, seconds double"
 
     def metrics_df(self) -> DataFrame:
-        p = self.base / "metrics.jsonl"
-        if not p.exists():  # nothing logged yet (fresh dir / cache-hit runs)
-            return self.spark.createDataFrame([], self.METRICS_SCHEMA)
-        return self.spark.read.schema(self.METRICS_SCHEMA).json(str(p))
+        """One row per committed stage, and per committed bucket of a
+        bucketed stage (``bucket`` null for whole stages)."""
+        stages = (self.store.manifest() or {"stages": {}})["stages"]
+        rows = [
+            (r["ts"], name, None, r["rows"], r["seconds"])
+            for name, r in stages.items() if "rows" in r
+        ] + [
+            (r["ts_by_bucket"][b], name, int(b), n, r["seconds_by_bucket"][b])
+            for name, r in stages.items()
+            for b, n in r.get("rows_by_bucket", {}).items()
+        ]
+        return self.spark.createDataFrame(rows, self.METRICS_SCHEMA)

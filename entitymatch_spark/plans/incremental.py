@@ -56,7 +56,6 @@ cluster ids — with a provable full-recompute equivalence.
 from __future__ import annotations
 
 import json
-import re
 import uuid
 from dataclasses import asdict, dataclass, fields
 
@@ -74,6 +73,7 @@ from entitymatch_spark.plans.pipeline import (
     scorer_idf_map,
     scorer_layout,
 )
+from entitymatch_spark.plans.store import _StateDir
 
 
 @dataclass
@@ -348,109 +348,15 @@ def _merge_clusters(
 _PARTS = ("docs", "keys", "idf", "clusters")
 
 
-def _rename(fs, src, dst) -> bool:
-    """The publish's one atomic step; a module function so a test can
-    fail a publish exactly here."""
-    return bool(fs.rename(src, dst))
-
-
-class _StateDir:
-    """A state under a filesystem path. Each part (``docs``, ``keys``,
-    ``idf``, ``clusters``, ``scored``) is a list of directories, each
-    written once under a fresh name tagged with its generation.
-    ``manifest-<generation>.json`` names the current generation: its
-    number, a random commit ``id``, the MatchConfig and each part's
-    directories relative to the root (so a copied state still loads). A
-    kill at any write leaves the old generation or the new one. All I/O
-    goes through Hadoop's FileSystem API, so ``file://`` and ``hdfs://``
-    paths behave alike.
-
-    Writers to one path take turns. The publish refuses a generation
-    that already exists, but it checks and then renames, and a local
-    rename replaces an existing file: two writers publishing at the
-    same moment can lose one commit."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark, self._path = spark, spark._jvm.org.apache.hadoop.fs.Path
-        p = self._path(str(path))
-        self.fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        # qualified: /x/st, /x/st/ and file:///x/st name one root
-        self.root = self.fs.makeQualified(p).toString()
-
-    def _ls(self, rel: str = "") -> list[str]:
-        p = self._path(f"{self.root}/{rel}")
-        if not self.fs.exists(p):
-            return []
-        return [s.getPath().getName() for s in self.fs.listStatus(p)]
-
-    def manifest(self, generation: int | None = None) -> dict | None:
-        """The manifest of ``generation`` (default: the newest), or None."""
-        if generation is None:
-            found = (re.fullmatch(r"manifest-(\d+)\.json", n) for n in self._ls())
-            generation = max((int(m[1]) for m in found if m), default=0)
-        p = self._path(f"{self.root}/manifest-{generation:06d}.json")
-        if not self.fs.exists(p):
-            return None
-        stream, io = self.fs.open(p), self.spark._jvm.org.apache.hadoop.io
-        try:
-            return json.loads(bytes(io.IOUtils.readFullyToByteArray(stream)))
-        finally:
-            stream.close()
-
-    def write(self, df: DataFrame, part: str, generation: int) -> str:
-        """Write ``df`` to a fresh directory; returns its relative name."""
-        rel = f"{part}/g{generation:06d}-{uuid.uuid4().hex[:12]}"
-        df.write.parquet(f"{self.root}/{rel}")
-        return rel
-
-    def read(self, rels: list[str]) -> DataFrame:
-        return self.spark.read.parquet(*[f"{self.root}/{r}" for r in rels])
-
-    def publish(self, manifest: dict) -> None:
-        """Make ``manifest`` (``generation``, ``id``, ``config``,
-        ``parts``) current with one rename. Then remove manifests older
-        than the generation before it, and the temporary manifests and
-        part directories of this generation or older that neither of the
-        two lists (a killed write's leftovers): a state loaded one
-        generation back stays readable, and a later generation's writer
-        keeps its directories."""
-        gen = manifest["generation"]
-        name = f"{self.root}/manifest-{gen:06d}.json"
-        final, tmp = self._path(name), self._path(f"{name}.{uuid.uuid4().hex}.tmp")
-        out = self.fs.create(tmp, False)
-        try:
-            out.write(bytearray(json.dumps(manifest, indent=1).encode("utf-8")))
-        finally:
-            out.close()
-        if self.fs.exists(final) or not _rename(self.fs, tmp, final):
-            self.fs.delete(tmp, False)
-            raise ValueError(
-                f"generation {gen} of {self.root} already exists: another "
-                "commit landed after this one began; load the state again "
-                "and redo the change"
-            )
-        keep = {
-            rel for m in (manifest, self.manifest(gen - 1) or {"parts": {}})
-            for rels in m["parts"].values() for rel in rels
-        }
-        for n in self._ls():
-            m = re.fullmatch(r"manifest-(\d+)\.json(\..+\.tmp)?", n)
-            if m and (int(m[1]) < gen - 1 or m[2] and int(m[1]) <= gen):
-                self.fs.delete(self._path(f"{self.root}/{n}"), False)
-        for part in (*_PARTS, "scored"):
-            for n in self._ls(part):
-                m = re.match(r"g(\d+)-", n)
-                if m and int(m[1]) <= gen and f"{part}/{n}" not in keep:
-                    self.fs.delete(self._path(f"{self.root}/{part}/{n}"), True)
-
-
-def _manifest(state: MatchState, generation: int, parts: dict) -> dict:
-    """The manifest publishing ``state``: its commit id is the last of
-    its lineage (the one a grow of it names as its base), or fresh."""
+def _manifest(state: MatchState, generation: int, base: dict | None = None) -> dict:
+    """The manifest publishing ``state``, listing ``base``'s parts (none
+    by default): its commit id is the last of its lineage (the one a
+    grow of it names as its base), or fresh."""
     ids = state.source[1] if state.source is not None else None
     return {
         "generation": generation, "id": ids[-1] if ids else uuid.uuid4().hex,
-        "config": asdict(state.cfg), "parts": parts,
+        "config": asdict(state.cfg), "parts": base["parts"] if base else {},
+        "schemas": base["schemas"] if base else {},
     }
 
 
@@ -508,8 +414,10 @@ def save_state(state: MatchState, path: str, *, key_buckets: int | None = None) 
         d = _StateDir(state.docs.sparkSession, path)
         top = d.manifest()
         gen = top["generation"] + 1 if top else 1
-        rels = {part: [d.write(df, part, gen)] for part, df in parts.items()}
-        d.publish(_manifest(state, gen, rels))
+        m = _manifest(state, gen)
+        for part, df in parts.items():
+            d.write(m, part, df)
+        d.publish(m)
         return
     spark = state.docs.sparkSession
     cfg_df = spark.createDataFrame(
@@ -551,7 +459,7 @@ def load_state(
         m = d.manifest()
         if m is None:
             raise ValueError(f"no state manifest (manifest-*.json) under {path!r}")
-        dfs = {part: d.read(rels) for part, rels in m["parts"].items()}
+        dfs = {part: d.read(m, part) for part in m["parts"]}
         saved, source = m["config"], (d.root, (m["id"],))
     if cfg is None and saved is not None:
         known = {f.name for f in fields(MatchConfig)}
@@ -624,13 +532,13 @@ def commit_increment(result: IncrementalResult, path: str) -> None:
             )
         if src[1][-2:-1] != (base["id"],):  # an ancestor further back
             return save_state(state, path)
-        parts, gen = base["parts"], base["generation"] + 1
+        m = _manifest(state, base["generation"] + 1, base)
         for part, delta in (("docs", result.new_docs), ("keys", result.new_keys),
                             ("scored", result.scored)):
-            if part in parts:
-                parts[part].append(d.write(delta, part, gen))
-        parts["clusters"] = [d.write(state.clusters, "clusters", gen)]
-        d.publish(_manifest(state, gen, parts))
+            if part in m["parts"]:
+                d.write(m, part, delta, append=True)
+        d.write(m, "clusters", state.clusters)
+        d.publish(m)
         return
     if src != (path, None):
         return save_state(state, path)

@@ -11,7 +11,8 @@
 
 Every stage is a DataFrame; `match_pipeline` wires them lazily so
 Catalyst sees one plan per output. Checkpoint/resume for long jobs
-lives in plans/checkpoint.py and wraps these stages at write points.
+(plans/resumable.py) commits these stages to a manifest store
+(plans/checkpoint.py over plans/store.py).
 """
 
 from __future__ import annotations

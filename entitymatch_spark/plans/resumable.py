@@ -7,15 +7,15 @@ even a mid-stage kill loses at most one bucket):
 
     docs -> idf -> keys -> pairs -> scored[bucket 0..n) -> components
 
-On a cluster the same layout writes Iceberg tables; buckets map to
-partition predicates and the manifest to table snapshots.
+The workdir is a manifest store (plans/store.py) at any Hadoop path or
+URI; every commit publishes one manifest generation.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import os
 from functools import cache
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,25 +36,23 @@ from entitymatch_spark.plans.pipeline import (
 def resumable_match_pipeline(
     spark: SparkSession,
     pages: DataFrame,
-    workdir: str | Path,
+    workdir: str | os.PathLike,
     cfg: MatchConfig | None = None,
     n_score_buckets: int = 16,
 ) -> dict[str, DataFrame]:
     cfg = cfg or MatchConfig()
-    ck = CheckpointManager(spark, workdir)
     # EVERY config field is pinned in the workdir: a resume with a
     # changed threshold/num_hashes/weights/... would silently return
     # stages committed under the old semantics (the bucketing string
     # below guards only n_score_buckets)
-    ck.pin(
-        "match_config",
-        {f.name: getattr(cfg, f.name) for f in dataclasses.fields(cfg)},
-    )
+    ck = CheckpointManager(spark, workdir, config=dataclasses.asdict(cfg))
 
     docs = ck.stage("docs", lambda: prepare_docs(pages, cfg))
-    n_docs = docs.count()
-
-    idf = ck.stage("idf", lambda: token_idf(build_posting(docs), n_docs=n_docs))
+    # the docs count runs inside the idf stage: a resumed run whose idf
+    # is committed reads it back without counting the docs again
+    idf = ck.stage(
+        "idf", lambda: token_idf(build_posting(docs), n_docs=docs.count())
+    )
     keys = ck.stage("keys", lambda: blocking_keys(docs, idf, cfg))
     # The scorer layout is baked into the WRITTEN parquet (writes
     # preserve per-partition order, and the bucket filter below

@@ -67,8 +67,9 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--no-lsh", action="store_true")
     ap.add_argument("--idf-max-entries", type=int, default=None)
     ap.add_argument("--resume-dir", default=None,
-                    help="checkpoint dir: enables manifest commit/resume "
-                    "(mode=run only)")
+                    help="checkpoint workdir, any Hadoop path or URI "
+                    "(local, file://, hdfs://): enables manifest "
+                    "commit/resume (mode=run only)")
     ap.add_argument("--state-dir", default=None,
                     help="existing MatchState dir (grow/upsert/remove/"
                     "rethreshold)")

@@ -238,33 +238,6 @@ def test_connected_components_string_ids(spark):
     assert cl == {"b": "b", "d": "b", "lonely": "lonely"}
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """reliable=True cuts lineage through fault-tolerant checkpoint()
-    files instead of executor-local blocks (the 100x-scale durability
-    option) — identical components, and the checkpoint dir is actually
-    written. Without a configured dir it must fail fast."""
-    import pytest
-
-    rng = random.Random(7)
-    edges = [(rng.randrange(80), rng.randrange(80)) for _ in range(60)]
-    edges = [(u, v) for u, v in edges if u != v]
-    e = spark.createDataFrame(edges, "src long, dst long")
-    base = {(r["id"], r["component"])
-            for r in connected_components(e, "src", "dst").collect()}
-    # fail-fast check must run BEFORE a dir ever gets configured on this
-    # shared session context
-    if spark.sparkContext.getCheckpointDir() is None:
-        with pytest.raises(ValueError, match="checkpoint dir"):
-            connected_components(e, "src", "dst", reliable=True)
-    ckdir = tmp_path / "ck"
-    rel = {(r["id"], r["component"])
-           for r in connected_components(
-               e, "src", "dst", reliable=True, checkpoint_dir=str(ckdir)
-           ).collect()}
-    assert rel == base
-    assert any(ckdir.rglob("*")), "checkpoint() must write under the dir"
-
-
 def test_connected_components_empty(spark):
     e = spark.createDataFrame([], "src long, dst long")
     assert connected_components(e, "src", "dst").count() == 0

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import json
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,7 +23,7 @@ def test_stage_computes_once(spark, tmp_path):
     b = ck.stage("s1", fn)
     assert len(calls) == 1  # second call read the checkpoint
     assert sorted(r["x"] for r in b.collect()) == sorted(r["x"] for r in a.collect())
-    m = json.loads((tmp_path / "s1.manifest.json").read_text())
+    m = ck.manifest("s1")
     assert m["complete"] and m["rows"] == 10 and m["n_files"] >= 1
 
 
@@ -40,7 +38,7 @@ def test_bucketed_stage_resumes_mid_stage(spark, tmp_path):
     # simulated kill: only buckets 0 and 1 complete
     ck.bucketed_stage("sc", [0, 1], fn)
     assert calls == [0, 1]
-    m = json.loads((tmp_path / "sc.manifest.json").read_text())
+    m = ck.manifest("sc")
     assert m["buckets_done"] == [0, 1]
 
     # rerun with the full bucket list: only 2 and 3 are computed
@@ -48,7 +46,7 @@ def test_bucketed_stage_resumes_mid_stage(spark, tmp_path):
     out = ck2.bucketed_stage("sc", [0, 1, 2, 3], fn)
     assert calls == [0, 1, 2, 3]  # 0 and 1 NOT re-run
     assert out.count() == 20
-    m = json.loads((tmp_path / "sc.manifest.json").read_text())
+    m = ck2.manifest("sc")
     assert m["complete"] and m["buckets_done"] == [0, 1, 2, 3]
 
     # third run: nothing recomputed at all
@@ -75,7 +73,7 @@ def test_resumable_pipeline_matches_fresh_run(spark, tmp_path, small_corpus):
     assert first == second
 
     # metrics recorded for every stage
-    stages = {json.loads(l)["stage"] for l in open(tmp_path / "run" / "metrics.jsonl")}
+    stages = {r["stage"] for r in r2["checkpoints"].metrics_df().collect()}
     assert {"docs", "idf", "keys", "pairs", "scored", "components"} <= stages
 
 
@@ -130,7 +128,7 @@ def test_resumable_pipeline_kill_between_buckets(spark, tmp_path, small_corpus):
 
     ck.bucketed_stage("scored", [0, 1], bucket)  # ...kill here
 
-    manifest_before = json.loads((tmp_path / "k" / "scored.manifest.json").read_text())
+    manifest_before = ck.manifest("scored")
     rows_before = manifest_before["rows_by_bucket"]
 
     # full pipeline over the same workdir: resumes, completes buckets 2,3 only
@@ -143,7 +141,7 @@ def test_resumable_pipeline_kill_between_buckets(spark, tmp_path, small_corpus):
     ck2 = CheckpointManager(spark, tmp_path / "k")
     scored = ck2.bucketed_stage("scored", [0, 1, 2, 3], counting_bucket)
     assert calls == [2, 3], f"rescored completed buckets: {calls}"
-    manifest_after = json.loads((tmp_path / "k" / "scored.manifest.json").read_text())
+    manifest_after = ck2.manifest("scored")
     for b in ("0", "1"):
         assert manifest_after["rows_by_bucket"][b] == rows_before[b]
     assert scored.count() == sum(manifest_after["rows_by_bucket"].values())
@@ -152,11 +150,9 @@ def test_resumable_pipeline_kill_between_buckets(spark, tmp_path, small_corpus):
 def test_stage_manifest_records_per_file_lineage(spark, tmp_path):
     """north_star 'per-partition lineage': the stage manifest records a
     per-output-file row count that sums to the stage total."""
-    import json
-
     ck = CheckpointManager(spark, tmp_path / "lineage")
     ck.stage("docs", lambda: spark.range(1000).repartition(4).withColumnRenamed("id", "doc_id"))
-    m = json.loads((tmp_path / "lineage" / "docs.manifest.json").read_text())
+    m = ck.manifest("docs")
     assert m["rows"] == 1000
     assert set(m["rows_by_file"]) == set(m["files"]) and len(m["files"]) == 4
     assert sum(m["rows_by_file"].values()) == 1000
@@ -322,3 +318,115 @@ def test_resumable_pipeline_honors_oversize_policy(spark, tmp_path, small_corpus
     )
     got = sorted(map(tuple, res["pairs"].collect()))
     assert got == sorted(map(tuple, full.pairs.collect()))
+
+
+def test_resumable_pipeline_file_uri_workdir(spark, tmp_path, small_corpus, monkeypatch):
+    """A workdir given as a file:// URI (the form a cluster filesystem
+    path takes) checkpoints and resumes like a plain path, and no stray
+    relative directory named ``file:`` appears. A full resume reads
+    every stage back under its recorded schema: no Spark job runs
+    before the first action."""
+    import os
+
+    fx, pages = small_corpus
+    cfg = MatchConfig()
+    monkeypatch.chdir(tmp_path)
+    sc, runs = spark.sparkContext, []
+
+    def clusters(workdir):
+        runs.append(group := f"resumable-{len(runs)}")
+        sc.setJobGroup(group, "resumable_match_pipeline")
+        try:
+            res = resumable_match_pipeline(spark, pages, workdir, cfg, n_score_buckets=2)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        rows = sorted((r["doc_id"], r["cluster_id"]) for r in res["clusters"].collect())
+        return rows, jobs
+
+    want, _ = clusters(tmp_path / "plain")
+    uri = f"file://{tmp_path}/wd"
+    assert clusters(uri)[0] == want  # fresh run
+    assert clusters(uri) == (want, 0)  # full resume
+    assert CheckpointManager(spark, uri).manifest("scored")["complete"]
+    assert not os.path.exists("file:")
+
+
+def test_kill_at_every_checkpoint_write(spark, tmp_path, monkeypatch):
+    """A kill at any write of a stage + bucketed_stage run leaves a
+    workdir the rerun resumes: it recomputes only the killed stage or
+    bucket, keeps each earlier bucket's directory, and its publishes
+    remove every directory and temporary manifest the killed write
+    left."""
+    from pyspark.sql import DataFrameWriter
+
+    from entitymatch_spark.plans import store
+
+    class Killed(Exception):
+        pass
+
+    calls = {"n": 0, "kill_at": 0}
+
+    def tick():
+        calls["n"] += 1
+        if calls["n"] == calls["kill_at"]:
+            raise Killed
+
+    real_parquet, real_rename = DataFrameWriter.parquet, store._rename
+
+    def parquet(self, path, *args, **kwargs):
+        real_parquet(self, path, *args, **kwargs)
+        tick()  # killed after the files landed, before anything lists them
+
+    def rename(fs, src, dst):
+        tick()  # killed before the manifest is renamed into place
+        return real_rename(fs, src, dst)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    monkeypatch.setattr(store, "_rename", rename)
+
+    def run(workdir, computed):
+        ck = CheckpointManager(spark, workdir)
+
+        def head():
+            computed.append("head")
+            return spark.range(6).withColumnRenamed("id", "v")
+
+        def bucket(b):
+            computed.append(b)
+            return spark.range(b * 10, b * 10 + 3).withColumnRenamed("id", "v")
+
+        ck.stage("head", head)
+        out = ck.bucketed_stage("sc", [0, 1, 2], bucket, bucketing="pmod(h, 3)")
+        return sorted(r["v"] for r in out.collect())
+
+    clean = ["head", 0, 1, 2]
+    want = [0, 1, 2, 10, 11, 12, 20, 21, 22]
+    points = 2 * len(clean)  # one parquet write and one publish each
+    for kill_at in range(1, points + 2):
+        work = str(tmp_path / f"kill{kill_at}")
+        first, rerun = [], []
+        calls.update(n=0, kill_at=kill_at)
+        try:
+            assert run(work, first) == want
+        except Killed:
+            killed = clean.index(first[-1])
+            assert first == clean[: killed + 1], kill_at
+            before = CheckpointManager(spark, work).manifest("sc")
+            kept = before["dir_by_bucket"] if before else {}
+            calls["kill_at"] = 0
+            assert run(work, rerun) == want
+            assert rerun == clean[killed:], kill_at  # only the killed one redone
+            after = CheckpointManager(spark, work).manifest("sc")
+            assert {b: after["dir_by_bucket"][b] for b in kept} == kept, kill_at
+        else:
+            assert (kill_at, calls["n"], first) == (points + 1, points, clean)
+
+        d = store._StateDir(spark, work)
+        top = d.manifest()
+        listed = {rel for rels in top["parts"].values() for rel in rels}
+        on_disk = {
+            f"{part}/{n}" for part in d.ls(dirs=True) for n in d.ls(part)
+        }
+        assert on_disk == listed, kill_at
+        assert not [n for n in d.ls() if n.endswith(".tmp")], kill_at

@@ -129,6 +129,21 @@ def test_state_save_load_roundtrip(spark, tmp_path, setup):
     assert _clusters(res.state.clusters) == _clusters(setup["full"].clusters)
 
 
+def test_load_state_runs_no_spark_job(spark, tmp_path, setup):
+    """The manifest records each part's schema, so loading a state reads
+    no parquet footer: no schema-inference job, one per part, runs."""
+    path = str(tmp_path / "st_nojob")
+    save_state(setup["st0"], path)
+    sc = spark.sparkContext
+    sc.setJobGroup("load-state", "load_state")
+    try:
+        loaded = load_state(spark, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("load-state") == []
+    assert _state_rows(loaded) == _state_rows(setup["st0"])
+
+
 def test_rethreshold_equals_full_recompute(setup, spark):
     """A new threshold applied to the STORED scored table + one CC pass
     must equal a full pipeline re-run at that threshold — in both
@@ -834,12 +849,9 @@ def test_kill_at_every_write_leaves_old_or_new_state(spark, tmp_path, monkeypatc
 
     from pyspark.sql import DataFrameWriter
 
-    from entitymatch_spark.plans import incremental
-    from entitymatch_spark.plans.incremental import (
-        IncrementalResult,
-        _StateDir,
-        commit_increment,
-    )
+    from entitymatch_spark.plans import store
+    from entitymatch_spark.plans.incremental import IncrementalResult, commit_increment
+    from entitymatch_spark.plans.store import _StateDir
 
     cfg = MatchConfig(threshold=0.7)
     s0 = _tiny_state(spark, [1, 2, 3], cfg)
@@ -886,7 +898,7 @@ def test_kill_at_every_write_leaves_old_or_new_state(spark, tmp_path, monkeypatc
         if calls["n"] == calls["kill_at"]:
             raise Killed
 
-    real_parquet, real_rename = DataFrameWriter.parquet, incremental._rename
+    real_parquet, real_rename = DataFrameWriter.parquet, store._rename
 
     def parquet(self, path, *args, **kwargs):
         real_parquet(self, path, *args, **kwargs)
@@ -897,7 +909,7 @@ def test_kill_at_every_write_leaves_old_or_new_state(spark, tmp_path, monkeypatc
         return real_rename(fs, src, dst)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
-    monkeypatch.setattr(incremental, "_rename", rename)
+    monkeypatch.setattr(store, "_rename", rename)
 
     want0, want1 = _state_rows(s0), _state_rows(s1)
     want2 = _state_rows(grow(str(base1)).state)
