@@ -142,56 +142,36 @@ def hydration_exprs(
     ]
 
 
-def hydration_side(
-    docs: DataFrame,
-    suffix: str,
-    id_col: str = "doc_id",
-    text_col: str = "norm_text",
-    tokens_col: str = "tokens",
-) -> DataFrame:
+def hydration_side(docs: DataFrame, suffix: str) -> DataFrame:
     """Per-DOC precompute for one side of the pair scorer: prefix
     slices, distinct token set, joined token string (docs << pairs, so
     anything computable per doc is never recomputed per pair)."""
-    return docs.select(
-        F.col(id_col).alias(f"id_{suffix}"),
-        *hydration_exprs(suffix, text_col, tokens_col),
-    )
+    return docs.select(F.col("doc_id").alias(f"id_{suffix}"), *hydration_exprs(suffix))
 
 
 def score_pairs(
     pairs: DataFrame,
     docs: DataFrame,
     idf_map: dict[str, float],
-    id_col: str = "doc_id",
-    text_col: str = "norm_text",
-    tokens_col: str = "tokens",
     weights: dict[str, float] | None = None,
-    threshold: float | None = None,
     default_idf: float = 1e-5,
 ) -> DataFrame:
-    """Score (id_a, id_b) candidate pairs against docs(id, text, tokens).
+    """Score (id_a, id_b) candidate pairs against docs(doc_id,
+    norm_text, tokens).
 
-    Returns pairs + feature columns + blended ``score`` (+ filter when
-    ``threshold`` given). All joins are equi-joins on the doc id.
+    Returns pairs + feature columns + blended ``score``; the match cut
+    is plans.pipeline.match_stage. All joins are equi-joins on the doc
+    id.
     """
-    sides = [
-        hydration_side(docs, s, id_col, text_col, tokens_col) for s in ("a", "b")
-    ]
+    sides = [hydration_side(docs, s) for s in ("a", "b")]
     hydrated = pairs.join(sides[0], "id_a").join(sides[1], "id_b")
-    return score_hydrated(
-        hydrated,
-        idf_map,
-        weights=weights,
-        threshold=threshold,
-        default_idf=default_idf,
-    )
+    return score_hydrated(hydrated, idf_map, weights=weights, default_idf=default_idf)
 
 
 def score_hydrated(
     hydrated: DataFrame,
     idf_map: dict[str, float],
     weights: dict[str, float] | None = None,
-    threshold: float | None = None,
     default_idf: float = 1e-5,
 ) -> DataFrame:
     """Feature + blend stage over an already-hydrated pair table
@@ -238,7 +218,4 @@ def score_hydrated(
         )
     )
     score = sum(F.col(k) * F.lit(w) for k, w in weights.items())
-    out = feats.withColumn("score", score)
-    if threshold is not None:
-        out = out.filter(F.col("score") >= threshold)
-    return out
+    return feats.withColumn("score", score)

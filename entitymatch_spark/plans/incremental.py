@@ -56,8 +56,9 @@ cluster ids — with a provable full-recompute equivalence.
 from __future__ import annotations
 
 import json
+import math
 import uuid
-from dataclasses import asdict, dataclass, fields
+from dataclasses import asdict, dataclass, fields, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,6 +69,7 @@ from entitymatch_spark.plans.pipeline import (
     MatchConfig,
     blocking_keys,
     match_pipeline,
+    match_stage,
     prepare_docs,
     score_stage,
     scorer_idf_map,
@@ -83,6 +85,12 @@ class MatchState:
     ``keys`` is the RAW (un-purged) blocking-key table: the purge cap
     is a property of a block's CURRENT size, so it is re-evaluated per
     batch over union blocks, never baked into the state.
+
+    ``cfg`` is the state's one match predicate (``score`` over its
+    ``weights`` >= its ``threshold``, plans.pipeline.match_stage): it
+    decided ``clusters``, every grow and delete re-derives edges with
+    it, and it is saved with the state. A ``CalibratedModel`` applied
+    by rethreshold(model=) rides it as the equivalent affine blend.
     """
 
     docs: DataFrame      # (doc_id, norm_text, tokens)
@@ -91,39 +99,20 @@ class MatchState:
     clusters: DataFrame  # (doc_id, cluster_id), cluster_id = min member id
     cfg: MatchConfig
     # (id_a, id_b, features..., score): every candidate pair ever
-    # scored. Optional — carrying it makes recalibration FREE of the
-    # Arrow scorer: a new threshold or blend re-derives matches with
-    # pure column math over this table (see rethreshold()). Disjoint
-    # across batches by construction: a pair is generated only when a
-    # block gains its first batch member, and both endpoints are
-    # corpus members from the next batch on (old-old pairs are never
-    # re-emitted).
-    scored: DataFrame | None = None
-    # The state's MATCH PREDICATE when it is not the affine blend: set
-    # by rethreshold(model=...) to the CalibratedModel whose logistic
-    # blend + probability threshold decided ``clusters``. Every edge
-    # re-derivation over ``scored`` (incremental_match, remove_docs,
-    # upsert_pages — see _match_edges) applies it, so grown/shrunk
-    # clusters stay coherent with the recalibrated ones instead of
-    # silently mixing model-derived and affine-derived components.
-    # NOT persisted by save_state (the model is the caller's versioned
-    # artifact); re-attach after load_state with dataclasses.replace.
-    match_model: object | None = None
+    # scored — what makes recalibration FREE of the Arrow scorer: a new
+    # threshold or blend re-derives matches with pure column math over
+    # this table (see rethreshold()), and what remove_docs re-derives
+    # surviving edges from. Disjoint across batches by construction: a
+    # pair is generated only when a block gains its first batch member,
+    # and both endpoints are corpus members from the next batch on
+    # (old-old pairs are never re-emitted).
+    scored: DataFrame
     # (qualified path, lineage) set by load_state: the lineage starts
     # with the id of the manifest read, and each grow appends a fresh
     # id, the one its commit publishes. A catalog prefix has no lineage
     # (None). None (remove_docs, rethreshold, upsert_pages) commits as a
     # full snapshot. See commit_increment.
     source: tuple[str, tuple[str, ...] | None] | None = None
-
-
-def _match_edges(state: "MatchState", scored: DataFrame) -> DataFrame:
-    """The state's match predicate over a scored-pair frame: the
-    calibrated model when the state carries one, else the affine
-    ``score >= cfg.threshold`` cut."""
-    if state.match_model is not None:
-        return state.match_model.matches(scored)
-    return scored.filter(F.col("score") >= state.cfg.threshold)
 
 
 @dataclass
@@ -264,9 +253,7 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
     scored = score_stage(
         pairs, docs_union, *scorer_idf_map(state.idf, cfg), cfg
     ).localCheckpoint(eager=True)
-    # the STATE's predicate (model when recalibrated, else affine) so
-    # grown clusters stay coherent with the stored ones
-    matches = _match_edges(state, scored)
+    matches = match_stage(scored, cfg)
 
     clusters, affected, changed = _merge_clusters(state.clusters, matches, new_docs)
 
@@ -279,10 +266,7 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
         idf=state.idf,
         clusters=clusters,
         cfg=cfg,
-        scored=(
-            state.scored.unionByName(scored) if state.scored is not None else None
-        ),
-        match_model=state.match_model,
+        scored=state.scored.unionByName(scored),
         source=source,
     )
     return IncrementalResult(
@@ -345,7 +329,7 @@ def _merge_clusters(
 
 # --- state persistence -------------------------------------------------
 
-_PARTS = ("docs", "keys", "idf", "clusters")
+_PARTS = ("docs", "keys", "idf", "clusters", "scored")
 
 
 def _manifest(state: MatchState, generation: int, base: dict | None = None) -> dict:
@@ -370,9 +354,12 @@ def save_state(state: MatchState, path: str, *, key_buckets: int | None = None) 
     was loaded from is safe. A catalog name prefix (e.g.
     ``db.match_state``) writes Iceberg/catalog tables
     ``db.match_state_docs`` etc. through write_table, one at a time.
-    The MatchConfig persists with the state: reloaded with the default
-    one, a state built under other blocking parameters would compute
-    batch keys in the wrong key space (missed matches, no error).
+    The MatchConfig persists with the state, and :func:`load_state`
+    loads under it: reloaded with the default one, a state built under
+    other blocking parameters would compute batch keys in the wrong key
+    space (missed matches, no error), and a recalibrated one would grow
+    under the old match predicate. A ``CalibratedModel`` applied by
+    rethreshold(model=) is saved as that config's blend and threshold.
 
     ``key_buckets`` (catalog targets only) hash-buckets the ``keys``
     table by ``key``. This is THE standing-state layout decision at
@@ -395,9 +382,8 @@ def save_state(state: MatchState, path: str, *, key_buckets: int | None = None) 
     write doubles as its durable materialization — the natural batch
     boundary a nightly-crawl job commits at.
 
-    ``scored`` (when the state carries it) persists alongside — it is
-    what makes post-hoc recalibration free of the Arrow scorer (see
-    rethreshold()). A state built without it loads with ``scored=None``.
+    ``scored`` persists alongside — it is what makes post-hoc
+    recalibration free of the Arrow scorer (see rethreshold()).
     """
     from entitymatch_spark.sources.readers import is_table_name, write_table
 
@@ -406,10 +392,7 @@ def save_state(state: MatchState, path: str, *, key_buckets: int | None = None) 
             "key_buckets= needs a catalog-name path (bucket metadata "
             f"lives in the metastore); got {path!r}"
         )
-    parts = {
-        part: getattr(state, part) for part in (*_PARTS, "scored")
-        if getattr(state, part) is not None
-    }
+    parts = {part: getattr(state, part) for part in _PARTS}
     if not is_table_name(path):
         d = _StateDir(state.docs.sparkSession, path)
         top = d.manifest()
@@ -433,26 +416,17 @@ def save_state(state: MatchState, path: str, *, key_buckets: int | None = None) 
         write_table(df, f"{path}_{part}", **kw)
 
 
-def load_state(
-    spark: SparkSession, path: str, cfg: MatchConfig | None = None
-) -> MatchState:
+def load_state(spark: SparkSession, path: str) -> MatchState:
     """Load a :func:`save_state` save (at a path: exactly what the newest
-    manifest lists), stamped with its ``source``, under the saved config
-    unless ``cfg`` is given. ``match_model`` is NOT persisted (the
-    calibrated model is the caller's versioned artifact): a state
-    recalibrated with rethreshold(model=...) loads with the affine
-    predicate — re-attach the model with ``dataclasses.replace(state,
-    match_model=m)`` before growing or deleting from it."""
+    manifest lists), stamped with its ``source``, under the config it
+    was saved with — the state's one match predicate, a model applied
+    by rethreshold(model=) included. Saved options MatchConfig no longer
+    has are dropped."""
     from entitymatch_spark.sources.readers import is_table_name, read_pages
 
     if is_table_name(path):
-        found = [
-            p for p in ("scored", "cfg") if spark.catalog.tableExists(f"{path}_{p}")
-        ]
-        dfs = {p: read_pages(spark, f"{path}_{p}") for p in (*_PARTS, *found)}
-        saved = None
-        if cfg is None and "cfg" in dfs:
-            saved = json.loads(dfs["cfg"].collect()[0]["cfg_json"])
+        dfs = {p: read_pages(spark, f"{path}_{p}") for p in _PARTS}
+        saved = json.loads(read_pages(spark, f"{path}_cfg").collect()[0]["cfg_json"])
         source = (path, None)
     else:
         d = _StateDir(spark, path)
@@ -461,14 +435,9 @@ def load_state(
             raise ValueError(f"no state manifest (manifest-*.json) under {path!r}")
         dfs = {part: d.read(m, part) for part in m["parts"]}
         saved, source = m["config"], (d.root, (m["id"],))
-    if cfg is None and saved is not None:
-        known = {f.name for f in fields(MatchConfig)}
-        cfg = MatchConfig(**{k: v for k, v in saved.items() if k in known})
-    return MatchState(
-        docs=dfs["docs"], keys=dfs["keys"], idf=dfs["idf"],
-        clusters=dfs["clusters"], cfg=cfg or MatchConfig(),
-        scored=dfs.get("scored"), source=source,
-    )
+    known = {f.name for f in fields(MatchConfig)}
+    cfg = MatchConfig(**{k: v for k, v in saved.items() if k in known})
+    return MatchState(**{p: dfs[p] for p in _PARTS}, cfg=cfg, source=source)
 
 
 def commit_increment(result: IncrementalResult, path: str) -> None:
@@ -535,8 +504,7 @@ def commit_increment(result: IncrementalResult, path: str) -> None:
         m = _manifest(state, base["generation"] + 1, base)
         for part, delta in (("docs", result.new_docs), ("keys", result.new_keys),
                             ("scored", result.scored)):
-            if part in m["parts"]:
-                d.write(m, part, delta, append=True)
+            d.write(m, part, delta, append=True)
         d.write(m, "clusters", state.clusters)
         d.publish(m)
         return
@@ -578,8 +546,7 @@ def commit_increment(result: IncrementalResult, path: str) -> None:
         spark.catalog.dropTempView(view)
     write_table(result.new_docs, f"{path}_docs", mode="append")
     write_table(result.new_keys, f"{path}_keys", mode="append")
-    if state.scored is not None:
-        write_table(result.scored, f"{path}_scored", mode="append")
+    write_table(result.scored, f"{path}_scored", mode="append")
 
 
 def rethreshold(
@@ -607,10 +574,16 @@ def rethreshold(
       - ``threshold``: new cut on the existing affine ``score``;
       - ``weights`` (+ optional ``threshold``): re-blend the stored
         feature columns, cut at the new/current threshold;
-      - ``model``: an ``operators.calibrate.CalibratedModel`` — its
-        logistic blend and probability threshold decide the matches
-        (``state.cfg`` keeps the affine settings; the model is the
-        caller's artifact to version).
+      - ``model``: an ``operators.calibrate.CalibratedModel``. Its
+        logistic cut ``sigmoid(bias + w·f) >= p`` holds exactly when
+        ``w·f >= logit(p) - bias``, so it runs as the ``weights`` shape
+        with ``weights = model.weights`` and ``threshold = logit(p) -
+        bias``; ``p`` must lie in (0, 1).
+
+    The returned state's ``cfg`` and ``scored.score`` carry the new
+    blend, so a model or weights ride the saved config: a later grow,
+    delete or reload matches under the predicate that decided its
+    clusters.
 
     Retention dial: the scored table is the recalibration asset and
     grows with every batch. If recalibration below some floor will
@@ -619,43 +592,30 @@ def rethreshold(
     exact (re-BLENDS need the full table: a new weighting can lift a
     pair from any score).
     """
-    if state.scored is None:
-        raise ValueError(
-            "state carries no scored-pair table (loaded from a save made "
-            "before scored persistence existed?); rethreshold needs it"
-        )
     if model is not None:
         if threshold is not None or weights is not None:
             raise ValueError("pass either model= or threshold=/weights=, not both")
-        cfg = state.cfg
-        scored = state.scored
-        matches = model.matches(scored)
-    else:
-        from dataclasses import replace
-
-        cfg = state.cfg
-        if threshold is not None:
-            cfg = replace(cfg, threshold=threshold)
-        scored = state.scored
-        if weights is not None:
-            cfg = replace(cfg, weights=dict(weights))
-            blend = sum(
-                (F.col(k) * F.lit(w) for k, w in weights.items()), F.lit(0.0)
+        p = model.threshold
+        if not 0.0 < p < 1.0:
+            raise ValueError(
+                f"model threshold {p!r} is a probability and must lie in (0, 1)"
             )
-            scored = scored.withColumn("score", blend)
-        matches = scored.filter(F.col("score") >= cfg.threshold)
+        weights, threshold = model.weights, math.log(p / (1.0 - p)) - model.bias
+    cfg = state.cfg
+    if threshold is not None:
+        cfg = replace(cfg, threshold=threshold)
+    scored = state.scored
+    if weights is not None:
+        cfg = replace(cfg, weights=dict(weights))
+        blend = sum((F.col(k) * F.lit(w) for k, w in weights.items()), F.lit(0.0))
+        scored = scored.withColumn("score", blend)
     components = connected_components(
-        matches.select("id_a", "id_b"), src="id_a", dst="id_b"
+        match_stage(scored, cfg).select("id_a", "id_b"), src="id_a", dst="id_b"
     )
     clusters = assign_clusters(state.docs.select("doc_id"), components)
-    # record the predicate that decided these clusters: the model rides
-    # the state so later grow/delete re-derivations (_match_edges) stay
-    # coherent; a threshold/weights recalibration RESETS to affine —
-    # cfg now carries the new blend
     return MatchState(
         docs=state.docs, keys=state.keys, idf=state.idf,
         clusters=clusters, cfg=cfg, scored=scored,
-        match_model=model,
     )
 
 
@@ -685,11 +645,6 @@ def remove_docs(state: MatchState, doc_ids: DataFrame) -> MatchState:
     tests/test_incremental_batch.py including min-member deletion
     (cluster ids re-anchor to the new min) and whole-cluster deletion.
     """
-    if state.scored is None:
-        raise ValueError(
-            "state carries no scored-pair table; remove_docs re-derives "
-            "surviving match edges from it (rescoring nothing)"
-        )
     if len(doc_ids.columns) != 1:
         raise ValueError(f"doc_ids must be one column, got {doc_ids.columns}")
     cfg = state.cfg
@@ -723,8 +678,7 @@ def remove_docs(state: MatchState, doc_ids: DataFrame) -> MatchState:
         .select("doc_id")
     )
     edges = (
-        _match_edges(state, scored)  # model-aware: must equal the
-        # predicate that decided the stored clusters (see MatchState)
+        match_stage(scored, cfg)
         .select("id_a", "id_b")
         .join(remaining.withColumnRenamed("doc_id", "id_a"), "id_a", "semi")
     )
@@ -734,7 +688,6 @@ def remove_docs(state: MatchState, doc_ids: DataFrame) -> MatchState:
     return MatchState(
         docs=docs, keys=keys, idf=state.idf,
         clusters=unchanged.unionByName(changed), cfg=cfg, scored=scored,
-        match_model=state.match_model,
     )
 
 

@@ -247,6 +247,14 @@ def score_stage(
     )
 
 
+def match_stage(scored: DataFrame, cfg: MatchConfig) -> DataFrame:
+    """THE match predicate: the scored pairs whose blend clears
+    ``cfg.threshold``. A calibrated logistic model is one such cut too
+    (incremental.rethreshold translates it into ``cfg``), so every path
+    that turns scores into edges calls this."""
+    return scored.filter(F.col("score") >= cfg.threshold)
+
+
 def match_pipeline(
     pages: DataFrame, cfg: MatchConfig | None = None, idf: DataFrame | None = None
 ) -> MatchResult:
@@ -274,7 +282,7 @@ def match_pipeline(
         pairs = pairs.persist()
     idf_map, default_idf = scorer_idf_map(idf, cfg)
     scored = score_stage(pairs, docs, idf_map, default_idf, cfg)
-    matches = scored.filter(F.col("score") >= cfg.threshold)
+    matches = match_stage(scored, cfg)
 
     def _clusters() -> DataFrame:
         components = connected_components(

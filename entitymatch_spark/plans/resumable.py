@@ -26,6 +26,7 @@ from entitymatch_spark.plans.checkpoint import CheckpointManager
 from entitymatch_spark.plans.pipeline import (
     MatchConfig,
     blocking_keys,
+    match_stage,
     pair_stage,
     prepare_docs,
     score_stage,
@@ -86,7 +87,7 @@ def resumable_match_pipeline(
     components = ck.stage(
         "components",
         lambda: connected_components(
-            scored.filter(F.col("score") >= cfg.threshold).select("id_a", "id_b"),
+            match_stage(scored, cfg).select("id_a", "id_b"),
             "id_a",
             "id_b",
         ),

@@ -6,14 +6,17 @@ import signal
 import subprocess
 import sys
 import textwrap
+from pathlib import Path
 
 from entitymatch_spark.plans.checkpoint import CheckpointManager
 
 
+REPO = str(Path(__file__).resolve().parents[1])
+
 _KILL_SCRIPT = textwrap.dedent(
     """
     import sys, os
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, sys.argv[3])  # the checkout under test
     from entitymatch_spark.session import get_spark
     from entitymatch_spark.plans.pipeline import MatchConfig
     from entitymatch_spark.plans.resumable import resumable_match_pipeline
@@ -59,7 +62,7 @@ def test_sigkill_mid_scoring_then_resume(spark, tmp_path):
     work = tmp_path / "wk"
 
     p = subprocess.run(
-        [sys.executable, str(script), str(work), "2"],
+        [sys.executable, str(script), str(work), "2", REPO],
         capture_output=True, text=True, timeout=420,
     )
     assert p.returncode == -signal.SIGKILL or p.returncode == 137, p.returncode
@@ -68,7 +71,7 @@ def test_sigkill_mid_scoring_then_resume(spark, tmp_path):
     assert 0 < len(done_before) < 4  # died mid-stage
 
     p2 = subprocess.run(
-        [sys.executable, str(script), str(work), "-1"],
+        [sys.executable, str(script), str(work), "-1", REPO],
         capture_output=True, text=True, timeout=420,
     )
     assert p2.returncode == 0, p2.stderr[-2000:]
@@ -83,7 +86,7 @@ def test_sigkill_mid_scoring_then_resume(spark, tmp_path):
     assert f"BUCKET_COMMITS {4 - len(done_before)}" in p2.stdout.splitlines()
 
     p3 = subprocess.run(
-        [sys.executable, str(script), str(tmp_path / "fresh"), "-1"],
+        [sys.executable, str(script), str(tmp_path / "fresh"), "-1", REPO],
         capture_output=True, text=True, timeout=420,
     )
     assert p3.returncode == 0

@@ -60,10 +60,7 @@ def _rows(df):
 def _state_rows(st):
     """Every stored part of a state, as sorted row lists, plus its config."""
     parts = ("docs", "keys", "idf", "clusters", "scored")
-    return st.cfg, {
-        part: _rows(getattr(st, part))
-        for part in parts if getattr(st, part) is not None
-    }
+    return st.cfg, {part: _rows(getattr(st, part)) for part in parts}
 
 
 def test_incremental_equals_full_recompute(setup):
@@ -124,7 +121,7 @@ def test_unrelated_batch_leaves_clusters_verbatim(spark, setup):
 def test_state_save_load_roundtrip(spark, tmp_path, setup):
     path = str(tmp_path / "state")
     save_state(setup["st0"], path)
-    loaded = load_state(spark, path, setup["cfg"])
+    loaded = load_state(spark, path)
     res = incremental_match(loaded, setup["batch"])
     assert _clusters(res.state.clusters) == _clusters(setup["full"].clusters)
 
@@ -180,7 +177,10 @@ def test_rethreshold_reblend_weights(setup):
 
 def test_rethreshold_model_path(setup):
     """CalibratedModel route: the model's logistic blend + probability
-    cut decides the edge set; clusters follow from one CC pass."""
+    cut decides the edge set; clusters follow from one CC pass. A
+    probability cut outside (0, 1) is refused."""
+    from dataclasses import replace
+
     from entitymatch_spark.operators.calibrate import CalibratedModel
     from entitymatch_spark.operators.clustering import (
         assign_clusters,
@@ -202,32 +202,57 @@ def test_rethreshold_model_path(setup):
     assert _clusters(out.clusters) == _clusters(want)
     with pytest.raises(ValueError):
         rethreshold(st, threshold=0.7, model=model)
+    for p in (0.0, 1.0, 1.5):
+        with pytest.raises(ValueError, match=f"threshold {p!r}"):
+            rethreshold(st, model=replace(model, threshold=p))
 
 
 def test_rethreshold_state_roundtrip(setup, spark, tmp_path):
-    """scored persists with the state; a save without it (a pre-scored-era
-    writer) loads with scored=None and rethreshold refuses it loudly."""
+    """scored persists with the state, so a reloaded state rethresholds
+    like the in-memory one."""
     from entitymatch_spark.plans.incremental import rethreshold
 
     p = str(tmp_path / "st")
     save_state(setup["inc"].state, p)
-    loaded = load_state(spark, p, setup["cfg"])
-    assert loaded.scored is not None
+    loaded = load_state(spark, p)
     thr = rethreshold(loaded, threshold=0.70)
     direct = rethreshold(setup["inc"].state, threshold=0.70)
     assert _clusters(thr.clusters) == _clusters(direct.clusters)
 
-    from entitymatch_spark.plans.incremental import _StateDir
 
-    d = _StateDir(spark, p)
-    m = d.manifest()
-    del m["parts"]["scored"]
-    m["generation"] += 1
-    d.publish(m)
-    legacy = load_state(spark, p, setup["cfg"])
-    assert legacy.scored is None
-    with pytest.raises(ValueError, match="scored"):
-        rethreshold(legacy, threshold=0.70)
+def test_model_rethreshold_survives_save_load_grow(setup, spark, tmp_path):
+    """A CalibratedModel applied by rethreshold rides the saved config:
+    save, load, grow and commit the recalibrated base, and the grown
+    clusters are the closure of the MODEL's matches over the union
+    scored table, not of the affine cut the state was built with."""
+    import math
+
+    from entitymatch_spark.operators.calibrate import CalibratedModel
+    from entitymatch_spark.operators.clustering import (
+        assign_clusters,
+        connected_components,
+    )
+    from entitymatch_spark.plans.incremental import commit_increment, rethreshold
+
+    model = CalibratedModel(
+        weights={"cosine": 6.0, "jw": 2.0, "lev_sim": 1.0,
+                 "jaccard": 1.0, "containment": 1.0},
+        bias=-6.0, threshold=0.99,
+    )
+    path = str(tmp_path / "st_model")
+    save_state(rethreshold(setup["st0"], model=model), path)
+    loaded = load_state(spark, path)
+    assert loaded.cfg.weights == model.weights
+    assert loaded.cfg.threshold == math.log(0.99 / (1 - 0.99)) + 6.0
+    commit_increment(incremental_match(loaded, setup["batch"]), path)
+    grown = load_state(spark, path)
+    comp = connected_components(
+        model.matches(grown.scored).select("id_a", "id_b"), src="id_a", dst="id_b"
+    )
+    want = assign_clusters(grown.docs.select("doc_id"), comp)
+    assert _clusters(grown.clusters) == _clusters(want)
+    # the model's cut differs from the affine one on this corpus
+    assert _clusters(want) != _clusters(setup["full"].clusters)
 
 
 def test_remove_docs_equals_full_recompute(setup):
@@ -297,16 +322,6 @@ def test_remove_whole_cluster(setup):
     assert _clusters(out.clusters) == sorted(r for r in rows if r[1] != cid)
 
 
-def test_remove_docs_requires_scored(setup):
-    from dataclasses import replace
-
-    from entitymatch_spark.plans.incremental import remove_docs
-
-    st = replace(setup["inc"].state, scored=None)
-    with pytest.raises(ValueError, match="scored"):
-        remove_docs(st, st.docs.select("doc_id").limit(1))
-
-
 def test_upsert_unchanged_pages_is_cluster_noop(setup):
     """Re-crawling pages with identical text (same url, fresher crawl)
     lands back on the full-run cluster map."""
@@ -351,7 +366,7 @@ def test_state_catalog_roundtrip(spark, setup):
     try:
         assert spark.catalog.tableExists(f"{prefix}_docs")
         assert spark.catalog.tableExists(f"{prefix}_scored")
-        loaded = load_state(spark, prefix, setup["cfg"])
+        loaded = load_state(spark, prefix)
         assert loaded.scored is not None
         res = incremental_match(loaded, setup["batch"])
         assert _clusters(res.state.clusters) == _clusters(setup["full"].clusters)
@@ -384,7 +399,7 @@ def test_state_bucketed_keys_standing_side_never_shuffles(spark, setup):
     # DisableUnnecessaryBucketedScan re-shuffles both sides (docstring)
     save_state(setup["st0"], prefix, key_buckets=8)
     try:
-        loaded = load_state(spark, prefix, setup["cfg"])
+        loaded = load_state(spark, prefix)
         batch_keys = (
             blocking_keys(
                 prepare_docs(setup["batch"], setup["cfg"]), loaded.idf, loaded.cfg
@@ -451,7 +466,7 @@ def test_commit_increment_in_place(spark, tmp_path, setup, monkeypatch):
 
     before = _StateDir(spark, path).manifest()["parts"]
     files_before = {part: files(before[part]) for part in ("docs", "keys", "scored")}
-    loaded = load_state(spark, path, setup["cfg"])
+    loaded = load_state(spark, path)
     monkeypatch.setattr(scoring, "_pair_udf", counting_pair_udf)
     res = incremental_match(loaded, setup["batch"])
     commit_increment(res, path)
@@ -461,7 +476,7 @@ def test_commit_increment_in_place(spark, tmp_path, setup, monkeypatch):
         assert after[part][: len(before[part])] == before[part], part  # kept
         assert len(after[part]) > len(before[part]), part  # delta added
         assert files(before[part]) == was, part  # never rewritten
-    grown = load_state(spark, path, setup["cfg"])
+    grown = load_state(spark, path)
     exp = setup["inc"].state
     assert _clusters(grown.clusters) == _clusters(exp.clusters)
     assert sorted(r.doc_id for r in grown.docs.select("doc_id").collect()) == sorted(
@@ -543,10 +558,10 @@ def test_commit_increment_catalog_fallback(spark, setup):
         spark.sql(f"drop table if exists {prefix}_{part}")
     save_state(setup["st0"], prefix)
     try:
-        loaded = load_state(spark, prefix, setup["cfg"])
+        loaded = load_state(spark, prefix)
         res = incremental_match(loaded, setup["batch"])
         commit_increment(res, prefix)
-        grown = load_state(spark, prefix, setup["cfg"])
+        grown = load_state(spark, prefix)
         exp = setup["inc"].state
         assert _clusters(grown.clusters) == _clusters(exp.clusters)
         assert grown.docs.count() == exp.docs.count()
@@ -577,13 +592,13 @@ def test_commit_increment_bucketed_keys(spark, setup):
         shutil.rmtree(f"{wh}/em_state_cib_{part}", ignore_errors=True)
     save_state(setup["st0"], prefix, key_buckets=8)
     try:
-        loaded = load_state(spark, prefix, setup["cfg"])
+        loaded = load_state(spark, prefix)
         res = incremental_match(loaded, setup["batch"])
         commit_increment(res, prefix)
         assert _existing_bucket_spec(spark, f"{prefix}_keys") == (
             8, ["key"], ["key"],
         )
-        grown = load_state(spark, prefix, setup["cfg"])
+        grown = load_state(spark, prefix)
         exp = setup["inc"].state
         assert sorted((r.doc_id, r.key) for r in grown.keys.collect()) == sorted(
             (r.doc_id, r.key) for r in exp.keys.collect()
@@ -613,13 +628,13 @@ def test_remove_docs_follows_calibrated_model(setup):
         bias=-6.0, threshold=0.5,
     )
     st = rethreshold(setup["inc"].state, model=model)
-    assert st.match_model is model
     gone = (
         st.docs.select("doc_id")
         .filter(F.pmod(F.xxhash64("doc_id"), F.lit(4)) == 1)
     )
     out = remove_docs(st, gone)
-    assert out.match_model is model  # predicate survives the delete
+    # the model's blend rides the config through the delete
+    assert (out.cfg.weights, out.cfg.threshold) == (model.weights, 6.0)
 
     survivors = st.docs.join(gone, "doc_id", "anti").select("doc_id")
     scored = (
@@ -636,8 +651,8 @@ def test_remove_docs_follows_calibrated_model(setup):
 
 def test_incremental_match_carries_model_predicate(setup):
     """Growing a model-recalibrated state derives the batch's match
-    edges with the model, not the affine cut, and the grown state still
-    carries the model."""
+    edges with the model, not the affine cut, and the grown state's
+    config still carries the model's blend."""
     from entitymatch_spark.operators.calibrate import CalibratedModel
     from entitymatch_spark.plans.incremental import rethreshold
 
@@ -649,8 +664,8 @@ def test_incremental_match_carries_model_predicate(setup):
     # recalibrate the base state, then grow it by the same batch
     st = rethreshold(setup["st0"], model=model)
     res = incremental_match(st, setup["batch"])
-    assert res.state.match_model is model
-    assert "p_match" in res.matches.columns  # model predicate decided
+    # logit(0.5) - bias: the model's cut on its own blend
+    assert (res.state.cfg.weights, res.state.cfg.threshold) == (model.weights, 6.0)
     got = {(r.id_a, r.id_b) for r in res.matches.select("id_a", "id_b").collect()}
     want = {
         (r.id_a, r.id_b)
@@ -660,36 +675,13 @@ def test_incremental_match_carries_model_predicate(setup):
 
 
 def test_load_state_file_uri(spark, tmp_path, setup):
-    """The scored-table existence probe must go through Hadoop's
-    FileSystem (answers for s3a://, hdfs://, file://), not a
-    driver-local Path.exists() that is always False for URIs — which
-    silently loaded scored=None from a save that has the table."""
+    """A state saved at a URI loads through Hadoop's FileSystem (which
+    answers for s3a://, hdfs://, file://), scored table included."""
     path = "file://" + str(tmp_path / "st_uri")
     save_state(setup["st0"], path)
-    loaded = load_state(spark, path, setup["cfg"])
-    assert loaded.scored is not None
+    loaded = load_state(spark, path)
     assert loaded.docs.count() == setup["st0"].docs.count()
-
-
-def test_commit_increment_without_scored_state(spark, tmp_path, setup):
-    """A state built without scored persistence commits without paying
-    the scored delta's eager materialization (and without writing a
-    scored table)."""
-    from dataclasses import replace
-    from pathlib import Path
-
-    from entitymatch_spark.plans.incremental import commit_increment
-
-    path = str(tmp_path / "st_ns")
-    save_state(replace(setup["st0"], scored=None), path)
-    loaded = load_state(spark, path, setup["cfg"])
-    assert loaded.scored is None
-    res = incremental_match(loaded, setup["batch"])
-    commit_increment(res, path)
-    assert not (Path(path) / "scored").exists()
-    grown = load_state(spark, path, setup["cfg"])
-    assert grown.scored is None
-    assert _clusters(grown.clusters) == _clusters(setup["inc"].state.clusters)
+    assert _pairs(loaded.scored) == _pairs(setup["st0"].scored)
 
 
 def test_lsh_band_geometry_validated(spark):
@@ -738,9 +730,6 @@ def test_save_state_persists_config(spark, tmp_path, setup):
     d.publish(m)
     legacy = load_state(spark, p).cfg
     assert (legacy.num_hashes, legacy.bands, legacy.seed) == (32, 8, 7)
-    # explicit cfg argument still wins
-    forced = load_state(spark, p, cfg=state.cfg)
-    assert forced.cfg.num_hashes == state.cfg.num_hashes
     # and the loaded state remembers where it came from
     assert loaded.source == (f"file:{p}", (m["id"],))
 
