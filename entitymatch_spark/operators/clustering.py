@@ -1,25 +1,38 @@
-"""Transitive clustering: iterative DataFrame connected components.
+"""Transitive clustering: DataFrame connected components.
 
 Matched pairs form an undirected graph; entity clusters are its
 connected components with the stable cluster id = min member id
 (min works on any orderable id type — urls included — so no
 collision-prone hashing of string keys into longs is needed).
 
-Algorithm: alternating **large-star / small-star** (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SOCC'14) — converges in
-O(log n) rounds on pathological graphs (vs O(diameter) for naive label
-propagation), each round a pair of groupBy/join stages:
+Every call starts with one lineage cut of the distinct edge set and a
+checksum of it (edge count + order-insensitive hash). The count picks
+one of two finishes:
 
-- large-star: bidirect edges, per node u attach every *larger* neighbor
-  to m = min(N(u) ∪ {u}).
-- small-star: orient edges to the smaller endpoint, per node u attach
-  all (smaller) neighbors and u itself to m = min(N(u) ∪ {u}).
+- **Driver finish** (at or under the bound): the edge set is collected
+  once as Arrow, numpy labels the nodes (ids ranked by ``np.unique``,
+  then min-label hooking plus pointer jumping until no label moves),
+  and ``(id, component)`` goes back as a local relation. Spark knows
+  its size, so ``assign_clusters``' join broadcasts it with no hint
+  and the docs side is never shuffled. The bound is the edge count
+  whose node map (at most two nodes per edge, each row sized as Spark
+  estimates a local row) fits ``spark.sql.autoBroadcastJoinThreshold``;
+  a negative threshold (broadcast off) turns the driver finish off.
+- **Loop** (above the bound): alternating **large-star / small-star**
+  (Kiveris et al., "Connected Components in MapReduce and Beyond",
+  SOCC'14) — converges in O(log n) rounds on pathological graphs (vs
+  O(diameter) for naive label propagation), each round a pair of
+  window stages:
 
-Convergence: the edge multiset stops changing (checked by count +
-order-insensitive hash checksum — one cheap agg per round, no join).
-Each round ends in a lineage cut (iterative plans otherwise grow
-exponentially and re-execute history every action): a lazy
-``localCheckpoint``.
+  - large-star: bidirect edges, per node u attach every *larger*
+    neighbor to m = min(N(u) ∪ {u}).
+  - small-star: orient edges to the smaller endpoint, per node u attach
+    all (smaller) neighbors and u itself to m = min(N(u) ∪ {u}).
+
+  Convergence: the edge set stops changing (the same checksum — one
+  cheap agg per round, no join). Each round ends in a lineage cut
+  (iterative plans otherwise grow exponentially and re-execute history
+  every action): a lazy ``localCheckpoint``.
 
 The reference has no clustering (spans are per-query); this implements
 the north_star's transitive-closure stage.
@@ -27,8 +40,14 @@ the north_star's transitive-closure stage.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+# large-star/small-star rounds before the loop gives up
+_MAX_ROUNDS = 30
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -84,17 +103,59 @@ def _checksum(edges: DataFrame) -> tuple[int, int]:
     return row["n"], row["h"]
 
 
+def _driver_bound(edges: DataFrame) -> int:
+    """The most (u, v) edges the driver finish takes: their node map,
+    at most two nodes per edge, fits the broadcast join threshold. A
+    local relation's row is estimated at 8 bytes plus each column's
+    default size (8 for a long id, 20 for a string). A negative
+    threshold gives a negative bound, so the loop always runs."""
+    threshold = edges.sparkSession._jconf.autoBroadcastJoinThreshold()
+    row = 8 + 2 * edges._jdf.schema().apply("u").dataType().defaultSize()
+    return threshold // (2 * row)
+
+
+def _components_on_driver(edges: DataFrame) -> DataFrame:
+    """(id, component) of a distinct (u, v) edge set small enough to
+    collect: one Arrow collect, numpy labelling, and a local relation
+    back, typed as the edge ids."""
+    t = edges.toArrow()
+    ids = pa.chunked_array(t["u"].chunks + t["v"].chunks, type=t.schema.field("u").type)
+    # Ranks follow the id order Spark's min uses: numbers by value,
+    # strings by code point (= UTF-8 bytes, Spark's binary order).
+    _, first, rank = np.unique(ids.to_numpy(), return_index=True, return_inverse=True)
+    # both directions of each edge: a[i] -- b[i] (the roll swaps the halves)
+    a, b = rank, np.roll(rank, t.num_rows)
+    # Min-label hooking: each root takes the least label next to it, so a
+    # label only falls and never cycles; pointer jumping then flattens
+    # the trees back to stars. At the fixpoint every edge joins equal
+    # labels, each the least rank (= least id) of its component.
+    lab = np.arange(len(first))
+    while True:
+        nxt = lab.copy()
+        np.minimum.at(nxt, lab[a], lab[b])
+        while not np.array_equal(nxt[nxt], nxt):
+            nxt = nxt[nxt]
+        if np.array_equal(nxt, lab):
+            break
+        lab = nxt
+    nodes = ids.take(first)
+    id_type = edges.schema["u"].dataType
+    return edges.sparkSession.createDataFrame(
+        pa.table([nodes, nodes.take(lab)], names=["id", "component"]),
+        StructType([StructField("id", id_type), StructField("component", id_type)]),
+    )
+
+
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """(id, component) for every node appearing in ``edges``.
 
     component = min id of the node's connected component. Callers
     handle singletons (nodes with no edges) with a left join +
-    coalesce(component, id).
+    coalesce(component, id). Under the driver bound the result is a
+    local relation that a join broadcasts; above it, the loop's
+    checkpointed edges.
     """
 
     def cut(df: DataFrame) -> DataFrame:
@@ -117,15 +178,19 @@ def connected_components(
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
-    prev: tuple[int, int] | None = _checksum(e)
-    for _ in range(max_iter):
+    prev = _checksum(e)
+    if prev[0] <= _driver_bound(e):
+        return _components_on_driver(e)
+    for _ in range(_MAX_ROUNDS):
         e = cut(_small_star(_large_star(e)))
         cur = _checksum(e)
         if cur == prev:
             break
         prev = cur
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+        raise RuntimeError(
+            f"connected_components did not converge in {_MAX_ROUNDS} rounds"
+        )
     # Fixpoint edges are (node -> root). Roots map to themselves.
     members = e.select(F.col("u").alias("id"), F.col("v").alias("component"))
     roots = e.select(F.col("v").alias("id")).distinct().withColumn(

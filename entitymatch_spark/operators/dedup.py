@@ -325,7 +325,6 @@ def dedup_survivors(
     docs: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    **cc_kwargs,
 ) -> DataFrame:
     """Materialize the DEDUPLICATED corpus from near-dup pairs.
 
@@ -343,18 +342,17 @@ def dedup_survivors(
     corpus docs this survivor stands for (1 for unique docs), so
     downstream sampling can reweight by duplication count.
 
-    Scale: components come from the large-star/small-star loop (O(log n)
-    rounds, each a narrow groupBy); the loser set is component members
+    Scale: components come from ``connected_components`` (a driver
+    finish for a graph under the broadcast bound, the large-star/
+    small-star loop above it); the loser set is component members
     minus roots — at web scale that can be a large fraction of the
-    corpus, so it is removed with a hash anti-join on the id (never a
-    broadcast/isin), and sizes ride a second equi-join on the root id.
+    corpus, so it is removed with an anti-join on the id (a broadcast
+    only when the node map came from the driver finish, never an isin),
+    and sizes ride a second equi-join on the root id.
     """
     from entitymatch_spark.operators.clustering import connected_components
 
-    comp = connected_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        **cc_kwargs,
-    )
+    comp = connected_components(pairs, src="id_a", dst="id_b")
     sizes = comp.groupBy("component").agg(F.count("*").alias("n_members"))
     losers = comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)

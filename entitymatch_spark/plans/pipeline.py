@@ -90,11 +90,12 @@ class MatchConfig:
 @dataclass
 class MatchResult:
     """Every field is a lazy DataFrame except ``clusters``, which is
-    computed ON FIRST ACCESS: the connected-components loop is an
-    iterative algorithm with per-round driver actions (checksums,
-    lineage cuts), so it cannot be a lazy plan — deferring it means a
-    caller who stops at ``scored``/``matches`` never pays for
-    clustering."""
+    computed ON FIRST ACCESS: connected components runs driver actions
+    (the edge checksum, then either one collect for the driver finish
+    of a graph under the broadcast bound, or a checksum and lineage cut
+    per large-star/small-star round above it), so it cannot be a lazy
+    plan — deferring it means a caller who stops at
+    ``scored``/``matches`` never pays for clustering."""
 
     docs: DataFrame        # (id, norm_text, tokens)
     posting: DataFrame     # (id, pos, token)

@@ -3,8 +3,10 @@ from __future__ import annotations
 import itertools
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
+from conftest import broadcast_off
 from entitymatch_spark.operators.blocking import (
     candidate_pairs,
     lsh_band_keys,
@@ -202,14 +204,35 @@ def _uf_components(n, edges):
     return {min(v): sorted(v) for v in comp.values()}
 
 
-def test_connected_components_vs_union_find(spark):
+@pytest.fixture(params=["driver", "loop"])
+def cc_path(request, spark):
+    """Each side of connected_components' driver bound: 'loop' turns
+    broadcasts off, so the large-star/small-star loop runs."""
+    if request.param == "loop":
+        with broadcast_off(spark):
+            yield request.param
+    else:
+        yield request.param
+
+
+def _components(e, path):
+    comp = connected_components(e, "src", "dst")
+    plan = comp._jdf.queryExecution().optimizedPlan().toString()
+    assert ("LocalRelation" in plan) == (path == "driver"), plan
+    return comp
+
+
+def test_connected_components_vs_union_find(spark, cc_path):
     rng = random.Random(11)
-    n = 200
-    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(150)]
+    n = 400
+    edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
     edges += [(i, i + 1) for i in range(50, 80)]  # a long chain
+    # a longer chain, ids descending: the driver finish's first hook
+    # leaves a 149-link pointer chain, flattened in several jumps
+    edges += [(i, i - 1) for i in range(399, 250, -1)]
     edges = [(u, v) for u, v in edges if u != v]
     e = spark.createDataFrame(edges, "src long, dst long")
-    got_rows = connected_components(e, "src", "dst").collect()
+    got_rows = _components(e, cc_path).collect()
     got = {}
     for r in got_rows:
         got.setdefault(r["component"], []).append(r["id"])
@@ -227,20 +250,26 @@ def test_connected_components_vs_union_find(spark):
     assert all(k == min(v) for k, v in got.items())
 
 
-def test_connected_components_string_ids(spark):
+def test_connected_components_string_ids(spark, cc_path):
+    # Spark orders strings by UTF-8 bytes: "Z" < "a" < "z" < "é"
     e = spark.createDataFrame(
-        [("b", "c"), ("c", "d"), ("x", "y")], "src string, dst string"
+        [("b", "c"), ("c", "d"), ("x", "y"), ("a", "Z"), ("é", "z"),
+         ("éa", "za"), ("za", "Za")],
+        "src string, dst string",
     )
-    comp = {r["id"]: r["component"] for r in connected_components(e, "src", "dst").collect()}
-    assert comp == {"b": "b", "c": "b", "d": "b", "x": "x", "y": "x"}
-    docs = spark.createDataFrame([("b",), ("d",), ("lonely",)], "doc_id string")
-    cl = {r["doc_id"]: r["cluster_id"] for r in assign_clusters(docs, connected_components(e, "src", "dst")).collect()}
-    assert cl == {"b": "b", "d": "b", "lonely": "lonely"}
+    comp = {r["id"]: r["component"] for r in _components(e, cc_path).collect()}
+    assert comp == {
+        "b": "b", "c": "b", "d": "b", "x": "x", "y": "x", "a": "Z", "Z": "Z",
+        "é": "z", "z": "z", "éa": "Za", "za": "Za", "Za": "Za",
+    }
+    docs = spark.createDataFrame([("b",), ("d",), ("é",), ("lonely",)], "doc_id string")
+    cl = {r["doc_id"]: r["cluster_id"] for r in assign_clusters(docs, _components(e, cc_path)).collect()}
+    assert cl == {"b": "b", "d": "b", "é": "z", "lonely": "lonely"}
 
 
-def test_connected_components_empty(spark):
+def test_connected_components_empty(spark, cc_path):
     e = spark.createDataFrame([], "src long, dst long")
-    assert connected_components(e, "src", "dst").count() == 0
+    assert _components(e, cc_path).count() == 0
 
 
 def test_hot_key_block_purged(spark):

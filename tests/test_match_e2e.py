@@ -8,6 +8,7 @@ import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from conftest import broadcast_off, shuffles
 from entitymatch_spark.plans.pipeline import MatchConfig, match_pipeline
 from entitymatch_spark.sources.synthetic import generate_corpus, corpus_to_spark
 
@@ -116,6 +117,34 @@ def test_clustering_is_lazy(spark, monkeypatch):
     assert calls == [1]
     c2 = res.clusters
     assert c2 is c1 and calls == [1]  # cached, not re-run
+
+
+def test_link_finishes_clusters_on_the_driver(spark):
+    """A small link's match graph is clustered on the driver: an
+    untraced link (pipeline, clusters, distinct count) runs at most 21
+    Spark jobs (33 with the large-star/small-star loop), cluster
+    assembly broadcasts the node map with no shuffle, and the rows equal
+    the loop's."""
+    pages = corpus_to_spark(spark, generate_corpus(n_clusters=40, seed=5))["pages"]
+    sc = spark.sparkContext
+    sc.setJobGroup("small-link", "one untraced link")
+    try:
+        res = match_pipeline(pages, MatchConfig())
+        clusters = res.clusters
+        assert clusters.select("cluster_id").distinct().count() > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("small-link")
+    assert 0 < len(jobs) <= 21, len(jobs)
+    rows = sorted(clusters.collect())
+    plan = clusters._jdf.queryExecution().executedPlan()
+    assert "BroadcastHashJoin" in plan.toString(), plan.toString()
+    assert not shuffles(plan), [x.toString() for x in shuffles(plan)]
+    res.unpersist()
+    with broadcast_off(spark):
+        looped = match_pipeline(pages, MatchConfig())
+        assert sorted(looped.clusters.collect()) == rows
+        looped.unpersist()
 
 
 def test_all_labeled_pairs_blocked(result):

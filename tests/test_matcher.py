@@ -11,6 +11,7 @@ import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+from conftest import shuffles
 from entitymatch_spark.plans.matcher import build_matcher_index, interpret
 
 
@@ -104,21 +105,6 @@ def test_threshold_and_topk(spark, index):
     assert len(starts) == len(set(starts))
 
 
-def _shuffles(node) -> list:
-    """The shuffle exchanges of an executed plan, not counting those
-    inside cached tables."""
-    kind = node.getClass().getSimpleName()
-    if kind == "AdaptiveSparkPlanExec":
-        return _shuffles(node.executedPlan())
-    if kind in ("InMemoryTableScanExec", "TableCacheQueryStageExec"):
-        return []
-    if kind.endswith("QueryStageExec"):
-        return _shuffles(node.plan())
-    own = [node] if kind == "ShuffleExchangeExec" else []
-    ch = node.children()
-    return own + [x for i in range(ch.size()) for x in _shuffles(ch.apply(i))]
-
-
 def test_request_is_a_broadcast_probe_with_one_shuffle(spark, index, synonyms):
     """A request probes the resident, entity-partitioned index with its
     broadcast query tokens: the span stage needs no exchange, so the
@@ -136,9 +122,9 @@ def test_request_is_a_broadcast_probe_with_one_shuffle(spark, index, synonyms):
         assert out.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    shuffles = _shuffles(out._jdf.queryExecution().executedPlan())
-    assert len(shuffles) == 1, [x.toString() for x in shuffles]
-    keys = re.sub(r"#\d+L?", "", shuffles[0].toString())
+    found = shuffles(out._jdf.queryExecution().executedPlan())
+    assert len(found) == 1, [x.toString() for x in found]
+    keys = re.sub(r"#\d+L?", "", found[0].toString())
     assert "hashpartitioning(query_id, type, start," in keys, keys
     jobs = sc.statusTracker().getJobIdsForGroup("interpret-request")
     assert 0 < len(jobs) <= 8, len(jobs)
