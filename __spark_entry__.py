@@ -557,7 +557,7 @@ def q_score_pairs(spark, sf):  # M3 features (JW/lev/jaccard blend)
     docs = _docs(spark, sf).withColumnRenamed("norm", "norm_text")
     pairs = _tri_pairs(spark, sf).select("id_a", "id_b")
     scored = score_pairs(
-        pairs, docs, idf_map={},
+        pairs, docs, spark.sparkContext.broadcast({}),
         weights={"jaccard": 0.4, "lev_sim": 0.3, "jw": 0.3},
     )
     return scored.select(

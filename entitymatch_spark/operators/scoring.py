@@ -20,7 +20,8 @@ Feature split between JVM and Arrow:
 - ``jw``, ``cosine``, ``containment`` — ONE Arrow-batched pandas UDF
   returning a struct (one Python hop per batch, never per row). The
   IDF dictionary rides a Spark broadcast into the executors
-  (north_star: broadcast IDF dictionary).
+  (north_star: broadcast IDF dictionary), created and released by the
+  caller.
 
 The combined score is a fixed affine blend (weights below, calibrated
 on the labeled fixture — tests assert pairwise F1 >= 0.99); the
@@ -31,7 +32,8 @@ reference analog is the containment threshold at span finalization
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import Broadcast
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from entitymatch_spark.functions.similarity import (
@@ -152,12 +154,15 @@ def hydration_side(docs: DataFrame, suffix: str) -> DataFrame:
 def score_pairs(
     pairs: DataFrame,
     docs: DataFrame,
-    idf_map: dict[str, float],
+    idf_bcast: Broadcast,
     weights: dict[str, float] | None = None,
     default_idf: float = 1e-5,
 ) -> DataFrame:
     """Score (id_a, id_b) candidate pairs against docs(doc_id,
     norm_text, tokens).
+
+    ``idf_bcast``: the broadcast IDF dictionary (token -> idf), owned
+    and destroyed by the caller (plans.pipeline.broadcast_idf_map).
 
     Returns pairs + feature columns + blended ``score``; the match cut
     is plans.pipeline.match_stage. All joins are equi-joins on the doc
@@ -165,17 +170,18 @@ def score_pairs(
     """
     sides = [hydration_side(docs, s) for s in ("a", "b")]
     hydrated = pairs.join(sides[0], "id_a").join(sides[1], "id_b")
-    return score_hydrated(hydrated, idf_map, weights=weights, default_idf=default_idf)
+    return score_hydrated(hydrated, idf_bcast, weights=weights, default_idf=default_idf)
 
 
 def score_hydrated(
     hydrated: DataFrame,
-    idf_map: dict[str, float],
+    idf_bcast: Broadcast,
     weights: dict[str, float] | None = None,
     default_idf: float = 1e-5,
 ) -> DataFrame:
     """Feature + blend stage over an already-hydrated pair table
-    (columns jwt_/levt_/toksj_/toksd_ per side — see hydration_side).
+    (columns jwt_/levt_/toksj_/toksd_ per side — see hydration_side),
+    reading the IDF dictionary from ``idf_bcast`` (see score_pairs).
 
     Split out from score_pairs so the STREAMING matcher can reuse the
     exact batch scorer: every expression here is per-row (narrow), so
@@ -184,8 +190,6 @@ def score_hydrated(
     implementation.
     """
     weights = weights or DEFAULT_WEIGHTS
-    spark = SparkSession.getActiveSession()
-    idf_bcast = spark.sparkContext.broadcast(idf_map)
 
     maxlen = F.greatest(F.length("levt_a"), F.length("levt_b"))
     # 3-arg levenshtein (Spark >= 3.5) runs the banded DP and returns

@@ -68,11 +68,11 @@ from entitymatch_spark.operators.clustering import assign_clusters, connected_co
 from entitymatch_spark.plans.pipeline import (
     MatchConfig,
     blocking_keys,
+    broadcast_idf_map,
     match_pipeline,
     match_stage,
     prepare_docs,
     score_stage,
-    scorer_idf_map,
     scorer_layout,
 )
 from entitymatch_spark.plans.store import _StateDir
@@ -134,7 +134,12 @@ class IncrementalResult:
         persisted when cfg.cache). A long-lived driver looping
         incremental_match over many batches should call this after
         committing each batch, or dead cached partitions accumulate in
-        executor storage for the session's lifetime."""
+        executor storage for the session's lifetime.
+
+        The scorer's IDF broadcast is not among them: ``scored`` is a
+        local checkpoint, and incremental_match destroys the broadcast
+        as soon as that cut is taken, so the scoring frames (``scored``,
+        ``matches``, the cluster deltas) stay readable after this."""
         for df in (self.new_docs, self.pairs):
             try:
                 df.unpersist()
@@ -249,10 +254,14 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
     docs_union = state.docs.unionByName(new_docs)
 
     # scored ONCE: the match edges, the cluster merge and the commit's
-    # scored delta read this cut instead of re-running the scorer
+    # scored delta read this cut instead of re-running the scorer. The
+    # cut has no lineage above it, so nothing reads the IDF broadcast
+    # after it: destroy it here, whether or not the caller unpersists.
+    idf_bcast, default_idf = broadcast_idf_map(state.idf, cfg)
     scored = score_stage(
-        pairs, docs_union, *scorer_idf_map(state.idf, cfg), cfg
+        pairs, docs_union, idf_bcast, default_idf, cfg
     ).localCheckpoint(eager=True)
+    idf_bcast.destroy()
     matches = match_stage(scored, cfg)
 
     clusters, affected, changed = _merge_clusters(state.clusters, matches, new_docs)

@@ -26,11 +26,11 @@ from entitymatch_spark.plans.checkpoint import CheckpointManager
 from entitymatch_spark.plans.pipeline import (
     MatchConfig,
     blocking_keys,
+    broadcast_idf_map,
     match_stage,
     pair_stage,
     prepare_docs,
     score_stage,
-    scorer_idf_map,
 )
 
 
@@ -61,28 +61,35 @@ def resumable_match_pipeline(
     # id_a — no EliminateSorts exposure, the files themselves are sorted.
     pairs = ck.stage("pairs", lambda: pair_stage(keys, cfg))
 
-    # LAZY and once: the IDF collect runs only when a bucket actually
-    # needs scoring — a fully-resumed rerun (every bucket committed)
-    # must not pay a vocabulary-sized driver collect just to read
-    # parquet back.
-    idf_map = cache(lambda: scorer_idf_map(idf, cfg))
+    # LAZY and once: the IDF collect and broadcast run only when a
+    # bucket actually needs scoring — a fully-resumed rerun (every
+    # bucket committed) must not pay a vocabulary-sized driver collect
+    # just to read parquet back — and every bucket shares the one
+    # broadcast.
+    idf_bcast = cache(lambda: broadcast_idf_map(idf, cfg))
 
     def _score_bucket(b: int) -> DataFrame:
         bucket = pairs.filter(
             F.pmod(F.xxhash64("id_a", "id_b"), F.lit(n_score_buckets)) == b
         )
-        return score_stage(bucket, docs, *idf_map(), cfg)
+        return score_stage(bucket, docs, *idf_bcast(), cfg)
 
     # the bucketing string pins n_score_buckets in the manifest: a
     # resume at a different count would silently lose or duplicate
     # pairs (old "done" buckets cover a different hash range), so the
     # manager raises on mismatch instead
-    scored = ck.bucketed_stage(
-        "scored",
-        range(n_score_buckets),
-        _score_bucket,
-        bucketing=f"pmod(xxhash64(id_a,id_b), {n_score_buckets})",
-    )
+    try:
+        scored = ck.bucketed_stage(
+            "scored",
+            range(n_score_buckets),
+            _score_bucket,
+            bucketing=f"pmod(xxhash64(id_a,id_b), {n_score_buckets})",
+        )
+    finally:
+        # the stage returns the committed parquet, which does not read
+        # the broadcast
+        if idf_bcast.cache_info().currsize:
+            idf_bcast()[0].destroy()
 
     components = ck.stage(
         "components",

@@ -23,9 +23,9 @@ from entitymatch_spark.functions.text import normalize_text, tokenize
 from entitymatch_spark.plans.pipeline import (
     MatchConfig,
     blocking_keys,
+    broadcast_idf_map,
     lsh_keys,
     score_stage,
-    scorer_idf_map,
 )
 
 
@@ -68,7 +68,7 @@ def incremental_match(
     corpus growth that also merges cluster state and proves equality
     with a full recompute, see plans/incremental.py's function of the
     same name.) Runs the batch pipeline's own stages under the index's
-    ``cfg`` — blocking_keys, scorer_idf_map, score_stage — so
+    ``cfg`` — blocking_keys, broadcast_idf_map, score_stage — so
     batch/stream parity holds by shared code, not by re-implementation.
 
     Plan (all stream-side steps are stateless/narrow, so the query is a
@@ -114,7 +114,7 @@ def incremental_match(
         extra = [event_time_col]
     else:
         extra = []
-    idf_map, default_idf = scorer_idf_map(idf, cfg)
+    idf_bcast, default_idf = broadcast_idf_map(idf, cfg)
     page = pages_stream.select(
         F.col(cfg.id_col).alias("id"),
         normalize_text(cfg.text_col).alias("norm_text"),
@@ -136,7 +136,7 @@ def incremental_match(
         cand = cand.dropDuplicatesWithinWatermark(["id_a", "id_b"])
     else:
         cand = cand.dropDuplicates(["id_a", "id_b"])
-    return score_stage(cand, static_docs, idf_map, default_idf, cfg, stream_side="page")
+    return score_stage(cand, static_docs, idf_bcast, default_idf, cfg, stream_side="page")
 
 
 def streaming_event_counts(

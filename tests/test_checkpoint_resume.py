@@ -118,12 +118,12 @@ def test_resumable_pipeline_kill_between_buckets(spark, tmp_path, small_corpus):
     idf = ck.stage("idf", lambda: token_idf(build_posting(docs), n_docs=n))
     keys = ck.stage("keys", lambda: token_blocking_keys(build_posting(docs), idf, cfg.min_idf))
     pairs = ck.stage("pairs", lambda: candidate_pairs(keys, max_block=cfg.max_block))
-    idf_map = collect_idf_map(idf)
+    idf_bcast = spark.sparkContext.broadcast(collect_idf_map(idf))
 
     def bucket(b):
         return score_pairs(
             pairs.filter(F.pmod(F.xxhash64("id_a", "id_b"), F.lit(4)) == b),
-            docs, idf_map, weights=cfg.weights,
+            docs, idf_bcast, weights=cfg.weights,
         )
 
     ck.bucketed_stage("scored", [0, 1], bucket)  # ...kill here

@@ -3,13 +3,17 @@ same-blocking-key pairs + exact cluster reproduction (north_rule)."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from conftest import broadcast_off, shuffles
+from entitymatch_spark.plans.incremental import incremental_match, initial_state
 from entitymatch_spark.plans.pipeline import MatchConfig, match_pipeline
+from entitymatch_spark.plans.resumable import resumable_match_pipeline
 from entitymatch_spark.sources.synthetic import generate_corpus, corpus_to_spark
 
 
@@ -87,11 +91,40 @@ def test_production_matches_portable_variant(spark, result):
 def test_scorer_parallelism_not_aqe_coalesced(spark):
     """AQE coalesces shuffles by BYTES, but the Arrow scorer's cost is
     rows x python-time: a few-MB pair table must still fan out across
-    cores: the scorer layout pins 4 x defaultParallelism."""
+    cores. The scorer layout pins exactly one partition per core
+    (defaultParallelism) for the link and the grow alike; more would
+    only add per-task Arrow cost."""
     pages = corpus_to_spark(spark, generate_corpus(n_clusters=10, seed=3))["pages"]
-    res = match_pipeline(pages, MatchConfig())
     dp = spark.sparkContext.defaultParallelism
-    assert res.pairs.rdd.getNumPartitions() == 4 * dp
+    res = match_pipeline(pages, MatchConfig())
+    assert res.pairs.rdd.getNumPartitions() == dp
+    is_batch = F.pmod(F.xxhash64("url"), F.lit(3)) == 0
+    grown = incremental_match(initial_state(pages.filter(~is_batch)), pages.filter(is_batch))
+    assert grown.pairs.rdd.getNumPartitions() == dp
+
+
+def test_scorer_releases_idf_broadcast(spark, tmp_path):
+    """Every scoring run broadcasts the IDF map, which PySpark writes as
+    a file in the driver's temp dir and deletes only on destroy(). A
+    link released with unpersist(), a grow and a resumable run leave no
+    file behind."""
+    pages = corpus_to_spark(spark, generate_corpus(n_clusters=5, seed=3))["pages"]
+    is_batch = F.pmod(F.xxhash64("url"), F.lit(3)) == 0
+    state = initial_state(pages.filter(~is_batch))
+    temp_dir = spark.sparkContext._temp_dir
+    before = len(os.listdir(temp_dir))
+
+    res = match_pipeline(pages, MatchConfig())
+    n_docs = res.clusters.count()
+    res.unpersist()
+    res.unpersist()  # a second release is a no-op
+    assert res.clusters.count() == n_docs  # computed clusters stay readable
+    grown = incremental_match(state, pages.filter(is_batch))
+    grown.cluster_changed.count()
+    grown.unpersist()
+    resumable_match_pipeline(spark, pages, tmp_path / "r", n_score_buckets=2)
+
+    assert len(os.listdir(temp_dir)) <= before
 
 
 def test_clustering_is_lazy(spark, monkeypatch):

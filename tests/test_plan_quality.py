@@ -59,7 +59,7 @@ def test_scorer_single_arrow_hop(spark):
         "doc_id long, norm_text string, tokens array<string>",
     )
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    plan = _plan(score_pairs(pairs, docs, {"aa": 1.0}))
+    plan = _plan(score_pairs(pairs, docs, spark.sparkContext.broadcast({"aa": 1.0})))
     assert plan.count("ArrowEvalPython") == 1
     assert "BatchEvalPython" not in plan  # no row-at-a-time python
 
@@ -227,7 +227,7 @@ def test_scorer_uses_banded_levenshtein(spark):
         "doc_id long, norm_text string, tokens array<string>",
     )
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    plan = _plan(score_pairs(pairs, docs, {"aa": 1.0}))
+    plan = _plan(score_pairs(pairs, docs, spark.sparkContext.broadcast({"aa": 1.0})))
     assert "levenshtein" in plan
     # 3-arg form shows the band as the third (optional) argument
     assert "Some(32))" in plan, plan[plan.find("levenshtein"):][:200]

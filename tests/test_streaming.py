@@ -141,7 +141,8 @@ def test_incremental_match_parity_with_batch(spark, tmp_path):
         )
         got = {(r["id_a"], r["id_b"]): round(r["score"], 9) for r in out.collect()}
         want_rows = score_pairs(
-            cand, all_docs, idf_map, default_idf=default_idf
+            cand, all_docs, spark.sparkContext.broadcast(idf_map),
+            default_idf=default_idf,
         ).collect()
         want = {(r["id_a"], r["id_b"]): round(r["score"], 9) for r in want_rows}
 
