@@ -270,9 +270,9 @@ def lsh_band_keys(
 def prune_oversized_blocks(keys: DataFrame, max_block: int) -> DataFrame:
     """Drop every row of a key whose block exceeds ``max_block`` (block
     purging: an over-shared key has no discriminative power — the
-    blocking analog of the IDF floor). THE block cap: candidate_pairs,
-    the batch-incremental union-block expansion and the streaming
-    matcher's static side all run it.
+    blocking analog of the IDF floor). THE block cap: candidate_pairs
+    (for the link, and for the grow's union blocks through its
+    ``old_keys``) and the streaming matcher's static side run it.
     (No id_col parameter: the purge decision touches only ``key`` —
     an id-named knob here would imply per-id behavior it doesn't have.)
 
@@ -294,15 +294,26 @@ def candidate_pairs(
     max_block: int = 64,
     id_col: str = "doc_id",
     payload_cols: Sequence[str] = (),
+    old_keys: DataFrame | None = None,
 ) -> DataFrame:
     """(id_a, id_b, n_keys): unordered candidate pairs from blocking keys.
 
     SINGLE-PASS block expansion: prune_oversized_blocks caps each block
     at ``max_block`` rows in the same pass, one groupBy(key) collects
-    each block's member ids (so the arrays are small), then pairs with
-    id_a < id_b explode WITHIN the block — a narrow transformation.
-    Pairs generated by several keys are deduped and carry how many keys
+    each block's members (so the arrays are small), then each member
+    pairs with the members after it WITHIN the block — a narrow
+    transformation emitting k(k-1)/2 rows for a block of k. Pairs
+    generated by several keys are deduped and carry how many keys
     agreed (a free, cheap match signal).
+
+    ``old_keys``: members already paired among themselves — the grow's
+    standing corpus (plans/incremental.py). They count toward the cap,
+    so a block is purged at its UNION size exactly as a full run of
+    ``old_keys ∪ keys`` would purge it, and they pair only with
+    ``keys`` members: a block of k old and b new members emits
+    k*b + b(b-1)/2 rows, never the old-old pairs. The output is the
+    full run's pairs minus the pairs of ``old_keys`` alone, ``n_keys``
+    included, provided no block crosses the cap.
 
     Why this beats the classic self-equi-join on key: the join form
     reads the key table three times (block-size aggregate + both join
@@ -318,7 +329,6 @@ def candidate_pairs(
     pipeline dropped their key persists on the back of this (they were
     also leaking cached blocks across the driver session — ADVICE r2).
     """
-    keys = prune_oversized_blocks(keys, max_block)
     # ``payload_cols`` carries NARROW per-id columns (e.g. an 8-byte
     # SimHash) through the block expansion so the verifier needs NO
     # join back to the id table — which, when the upstream is a narrow
@@ -327,7 +337,9 @@ def candidate_pairs(
     # Keep payloads small: each rides the block shuffle once per key
     # and the pair shuffle twice per pair (fat columns belong in the
     # join form, see score_pairs hydration). Without payloads the
-    # member is the bare id — same plan minus the struct wrap.
+    # member is the bare id — same plan minus the struct wrap. A
+    # payload member is a struct led by its id, so members compare
+    # (``!=``, least/greatest) by id.
     member = (
         F.struct(F.col(id_col).alias("__id"), *[F.col(c) for c in payload_cols])
         if payload_cols
@@ -335,22 +347,42 @@ def candidate_pairs(
     )
     # collect_list (not _set): duplicate (key, id) rows count toward
     # the n_keys signal exactly as the row-level join form did (and
-    # toward the cap, see prune_oversized_blocks).
-    blocks = keys.groupBy("key").agg(F.collect_list(member).alias("ids"))
-    # blocks of one produce no pairs; skip their expansion entirely
-    blocks = blocks.filter(F.size("ids") >= 2)
-    expanded = (
-        blocks.select(F.col("ids"), F.explode("ids").alias("a"))
-        .select("a", F.explode("ids").alias("b"))
+    # toward the cap, see prune_oversized_blocks). Each block's list
+    # holds its ``n_old`` old members first.
+    if old_keys is None:
+        ids, n_old = F.collect_list(member), F.lit(0)
+    else:
+        cols = [id_col, "key", *payload_cols]
+        keys = old_keys.select(*cols, F.lit(True).alias("__old")).unionByName(
+            keys.select(*cols, F.lit(False).alias("__old"))
+        )
+        old = F.col("__old")
+        ids = F.concat(
+            F.collect_list(F.when(old, member)), F.collect_list(F.when(~old, member))
+        )
+        n_old = F.count_if(old).cast("int")
+    blocks = (
+        prune_oversized_blocks(keys, max_block)
+        .groupBy("key")
+        .agg(ids.alias("ids"), n_old.alias("n_old"))
+        # skip blocks with no pair to emit: one member, or no new one
+        .filter((F.size("ids") >= 2) & (F.size("ids") > F.col("n_old")))
+    )
+    # the member at 0-based position i pairs with the positions from
+    # max(i + 1, n_old) on: each pair of positions with one new member
+    # once. A pair of positions holding the same id (a duplicate row)
+    # is no pair.
+    start = F.greatest(F.col("i") + 1, F.col("n_old"))
+    expanded = blocks.select(
+        "ids", "n_old", F.posexplode("ids").alias("i", "a")
+    ).select("a", F.explode(F.slice("ids", start + 1, F.size("ids") - start)).alias("b"))
+    pairs = expanded.filter(F.col("a") != F.col("b")).select(
+        F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
     )
     a_id = F.col("a.__id") if payload_cols else F.col("a")
     b_id = F.col("b.__id") if payload_cols else F.col("b")
-    return (
-        expanded.filter(a_id < b_id)
-        .groupBy(a_id.alias("id_a"), b_id.alias("id_b"))
-        .agg(
-            F.count("*").alias("n_keys"),
-            *[F.first(f"a.{c}").alias(f"{c}_a") for c in payload_cols],
-            *[F.first(f"b.{c}").alias(f"{c}_b") for c in payload_cols],
-        )
+    return pairs.groupBy(a_id.alias("id_a"), b_id.alias("id_b")).agg(
+        F.count("*").alias("n_keys"),
+        *[F.first(f"a.{c}").alias(f"{c}_a") for c in payload_cols],
+        *[F.first(f"b.{c}").alias(f"{c}_b") for c in payload_cols],
     )

@@ -38,9 +38,10 @@ members; a key that crosses would retroactively purge base-base pairs
 the incremental run has already matched — transitive clustering is
 monotone and never retracts). New pairs are purged at UNION block
 sizes, exactly like the full run: the semi-join pulls every old member
-of each batch-touched key, so the block cap
-(operators/blocking.prune_oversized_blocks, the one the full run
-applies) sees the whole block.
+of each batch-touched key, so the block cap sees the whole block. The
+grow reaches the cap and the block expansion through
+``operators/blocking.candidate_pairs(old_keys=)``, the one the full
+run calls.
 
 The reference has no incremental mode (TestMatcher/Program.cs rebuilds
 its index per run); this implements the north_star's "resumes without
@@ -63,17 +64,16 @@ from dataclasses import asdict, dataclass, fields, replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from entitymatch_spark.operators.blocking import prune_oversized_blocks
-from entitymatch_spark.operators.clustering import assign_clusters, connected_components
 from entitymatch_spark.plans.pipeline import (
     MatchConfig,
     blocking_keys,
     broadcast_idf_map,
+    cluster_stage,
     match_pipeline,
     match_stage,
+    pair_stage,
     prepare_docs,
     score_stage,
-    scorer_layout,
 )
 from entitymatch_spark.plans.store import _StateDir
 
@@ -141,10 +141,7 @@ class IncrementalResult:
         as soon as that cut is taken, so the scoring frames (``scored``,
         ``matches``, the cluster deltas) stay readable after this."""
         for df in (self.new_docs, self.pairs):
-            try:
-                df.unpersist()
-            except Exception:
-                pass
+            df.unpersist()
 
 
 def initial_state(
@@ -157,12 +154,20 @@ def initial_state(
     but then a later full recompute (which would see batch tokens in
     its own IDF) is no longer the bit-exact oracle of the incremental
     result; pass a fixed snapshot when that equivalence matters.
+
+    The link is scored ONCE, as incremental_match scores a batch: the
+    clusters and save_state's ``scored`` read one lineage cut, and the
+    link's caches and IDF broadcast are released once it is taken
+    (``docs`` and ``keys`` stay lazy over ``pages``).
     """
     cfg = cfg or MatchConfig()
     res = match_pipeline(pages, cfg, idf=idf)
+    scored = res.scored.localCheckpoint(eager=True)
+    clusters = cluster_stage(res.docs, match_stage(scored, cfg))
+    res.unpersist()
     return MatchState(
         docs=res.docs, keys=res.keys, idf=res.idf,
-        clusters=res.clusters, cfg=cfg, scored=res.scored,
+        clusters=clusters, cfg=cfg, scored=scored,
     )
 
 
@@ -182,61 +187,11 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
     # Blocks that can produce a NEW pair are exactly the blocks holding
     # >= 1 batch doc. The semi-join pulls every old member of those
     # keys, so block sizes (and therefore the max_block purge) are
-    # evaluated at UNION size — identical to a full recompute.
+    # evaluated at UNION size — identical to a full recompute — and
+    # only new-old and new-new pairs are generated.
     batch_block_keys = new_keys.select("key").distinct()
     old_in_blocks = state.keys.join(batch_block_keys, "key", "semi")
-    sub = prune_oversized_blocks(
-        old_in_blocks.withColumn("is_new", F.lit(False)).unionByName(
-            new_keys.withColumn("is_new", F.lit(True))
-        ),
-        cfg.max_block,
-    )
-    # Asymmetric single-pass block expansion: each block's members are
-    # collected into separate old/new lists and only new x old plus
-    # new x new pairs are generated — a block of k old + b new members
-    # emits b*k + b(b-1)/2 rows instead of the (k+b)^2/2 a generic
-    # expansion-then-filter would (measured: a uniform 10% batch at
-    # bench scale touches nearly EVERY block, so the filter form
-    # regenerated ~all old-old pairs only to drop them — the whole
-    # blocking stage's cost for a tenth of the output). The cap above
-    # is evaluated on the combined size, so it still matches the full
-    # run; n_keys counts one per shared block, exactly like
-    # candidate_pairs.
-    blocks = (
-        sub.groupBy("key")
-        .agg(
-            F.collect_list(F.when(F.col("is_new"), F.col("doc_id"))).alias("new_ids"),
-            F.collect_list(F.when(~F.col("is_new"), F.col("doc_id"))).alias("old_ids"),
-        )
-        .filter(
-            (F.size("new_ids") >= 1)
-            & ((F.size("new_ids") + F.size("old_ids")) >= 2)
-        )
-    )
-    # Both pair kinds come out of ONE chained expansion: each new
-    # member pairs with every old member plus the new members greater
-    # than itself (the a<b half of new x new). Chaining the explodes
-    # keeps the plan LINEAR over `blocks` — a union of two explode
-    # branches references `blocks` twice and Spark re-executes the
-    # whole semi-join + groupBy subtree per branch (measured: the
-    # executed plan contained the entire blocking chain twice; fusing
-    # cut the warm pairs leg ~2x).
-    pairs = (
-        blocks.select("old_ids", "new_ids", F.explode("new_ids").alias("n"))
-        .select(
-            "n",
-            F.explode(
-                F.concat(
-                    F.col("old_ids"),
-                    F.filter("new_ids", lambda b: b > F.col("n")),
-                )
-            ).alias("m"),
-        )
-        .select(F.least("n", "m").alias("id_a"), F.greatest("n", "m").alias("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_keys"))
-    )
-    pairs = scorer_layout(pairs)
+    pairs = pair_stage(new_keys, cfg, old_keys=old_in_blocks)
     if cfg.cache:
         pairs = pairs.persist()
 
@@ -325,13 +280,10 @@ def _merge_clusters(
     stars = affected_members.filter(F.col("doc_id") != F.col("cluster_id")).select(
         F.col("doc_id").alias("id_a"), F.col("cluster_id").alias("id_b")
     )
-    components = connected_components(
-        stars.unionByName(new_edges), src="id_a", dst="id_b"
-    )
     changed_ids = affected_members.select("doc_id").unionByName(
         new_docs.select("doc_id")
     )
-    changed = assign_clusters(changed_ids, components)
+    changed = cluster_stage(changed_ids, stars.unionByName(new_edges))
     unchanged = prior.join(affected, "cluster_id", "left_anti")
     return unchanged.unionByName(changed), affected, changed
 
@@ -618,13 +570,10 @@ def rethreshold(
         cfg = replace(cfg, weights=dict(weights))
         blend = sum((F.col(k) * F.lit(w) for k, w in weights.items()), F.lit(0.0))
         scored = scored.withColumn("score", blend)
-    components = connected_components(
-        match_stage(scored, cfg).select("id_a", "id_b"), src="id_a", dst="id_b"
-    )
-    clusters = assign_clusters(state.docs.select("doc_id"), components)
     return MatchState(
         docs=state.docs, keys=state.keys, idf=state.idf,
-        clusters=clusters, cfg=cfg, scored=scored,
+        clusters=cluster_stage(state.docs, match_stage(scored, cfg)),
+        cfg=cfg, scored=scored,
     )
 
 
@@ -691,8 +640,7 @@ def remove_docs(state: MatchState, doc_ids: DataFrame) -> MatchState:
         .select("id_a", "id_b")
         .join(remaining.withColumnRenamed("doc_id", "id_a"), "id_a", "semi")
     )
-    components = connected_components(edges, src="id_a", dst="id_b")
-    changed = assign_clusters(remaining, components)
+    changed = cluster_stage(remaining, edges)
     unchanged = prior.join(affected, "cluster_id", "left_anti")
     return MatchState(
         docs=docs, keys=keys, idf=state.idf,

@@ -34,9 +34,7 @@ from entitymatch_spark.operators.blocking import (
 )
 from entitymatch_spark.operators.clustering import assign_clusters, connected_components
 from entitymatch_spark.operators.posting import (
-    IDF_FLOOR,
     build_posting,
-    collect_idf_map,
     collect_idf_map_bounded,
     token_idf,
 )
@@ -66,15 +64,15 @@ class MatchConfig:
     lsh_band_hash: str = "xxhash64"
     weights: dict = field(default_factory=lambda: dict(DEFAULT_WEIGHTS))
     threshold: float = DEFAULT_THRESHOLD
-    # Cap on the broadcast IDF dictionary (None = full vocabulary). At
-    # 10^12-doc scale the raw web vocabulary does not fit in a broadcast;
-    # keep the top-K most frequent tokens and score dropped (rare) tokens
-    # at the tail's occurrence-weighted mean IDF — see
-    # posting.collect_idf_map_bounded. BOUNDED BY DEFAULT: 2M entries
-    # (~100-200 MB broadcast) so the default path has no unbounded
+    # Cap on the broadcast IDF dictionary. At 10^12-doc scale the raw
+    # web vocabulary does not fit in a broadcast; keep the top-K most
+    # frequent tokens and score dropped (rare) tokens at the tail's
+    # occurrence-weighted mean IDF — see
+    # posting.collect_idf_map_bounded. ALWAYS BOUNDED, 2M entries by
+    # default (~100-200 MB broadcast), so no path has an unbounded
     # driver-side collect; at test scale the vocabulary is far smaller
     # than the cap, so nothing is dropped and results are identical.
-    idf_max_entries: int | None = 2_000_000
+    idf_max_entries: int = 2_000_000
     seed: int = 42
     cache: bool = True  # persist docs + pairs (reused by several stages)
     id_col: str = "url"
@@ -182,10 +180,16 @@ def lsh_keys(docs: DataFrame, cfg: MatchConfig) -> DataFrame:
     )
 
 
-def pair_stage(keys: DataFrame, cfg: MatchConfig) -> DataFrame:
+def pair_stage(
+    keys: DataFrame, cfg: MatchConfig, old_keys: DataFrame | None = None
+) -> DataFrame:
     """Candidate pairs under ``cfg``'s block cap, in the scorer's
-    layout (``scorer_layout``)."""
-    return scorer_layout(candidate_pairs(keys, max_block=cfg.max_block))
+    layout (``scorer_layout``). ``old_keys``: the grow's standing
+    members of the batch's blocks (candidate_pairs), so the grow pairs
+    its batch exactly as the link would."""
+    return scorer_layout(
+        candidate_pairs(keys, max_block=cfg.max_block, old_keys=old_keys)
+    )
 
 
 def scorer_layout(pairs: DataFrame) -> DataFrame:
@@ -241,10 +245,7 @@ def broadcast_idf_map(idf: DataFrame, cfg: MatchConfig) -> tuple[Broadcast, floa
     ``destroy()``, so destroy it once every frame scored with it is
     done (MatchResult.unpersist, incremental_match's scored cut, the
     resumable scored stage); a streaming query keeps it for its life."""
-    if cfg.idf_max_entries is not None:
-        idf_map, default_idf = collect_idf_map_bounded(idf, cfg.idf_max_entries)
-    else:
-        idf_map, default_idf = collect_idf_map(idf), IDF_FLOOR
+    idf_map, default_idf = collect_idf_map_bounded(idf, cfg.idf_max_entries)
     return idf.sparkSession.sparkContext.broadcast(idf_map), default_idf
 
 
@@ -286,6 +287,17 @@ def match_stage(scored: DataFrame, cfg: MatchConfig) -> DataFrame:
     return scored.filter(F.col("score") >= cfg.threshold)
 
 
+def cluster_stage(docs: DataFrame, edges: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) for every ``docs`` id: connected components
+    over the match ``edges`` (id_a, id_b), the cluster id being the
+    component's min member id (a doc on no edge is its own cluster).
+    The link, the grow's merge, the delete and rethreshold call it."""
+    components = connected_components(
+        edges.select("id_a", "id_b"), src="id_a", dst="id_b"
+    )
+    return assign_clusters(docs.select("doc_id"), components)
+
+
 def match_pipeline(
     pages: DataFrame, cfg: MatchConfig | None = None, idf: DataFrame | None = None
 ) -> MatchResult:
@@ -315,14 +327,8 @@ def match_pipeline(
     scored = score_stage(pairs, docs, idf_bcast, default_idf, cfg)
     matches = match_stage(scored, cfg)
 
-    def _clusters() -> DataFrame:
-        components = connected_components(
-            matches.select("id_a", "id_b"), src="id_a", dst="id_b"
-        )
-        return assign_clusters(docs.select("doc_id"), components)
-
     return MatchResult(
         docs=docs, posting=posting, idf=idf, keys=keys,
-        pairs=pairs, scored=scored, matches=matches, _clusters_fn=_clusters,
-        _idf_bcast=idf_bcast,
+        pairs=pairs, scored=scored, matches=matches,
+        _clusters_fn=lambda: cluster_stage(docs, matches), _idf_bcast=idf_bcast,
     )

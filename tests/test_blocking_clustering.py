@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import itertools
 import random
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -282,6 +283,47 @@ def test_hot_key_block_purged(spark):
     # hot block gone; only the 5 cold blocks of 4 docs each -> 5 * C(4,2)
     assert len(p_pairs) == 30
     assert all(a < 20 and b < 20 for a, b in p_pairs)
+
+
+def test_candidate_pairs_old_keys(spark):
+    """candidate_pairs(new, old_keys=old), the grow's expansion, emits
+    the pairs of candidate_pairs(old ∪ new) minus those of
+    candidate_pairs(old), n_keys and payloads included — also when a
+    block crosses the cap only at its union size, which both sides
+    purge."""
+    schema = "doc_id long, key string, simhash long"
+
+    def check(old_rows, new_rows, max_block, payload_cols=()):
+        old = spark.createDataFrame(old_rows, schema)
+        new = spark.createDataFrame(new_rows, schema)
+
+        def pairs(keys, **kw):
+            df = candidate_pairs(keys, max_block, payload_cols=payload_cols, **kw)
+            return {tuple(r) for r in df.collect()}
+
+        got = pairs(new, old_keys=old)
+        old_pairs = {r[:2] for r in pairs(old)}
+        union = pairs(old.unionByName(new))
+        assert got == {r for r in union if r[:2] not in old_pairs}
+        return got
+
+    # no block crosses the cap: 12 keys over 40 docs (old 0-29, new
+    # 30-39), and a duplicate (key, id) row on each side
+    rng = random.Random(5)
+    sim = {i: i * 7919 % 65536 for i in range(40)}
+    rows = sorted({(i, f"k{rng.randrange(12)}", sim[i]) for i in sim for _ in range(3)})
+    old_rows = [r for r in rows if r[0] < 30] + [rows[0]]
+    new_rows = [r for r in rows if r[0] >= 30] + [rows[-1]]
+    assert max(Counter(k for _, k, _ in old_rows + new_rows).values()) <= 32
+    got = check(old_rows, new_rows, 32, payload_cols=["simhash"])
+    assert got and all(b >= 30 for _, b, *_ in got)
+    assert all((sa, sb) == (sim[a], sim[b]) for a, b, _, sa, sb in got)
+
+    # block "x" has 3 old members (under the cap of 4) and 5 at union
+    # size: purged, so its batch docs pair only through "y" and "z"
+    old_rows = [(0, "x", 0), (1, "x", 0), (2, "x", 0), (3, "y", 0)]
+    new_rows = [(30, "x", 0), (31, "x", 0), (32, "y", 0), (30, "z", 0), (33, "z", 0)]
+    assert check(old_rows, new_rows, 4) == {(3, 32, 1), (30, 33, 1)}
 
 
 def test_block_cap_in_pass_bounded_plan(spark):

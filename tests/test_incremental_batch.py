@@ -430,6 +430,33 @@ def test_bucketed_write_needs_catalog(tmp_path, setup):
         save_state(setup["st0"], str(tmp_path / "st"), key_buckets=8)
 
 
+def test_initial_state_scores_once(spark, tmp_path, setup, monkeypatch):
+    """Building a state and saving it score each base pair exactly once:
+    the clusters and the saved ``scored`` read one cut of the link."""
+    from entitymatch_spark.operators import scoring
+
+    scored_rows = spark.sparkContext.accumulator(0)
+    pair_udf = scoring._pair_udf
+
+    def counting_pair_udf(idf_bcast, default_idf=1e-5):
+        fn = pair_udf(idf_bcast, default_idf).func
+
+        def batch(*cols):
+            scored_rows.add(len(cols[0]))
+            return fn(*cols)
+
+        return F.pandas_udf(
+            batch, "struct<jw:double,cosine:double,containment:double>"
+        )
+
+    monkeypatch.setattr(scoring, "_pair_udf", counting_pair_udf)
+    cfg, idf = setup["cfg"], setup["idf"]
+    st = initial_state(setup["base"], cfg, idf=idf)
+    save_state(st, str(tmp_path / "state"))
+    n_pairs = match_pipeline(setup["base"], cfg, idf=idf).pairs.count()
+    assert scored_rows.value == n_pairs > 0
+
+
 def test_commit_increment_in_place(spark, tmp_path, setup, monkeypatch):
     """commit_increment adds the batch deltas to the stored state IN
     PLACE — the base generation's data files stay untouched and the

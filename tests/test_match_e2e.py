@@ -107,12 +107,12 @@ def test_scorer_releases_idf_broadcast(spark, tmp_path):
     """Every scoring run broadcasts the IDF map, which PySpark writes as
     a file in the driver's temp dir and deletes only on destroy(). A
     link released with unpersist(), a grow and a resumable run leave no
-    file behind."""
+    file behind, and neither does building a state."""
     pages = corpus_to_spark(spark, generate_corpus(n_clusters=5, seed=3))["pages"]
     is_batch = F.pmod(F.xxhash64("url"), F.lit(3)) == 0
-    state = initial_state(pages.filter(~is_batch))
     temp_dir = spark.sparkContext._temp_dir
     before = len(os.listdir(temp_dir))
+    state = initial_state(pages.filter(~is_batch))
 
     res = match_pipeline(pages, MatchConfig())
     n_docs = res.clusters.count()
