@@ -13,9 +13,10 @@ Per-batch cost (B = batch docs, C = corpus docs):
 - blocking keys: O(B) narrow column work (token keys + the MinHash
   fold are per-row expressions, zero shuffle);
 - old-side lookups: ONE semi-join of the corpus key table against the
-  batch's distinct keys (``save_state(key_buckets=)`` persists that
-  table hash-bucketed by ``key``, so the corpus side needs no shuffle
-  — plan-asserted) — never a scan of old pairs;
+  batch's distinct keys. While those fit the broadcast threshold it
+  is planned as a broadcast of the batch keys over the stored key
+  table's scan, so the corpus side never shuffles (plan-asserted) —
+  never a scan of old pairs;
 - scoring: only new-new and new-old candidate pairs, through the same
   Arrow scorer as the full pipeline;
 - clustering: connected components over (new match edges ∪ the star
@@ -56,7 +57,6 @@ cluster ids — with a provable full-recompute equivalence.
 
 from __future__ import annotations
 
-import json
 import math
 import uuid
 from dataclasses import asdict, dataclass, fields, replace
@@ -109,10 +109,9 @@ class MatchState:
     scored: DataFrame
     # (qualified path, lineage) set by load_state: the lineage starts
     # with the id of the manifest read, and each grow appends a fresh
-    # id, the one its commit publishes. A catalog prefix has no lineage
-    # (None). None (remove_docs, rethreshold, upsert_pages) commits as a
-    # full snapshot. See commit_increment.
-    source: tuple[str, tuple[str, ...] | None] | None = None
+    # id, the one its commit publishes. None (remove_docs, rethreshold,
+    # upsert_pages) commits as a full snapshot. See commit_increment.
+    source: tuple[str, tuple[str, ...]] | None = None
 
 
 @dataclass
@@ -124,8 +123,7 @@ class IncrementalResult:
     scored: DataFrame     # pairs + features + score — the scored-table delta
     matches: DataFrame    # scored >= threshold
     # the clusters-table delta pair: prior clusters a new edge reached
-    # (cluster_id) and their recomputed rows (doc_id, cluster_id) —
-    # what commit_increment() deletes and appends on Iceberg
+    # (cluster_id) and their recomputed rows (doc_id, cluster_id)
     affected_clusters: DataFrame
     cluster_changed: DataFrame
 
@@ -199,13 +197,9 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
     # on id_a/id_b already touch only docs that appear in a pair, so a
     # prune-first semi-join would just add a pass (measured: a semi-join
     # "optimization" here cost 9.8s vs 3.7s without, re-evaluated once
-    # per hydration side). At 10^12 docs, bucket the stored docs table
-    # by doc_id AND hydrate the old and batch sides separately — this
-    # union voids the bucketed scan's output partitioning (a union's
-    # partitioning is unknown), so joining docs_union pays a docs-side
-    # shuffle that a split hydration against the bucketed scan itself
-    # would not. Locally the docs side broadcasts and the union form
-    # is both simpler and measured-equal.
+    # per hydration side). The stored docs part has no bucket spec, so
+    # at 10^12 docs this join shuffles the docs side; locally the docs
+    # side broadcasts.
     docs_union = state.docs.unionByName(new_docs)
 
     # scored ONCE: the match edges, the cluster merge and the commit's
@@ -222,7 +216,7 @@ def incremental_match(state: MatchState, new_pages: DataFrame) -> IncrementalRes
     clusters, affected, changed = _merge_clusters(state.clusters, matches, new_docs)
 
     source = state.source
-    if source is not None and source[1] is not None:
+    if source is not None:
         source = (source[0], (*source[1], uuid.uuid4().hex))
     new_state = MatchState(
         docs=docs_union,
@@ -297,47 +291,28 @@ def _manifest(state: MatchState, generation: int, base: dict | None = None) -> d
     """The manifest publishing ``state``, listing ``base``'s parts (none
     by default): its commit id is the last of its lineage (the one a
     grow of it names as its base), or fresh."""
-    ids = state.source[1] if state.source is not None else None
+    src = state.source
     return {
-        "generation": generation, "id": ids[-1] if ids else uuid.uuid4().hex,
+        "generation": generation, "id": src[1][-1] if src else uuid.uuid4().hex,
         "config": asdict(state.cfg), "parts": base["parts"] if base else {},
         "schemas": base["schemas"] if base else {},
     }
 
 
-def save_state(state: MatchState, path: str, *, key_buckets: int | None = None) -> None:
-    """Persist the state under ``path`` as a full snapshot.
-
-    ``path`` follows the sources.readers convention: at a filesystem
-    path every part goes to fresh directories that one manifest rename
-    publishes as the next generation (:class:`_StateDir`), so a kill
-    leaves the previous generation and saving over the path the state
-    was loaded from is safe. A catalog name prefix (e.g.
-    ``db.match_state``) writes Iceberg/catalog tables
-    ``db.match_state_docs`` etc. through write_table, one at a time.
-    The MatchConfig persists with the state, and :func:`load_state`
-    loads under it: reloaded with the default one, a state built under
-    other blocking parameters would compute batch keys in the wrong key
-    space (missed matches, no error), and a recalibrated one would grow
-    under the old match predicate. A ``CalibratedModel`` applied by
-    rethreshold(model=) is saved as that config's blend and threshold.
-
-    ``key_buckets`` (catalog targets only) hash-buckets the ``keys``
-    table by ``key``. This is THE standing-state layout decision at
-    10^12 docs: every batch's old-side lookup is one semi-join of the
-    standing key table (O(corpus) rows, ~10^13 keys) against the
-    batch's distinct keys — bucketed, the standing side's scan already
-    satisfies the join's required distribution, so Spark Exchanges
-    only the batch side and the standing table NEVER moves across the
-    network (plan-asserted in tests/test_incremental_batch.py). Pick
-    the bucket count once, for the standing table's target partition
-    size (e.g. 10^13 keys / 2^14 buckets ≈ 600M keys ≈ a few GB per
-    bucket); every later batch reuses it. Keep it >= the session's
-    ``spark.sql.shuffle.partitions``: below that, Spark's
-    DisableUnnecessaryBucketedScan judges the bucketed read an
-    under-parallelized loss and re-shuffles BOTH sides (observed at
-    4 buckets vs 8 shuffle partitions) — never a constraint at scale,
-    where the bucket count is in the thousands.
+def save_state(state: MatchState, path: str) -> None:
+    """Persist the state under ``path``, any Hadoop path or URI
+    (relative ones resolve against the filesystem's working
+    directory), as a full snapshot: every part goes to fresh
+    directories that one manifest rename publishes as the next
+    generation (:class:`_StateDir`), so a kill leaves the previous
+    generation and saving over the path the state was loaded from is
+    safe. The MatchConfig persists with the state, and
+    :func:`load_state` loads under it: reloaded with the default one, a
+    state built under other blocking parameters would compute batch
+    keys in the wrong key space (missed matches, no error), and a
+    recalibrated one would grow under the old match predicate. A
+    ``CalibratedModel`` applied by rethreshold(model=) is saved as that
+    config's blend and threshold.
 
     ``clusters`` is an iterative result (connected components), so the
     write doubles as its durable materialization — the natural batch
@@ -346,92 +321,53 @@ def save_state(state: MatchState, path: str, *, key_buckets: int | None = None) 
     ``scored`` persists alongside — it is what makes post-hoc
     recalibration free of the Arrow scorer (see rethreshold()).
     """
-    from entitymatch_spark.sources.readers import is_table_name, write_table
-
-    if key_buckets is not None and not is_table_name(path):
-        raise ValueError(
-            "key_buckets= needs a catalog-name path (bucket metadata "
-            f"lives in the metastore); got {path!r}"
-        )
-    parts = {part: getattr(state, part) for part in _PARTS}
-    if not is_table_name(path):
-        d = _StateDir(state.docs.sparkSession, path)
-        top = d.manifest()
-        gen = top["generation"] + 1 if top else 1
-        m = _manifest(state, gen)
-        for part, df in parts.items():
-            d.write(m, part, df)
-        d.publish(m)
-        return
-    spark = state.docs.sparkSession
-    cfg_df = spark.createDataFrame(
-        [(json.dumps(asdict(state.cfg)),)], "cfg_json string"
-    )
-    write_table(cfg_df, f"{path}_cfg")
-    for part, df in parts.items():
-        kw = (
-            {"buckets": key_buckets, "bucket_by": "key"}
-            if part == "keys" and key_buckets is not None
-            else {}
-        )
-        write_table(df, f"{path}_{part}", **kw)
+    d = _StateDir(state.docs.sparkSession, path)
+    top = d.manifest()
+    m = _manifest(state, top["generation"] + 1 if top else 1)
+    for part in _PARTS:
+        d.write(m, part, getattr(state, part))
+    d.publish(m)
 
 
 def load_state(spark: SparkSession, path: str) -> MatchState:
-    """Load a :func:`save_state` save (at a path: exactly what the newest
-    manifest lists), stamped with its ``source``, under the config it
-    was saved with — the state's one match predicate, a model applied
-    by rethreshold(model=) included. Saved options MatchConfig no longer
+    """Load a :func:`save_state` save (exactly what the newest manifest
+    lists), stamped with its ``source``, under the config it was saved
+    with — the state's one match predicate, a model applied by
+    rethreshold(model=) included. Saved options MatchConfig no longer
     has are dropped."""
-    from entitymatch_spark.sources.readers import is_table_name, read_pages
-
-    if is_table_name(path):
-        dfs = {p: read_pages(spark, f"{path}_{p}") for p in _PARTS}
-        saved = json.loads(read_pages(spark, f"{path}_cfg").collect()[0]["cfg_json"])
-        source = (path, None)
-    else:
-        d = _StateDir(spark, path)
-        m = d.manifest()
-        if m is None:
-            raise ValueError(f"no state manifest (manifest-*.json) under {path!r}")
-        dfs = {part: d.read(m, part) for part in m["parts"]}
-        saved, source = m["config"], (d.root, (m["id"],))
+    d = _StateDir(spark, path)
+    m = d.manifest()
+    if m is None:
+        raise ValueError(f"no state manifest (manifest-*.json) under {path!r}")
     known = {f.name for f in fields(MatchConfig)}
-    cfg = MatchConfig(**{k: v for k, v in saved.items() if k in known})
-    return MatchState(**{p: dfs[p] for p in _PARTS}, cfg=cfg, source=source)
+    cfg = MatchConfig(**{k: v for k, v in m["config"].items() if k in known})
+    return MatchState(
+        **{part: d.read(m, part) for part in _PARTS}, cfg=cfg,
+        source=(d.root, (m["id"],)),
+    )
 
 
 def commit_increment(result: IncrementalResult, path: str) -> None:
     """Commit an :func:`incremental_match` result IN PLACE at ``path``
     with O(batch) writes — the nightly-crawl commit.
 
-    :func:`save_state` rewrites every table: O(corpus) per batch, which
+    :func:`save_state` rewrites every part: O(corpus) per batch, which
     at 10^12 docs dwarfs the batch's own compute. The grow step only
     adds rows, except to clusters, so when the result's base is the
     commit stored at ``path`` (the last but one id of
-    ``result.state.source``'s lineage) this commits:
+    ``result.state.source``'s lineage) this writes:
 
     - ``docs`` / ``keys`` / ``scored``: the batch deltas (``new_docs``,
       ``new_keys``, ``scored``) — O(batch);
-    - ``idf``: untouched — it is the frozen external dictionary the
+    - ``idf``: nothing — it is the frozen external dictionary the
       state was built under (see :func:`initial_state`);
-    - ``clusters``: the one table with in-place mutations. At a
-      filesystem path the deltas and the merged clusters go to fresh
-      directories, and one manifest publish adds the deltas to the
-      base's lists and replaces the clusters list; a kill at any write
-      leaves the base. The clusters rewrite is still O(corpus), but it
-      is the narrowest table (two ids per doc). On a catalog with
-      row-level deletes (Iceberg), DELETE the affected clusters' rows
-      and APPEND their recomputed rows — O(affected clusters).
-      CAVEAT: the DELETE and APPEND are two separate commits, not one
-      transaction — a driver failure between them leaves the affected
-      clusters' rows missing until the batch is recommitted from a
-      re-derived result. A deployment wanting single-commit semantics
-      should replace the pair with one Iceberg ``MERGE INTO`` (row-level
-      upsert in one snapshot); this module keeps the two-verb form
-      because the sandbox catalog has no MERGE support to test against.
-      The session catalog has no row-level ops, so it falls back to one
-      full overwrite of the clusters table from a materialized plan.
+    - ``clusters``: the merged clusters, the one part with in-place
+      mutations. Still O(corpus), but the narrowest part (two ids per
+      doc).
+
+    All of them go to fresh directories, and one manifest publish adds
+    the deltas to the base's lists and replaces the clusters list; a
+    kill at any write leaves the base.
 
     If ``path`` holds a commit outside the result's lineage (another
     commit landed after the base was loaded) this refuses: a delta
@@ -443,71 +379,26 @@ def commit_increment(result: IncrementalResult, path: str) -> None:
     the two newest generations list, so re-load the state after a
     commit.
     """
-    from pyspark.errors import AnalysisException
-
-    from entitymatch_spark.sources.readers import is_table_name, write_table
-
     state, src = result.state, result.state.source
-    if not is_table_name(path):
-        d = _StateDir(state.docs.sparkSession, path)
-        base = d.manifest()
-        if src is None or src[0] != d.root or base is None:
-            return save_state(state, path)
-        if base["id"] not in src[1]:
-            raise ValueError(
-                f"{path!r} holds commit {base['id']} (generation "
-                f"{base['generation']}), which this result does not build on: "
-                "another commit landed after the base was loaded. Load the "
-                "state again and re-run the batch."
-            )
-        if src[1][-2:-1] != (base["id"],):  # an ancestor further back
-            return save_state(state, path)
-        m = _manifest(state, base["generation"] + 1, base)
-        for part, delta in (("docs", result.new_docs), ("keys", result.new_keys),
-                            ("scored", result.scored)):
-            d.write(m, part, delta, append=True)
-        d.write(m, "clusters", state.clusters)
-        d.publish(m)
-        return
-    if src != (path, None):
+    d = _StateDir(state.docs.sparkSession, path)
+    base = d.manifest()
+    if src is None or src[0] != d.root or base is None:
         return save_state(state, path)
-
-    spark = state.docs.sparkSession
-    clusters_t = f"{path}_clusters"
-    # the DELETE below mutates the table the recomputed rows' lineage
-    # reads: cut them first (affected_clusters is a cut already)
-    changed = result.cluster_changed.localCheckpoint(eager=True)
-    view = "em_commit_affected_clusters"
-    result.affected_clusters.createOrReplaceTempView(view)
-    try:
-        spark.sql(
-            f"DELETE FROM {clusters_t} WHERE cluster_id IN "
-            f"(SELECT cluster_id FROM {view})"
+    if base["id"] not in src[1]:
+        raise ValueError(
+            f"{path!r} holds commit {base['id']} (generation "
+            f"{base['generation']}), which this result does not build on: "
+            "another commit landed after the base was loaded. Load the "
+            "state again and re-run the batch."
         )
-        write_table(changed, clusters_t, mode="append")
-    except AnalysisException as exc:
-        # only the capability gap falls back (session-catalog V1
-        # tables have no row-level ops); anything else is a real
-        # error — same narrowing discipline as readers.write_table
-        cond = (
-            exc.getCondition()
-            if hasattr(exc, "getCondition")
-            else exc.getErrorClass()
-        ) or ""
-        if not (
-            "UNSUPPORTED_FEATURE" in cond
-            or "supports_delete" in str(exc)
-            or "DELETE is only supported with v2 tables" in str(exc)
-        ):
-            raise
-        # one full overwrite, from a materialized plan (the lazy
-        # merged plan reads the table being replaced)
-        write_table(state.clusters.localCheckpoint(eager=True), clusters_t)
-    finally:
-        spark.catalog.dropTempView(view)
-    write_table(result.new_docs, f"{path}_docs", mode="append")
-    write_table(result.new_keys, f"{path}_keys", mode="append")
-    write_table(result.scored, f"{path}_scored", mode="append")
+    if src[1][-2:-1] != (base["id"],):  # an ancestor further back
+        return save_state(state, path)
+    m = _manifest(state, base["generation"] + 1, base)
+    for part, delta in (("docs", result.new_docs), ("keys", result.new_keys),
+                        ("scored", result.scored)):
+        d.write(m, part, delta, append=True)
+    d.write(m, "clusters", state.clusters)
+    d.publish(m)
 
 
 def rethreshold(

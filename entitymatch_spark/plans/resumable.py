@@ -5,7 +5,7 @@ point resumes without redoing committed work; the scoring stage — the
 expensive one at 100 TB — commits per hash bucket of the pair set, so
 even a mid-stage kill loses at most one bucket):
 
-    docs -> idf -> keys -> pairs -> scored[bucket 0..n) -> components
+    docs -> idf -> keys -> pairs -> scored[bucket 0..n) -> clusters
 
 The workdir is a manifest store (plans/store.py) at any Hadoop path or
 URI; every commit publishes one manifest generation.
@@ -20,13 +20,13 @@ from functools import cache
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from entitymatch_spark.operators.clustering import assign_clusters, connected_components
 from entitymatch_spark.operators.posting import build_posting, token_idf
 from entitymatch_spark.plans.checkpoint import CheckpointManager
 from entitymatch_spark.plans.pipeline import (
     MatchConfig,
     blocking_keys,
     broadcast_idf_map,
+    cluster_stage,
     match_stage,
     pair_stage,
     prepare_docs,
@@ -91,17 +91,10 @@ def resumable_match_pipeline(
         if idf_bcast.cache_info().currsize:
             idf_bcast()[0].destroy()
 
-    components = ck.stage(
-        "components",
-        lambda: connected_components(
-            match_stage(scored, cfg).select("id_a", "id_b"),
-            "id_a",
-            "id_b",
-        ),
+    clusters = ck.stage(
+        "clusters", lambda: cluster_stage(docs, match_stage(scored, cfg))
     )
-    clusters = assign_clusters(docs.select("doc_id"), components)
     return {
         "docs": docs, "idf": idf, "keys": keys, "pairs": pairs,
-        "scored": scored, "components": components, "clusters": clusters,
-        "checkpoints": ck,
+        "scored": scored, "clusters": clusters, "checkpoints": ck,
     }

@@ -45,42 +45,7 @@ _V1_FALLBACK_CONDITIONS = {
 }
 
 
-def _existing_bucket_spec(
-    spark: SparkSession, target: str
-) -> tuple[int, list[str], list[str]] | None:
-    """(num_buckets, bucket_cols, sort_cols) of an existing catalog
-    table, or None when the table doesn't exist or isn't bucketed.
-    Appends to a V1 bucketed table must RE-STATE the spec (Spark
-    refuses a plain append with 'Specified bucketing does not match'),
-    so the writer looks it up rather than making every caller thread
-    the layout through — commit_increment's nightly keys append onto a
-    save_state(key_buckets=) table is exactly that case."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        rows = spark.sql(f"DESCRIBE FORMATTED {target}").collect()
-    except AnalysisException:
-        return None
-    kv = {r["col_name"].strip(): (r["data_type"] or "").strip() for r in rows}
-    n, cols = kv.get("Num Buckets"), kv.get("Bucket Columns")
-    if not n or not cols:
-        return None
-
-    def _parse(s: str) -> list[str]:
-        return [c.strip(" `") for c in s.strip("[]").split(",") if c.strip(" `")]
-
-    return int(n), _parse(cols), _parse(kv.get("Sort Columns", ""))
-
-
-def write_table(
-    df: DataFrame,
-    target: str,
-    mode: str = "overwrite",
-    *,
-    buckets: int | None = None,
-    bucket_by: str | None = None,
-    sort_by: str | None = None,
-) -> None:
+def write_table(df: DataFrame, target: str, mode: str = "overwrite") -> None:
     """Write to an Iceberg/catalog table when named, else parquet.
 
     Table targets prefer the V2 ``writeTo`` path (atomic replace on
@@ -88,35 +53,16 @@ def write_table(
     ``_V1_FALLBACK_CONDITIONS`` fall back to the V1 ``saveAsTable``
     path (same overwrite/append semantics minus atomicity) — any other
     AnalysisException re-raises.
-
-    ``buckets``/``bucket_by`` hash-bucket the table on a key so later
-    equi-joins on that key read the table shuffle-free (Spark plans
-    the scan's output partitioning as ``HashPartitioning(bucket_by,
-    buckets)`` and Exchanges only the other side). Bucket metadata
-    lives in a catalog, so a path target raises. The write goes
-    straight to the V1 ``bucketBy/sortBy/saveAsTable`` writer — the V2
-    ``writeTo`` API has no bucket clause for session/Hive catalogs; on
-    Iceberg the equivalent layout is ``partitionedBy(bucket(N, col))``
-    plus storage-partitioned joins, which a deployment with the
-    Iceberg runtime should prefer for its snapshot atomicity.
     """
     from pyspark.errors import AnalysisException
 
-    if buckets is not None:
-        if not is_table_name(target):
-            raise ValueError(
-                "bucketed writes need a catalog table target (bucket "
-                f"metadata lives in the metastore); got path {target!r}"
-            )
-        if not bucket_by:
-            raise ValueError("buckets= requires bucket_by=")
     if is_table_name(target) and mode in ("error", "errorifexists", "ignore"):
         # a caller using errorifexists as a double-write guard must not
         # duplicate the table: create it atomically (the catalog refuses
         # an existing name inside the create itself, so no check-then-
         # act window) and map "already exists" to the mode's answer
         try:
-            _create_table(df, target, buckets, bucket_by, sort_by)
+            _create_table(df, target)
         except AnalysisException as e:
             if _condition(e) != "TABLE_OR_VIEW_ALREADY_EXISTS":
                 raise
@@ -126,24 +72,7 @@ def write_table(
                 ) from e
         return
 
-    if buckets is not None:
-        (
-            df.write.mode("overwrite" if mode == "overwrite" else "append")
-            .bucketBy(buckets, bucket_by)
-            .sortBy(sort_by or bucket_by)
-            .saveAsTable(target)
-        )
-        return
     if is_table_name(target):
-        if mode != "overwrite":
-            spec = _existing_bucket_spec(df.sparkSession, target)
-            if spec is not None:
-                n, bcols, scols = spec
-                w = df.write.mode("append").bucketBy(n, *bcols)
-                if scols:
-                    w = w.sortBy(*scols)
-                w.saveAsTable(target)
-                return
         try:
             if mode == "overwrite":
                 df.writeTo(target).createOrReplace()
@@ -163,27 +92,12 @@ def _condition(e) -> str | None:
     return e.getCondition() if hasattr(e, "getCondition") else e.getErrorClass()
 
 
-def _create_table(
-    df: DataFrame,
-    target: str,
-    buckets: int | None,
-    bucket_by: str | None,
-    sort_by: str | None,
-) -> None:
+def _create_table(df: DataFrame, target: str) -> None:
     """Create ``target`` from ``df``, raising TABLE_OR_VIEW_ALREADY_EXISTS
     when it exists: the V2 ``writeTo(...).create()``, or the V1
-    ``mode("error")`` writer for bucketed tables and catalogs without
-    the V2 create."""
+    ``mode("error")`` writer for catalogs without the V2 create."""
     from pyspark.errors import AnalysisException
 
-    if buckets is not None:
-        (
-            df.write.mode("error")
-            .bucketBy(buckets, bucket_by)
-            .sortBy(sort_by or bucket_by)
-            .saveAsTable(target)
-        )
-        return
     try:
         df.writeTo(target).create()
     except AnalysisException as e:

@@ -61,7 +61,6 @@ def incremental_match(
     idf: DataFrame,
     cfg: MatchConfig | None = None,
     dedup_within_watermark: bool = False,
-    event_time_col: str = "warc_ts",
 ) -> DataFrame:
     """Streaming record linkage: score newly arrived pages against the
     already-indexed corpus. (Stream-vs-static scoring only; for BATCH
@@ -100,18 +99,17 @@ def incremental_match(
     for every candidate pair.
     """
     cfg = cfg or MatchConfig()
-    # the event-time (watermark) column must ride along when bounded
-    # dedup state is requested — fail fast here rather than let
-    # dropDuplicatesWithinWatermark error obscurely downstream (or
-    # silently drop the caller's watermark on a differently named column)
+    # the event-time (watermark) column, the pages schema's warc_ts,
+    # must ride along when bounded dedup state is requested — fail fast
+    # here rather than let dropDuplicatesWithinWatermark error obscurely
+    # downstream
     if dedup_within_watermark:
-        if event_time_col not in pages_stream.columns:
+        if "warc_ts" not in pages_stream.columns:
             raise ValueError(
-                f"dedup_within_watermark=True needs event-time column "
-                f"{event_time_col!r} on the stream (have: {pages_stream.columns}); "
-                "pass event_time_col= to name it"
+                "dedup_within_watermark=True needs the event-time column "
+                f"'warc_ts' on the stream (have: {pages_stream.columns})"
             )
-        extra = [event_time_col]
+        extra = ["warc_ts"]
     else:
         extra = []
     idf_bcast, default_idf = broadcast_idf_map(idf, cfg)

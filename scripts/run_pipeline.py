@@ -26,7 +26,9 @@ metrics.json. State modes load the state under the MatchConfig saved
 with it; --no-lsh, --idf-max-entries and --threshold may only restate
 it (in rethreshold, --threshold is the new threshold). They commit the
 successor state to --state-out, which defaults to --state-dir: in
-place. A stored state is a set of immutable part directories made
+place. Both take any Hadoop path or URI (local, file://, hdfs://); a
+relative one such as ``st`` resolves against the filesystem's working
+directory. A stored state is a set of immutable part directories made
 visible by one manifest rename, so a kill mid-commit leaves the
 previous generation. grow and upsert commit through commit_increment
 (grow as O(batch) delta writes when the target holds its base);
@@ -71,10 +73,12 @@ def build_parser() -> argparse.ArgumentParser:
                     "(local, file://, hdfs://): enables manifest "
                     "commit/resume (mode=run only)")
     ap.add_argument("--state-dir", default=None,
-                    help="existing MatchState dir (grow/upsert/remove/"
+                    help="existing MatchState, any Hadoop path or URI, "
+                    "relative ones included (grow/upsert/remove/"
                     "rethreshold)")
     ap.add_argument("--state-out", default=None,
-                    help="where to commit the successor state (build/grow/"
+                    help="where to commit the successor state, any Hadoop "
+                    "path or URI, relative ones included (build/grow/"
                     "upsert/remove/rethreshold); default --state-dir")
     ap.add_argument("--delete-ids", default=None,
                     help="one-column parquet of ids to retire (mode=remove)")

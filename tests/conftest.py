@@ -37,16 +37,24 @@ def broadcast_off(spark):
         spark.conf.set(key, old)
 
 
-def shuffles(node) -> list:
-    """The shuffle exchanges of an executed plan, not counting those
-    inside cached tables."""
+def plan_nodes(node) -> list:
+    """The nodes of an executed plan, through its adaptive and query
+    stage wrappers, not counting those inside cached tables."""
     kind = node.getClass().getSimpleName()
     if kind == "AdaptiveSparkPlanExec":
-        return shuffles(node.executedPlan())
+        return plan_nodes(node.executedPlan())
     if kind in ("InMemoryTableScanExec", "TableCacheQueryStageExec"):
         return []
     if kind.endswith("QueryStageExec"):
-        return shuffles(node.plan())
-    own = [node] if kind == "ShuffleExchangeExec" else []
+        return plan_nodes(node.plan())
     ch = node.children()
-    return own + [x for i in range(ch.size()) for x in shuffles(ch.apply(i))]
+    return [node] + [x for i in range(ch.size()) for x in plan_nodes(ch.apply(i))]
+
+
+def shuffles(node) -> list:
+    """The shuffle exchanges of an executed plan, not counting those
+    inside cached tables."""
+    return [
+        n for n in plan_nodes(node)
+        if n.getClass().getSimpleName() == "ShuffleExchangeExec"
+    ]

@@ -74,7 +74,7 @@ def test_resumable_pipeline_matches_fresh_run(spark, tmp_path, small_corpus):
 
     # metrics recorded for every stage
     stages = {r["stage"] for r in r2["checkpoints"].metrics_df().collect()}
-    assert {"docs", "idf", "keys", "pairs", "scored", "components"} <= stages
+    assert {"docs", "idf", "keys", "pairs", "scored", "clusters"} <= stages
 
 
 def test_resumable_pipeline_honors_idf_cap(spark, tmp_path, small_corpus):

@@ -357,77 +357,42 @@ def test_upsert_moved_pages_equals_full_recompute(setup, spark):
     assert _clusters(res.state.clusters) == _clusters(full.clusters)
 
 
-def test_state_catalog_roundtrip(spark, setup):
-    """A catalog-name prefix persists the state as session-catalog
-    tables (Iceberg on a real deployment) and a batch matched into the
-    loaded state reproduces the full-recompute clusters."""
-    prefix = "default.em_state_rt"
-    save_state(setup["st0"], prefix)
-    try:
-        assert spark.catalog.tableExists(f"{prefix}_docs")
-        assert spark.catalog.tableExists(f"{prefix}_scored")
-        loaded = load_state(spark, prefix)
-        assert loaded.scored is not None
-        res = incremental_match(loaded, setup["batch"])
-        assert _clusters(res.state.clusters) == _clusters(setup["full"].clusters)
-    finally:
-        for part in ("docs", "keys", "idf", "clusters", "scored", "cfg"):
-            spark.sql(f"drop table if exists {prefix}_{part}")
-
-
-def test_state_bucketed_keys_standing_side_never_shuffles(spark, setup):
-    """save_state(key_buckets=) persists the standing key table
-    hash-bucketed by ``key``: the per-batch old-side semi-join then
-    Exchanges ONLY the batch side. At 10^12 docs the standing key
-    table is the O(corpus) artifact — this layout is what keeps a
-    daily batch from shuffling ~10^13 rows. Asserted on the physical
-    plan with broadcast disabled (so the shuffle question is actually
-    posed), then the incremental result over the bucketed state is
-    value-checked against the full recompute."""
-    import shutil
-    from urllib.parse import urlparse
+def test_state_keys_semi_join_standing_side_never_shuffles(spark, tmp_path, setup):
+    """On a path-stored state under default settings, the grow's
+    old-side semi-join broadcasts the batch's distinct keys (BuildRight)
+    straight over the stored key table's scan: no shuffle exchange on
+    the standing-keys side. At 10^12 docs that side is the O(corpus)
+    key table, which a daily batch must never move across the
+    network."""
+    from conftest import plan_nodes, shuffles
 
     from entitymatch_spark.plans.pipeline import blocking_keys
 
-    prefix = "default.em_state_bk"
-    parts = ("docs", "keys", "idf", "clusters", "scored", "cfg")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for part in parts:  # a dir left by a dead session blocks saveAsTable
-        spark.sql(f"drop table if exists {prefix}_{part}")
-        shutil.rmtree(f"{wh}/em_state_bk_{part}", ignore_errors=True)
-    # bucket count == the session's shuffle partitions: below that,
-    # DisableUnnecessaryBucketedScan re-shuffles both sides (docstring)
-    save_state(setup["st0"], prefix, key_buckets=8)
-    try:
-        loaded = load_state(spark, prefix)
-        batch_keys = (
-            blocking_keys(
-                prepare_docs(setup["batch"], setup["cfg"]), loaded.idf, loaded.cfg
-            )
-            .select("key")
-            .distinct()
-        )
-        prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            j = loaded.keys.join(batch_keys, "key", "semi")
-            plan = j._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
-        assert "Bucketed: true" in plan, plan[:3000]
-        standing_branch = plan[plan.find("Join") : plan.find("FileScan")]
-        assert "Exchange" not in standing_branch, plan[:3000]
-        assert plan.count("Exchange") >= 1  # the batch side still moves
-        res = incremental_match(loaded, setup["batch"])
-        assert _clusters(res.state.clusters) == _clusters(setup["full"].clusters)
-    finally:
-        for part in parts:
-            spark.sql(f"drop table if exists {prefix}_{part}")
+    path = str(tmp_path / "st")
+    save_state(setup["st0"], path)
+    loaded = load_state(spark, path)
+    batch_keys = (
+        blocking_keys(prepare_docs(setup["batch"], setup["cfg"]), loaded.idf, loaded.cfg)
+        .select("key")
+        .distinct()
+    )
+    j = loaded.keys.join(batch_keys, "key", "semi")
+    j.collect()  # settle the adaptive plan
 
-
-def test_bucketed_write_needs_catalog(tmp_path, setup):
-    with pytest.raises(ValueError, match="catalog"):
-        save_state(setup["st0"], str(tmp_path / "st"), key_buckets=8)
+    plan = j._jdf.queryExecution().executedPlan()
+    semi = [
+        n for n in plan_nodes(plan)
+        if n.getClass().getSimpleName() == "BroadcastHashJoinExec"
+        and n.joinType().toString() == "LeftSemi"
+    ]
+    assert len(semi) == 1, plan.toString()
+    assert semi[0].buildSide().toString() == "BuildRight", plan.toString()
+    standing = semi[0].left()
+    assert not shuffles(standing), standing.toString()
+    assert any(
+        n.getClass().getSimpleName() == "FileSourceScanExec"
+        for n in plan_nodes(standing)
+    ), standing.toString()
 
 
 def test_initial_state_scores_once(spark, tmp_path, setup, monkeypatch):
@@ -570,70 +535,6 @@ def test_commit_refuses_stale_base(spark, tmp_path, setup):
     )
     with pytest.raises(ValueError, match="does not build on"):
         commit_increment(mid, path)
-
-
-def test_commit_increment_catalog_fallback(spark, setup):
-    """On a catalog without row-level DELETE (the session catalog) the
-    clusters leg falls back — narrowly, through the capability check —
-    to a full overwrite; the delta appends still apply, and the
-    reloaded state equals the grown one."""
-    from entitymatch_spark.plans.incremental import commit_increment
-
-    prefix = "default.em_state_ci"
-    parts = ("docs", "keys", "idf", "clusters", "scored", "cfg")
-    for part in parts:
-        spark.sql(f"drop table if exists {prefix}_{part}")
-    save_state(setup["st0"], prefix)
-    try:
-        loaded = load_state(spark, prefix)
-        res = incremental_match(loaded, setup["batch"])
-        commit_increment(res, prefix)
-        grown = load_state(spark, prefix)
-        exp = setup["inc"].state
-        assert _clusters(grown.clusters) == _clusters(exp.clusters)
-        assert grown.docs.count() == exp.docs.count()
-        assert _pairs(grown.scored) == _pairs(exp.scored)
-    finally:
-        for part in parts:
-            spark.sql(f"drop table if exists {prefix}_{part}")
-
-
-def test_commit_increment_bucketed_keys(spark, setup):
-    """THE documented 10^12 combination: save_state(key_buckets=) then
-    commit_increment. The keys append must re-state the stored table's
-    bucket spec (a plain append refuses with 'Specified bucketing does
-    not match that of the existing table') and the table must STAY
-    bucketed so the next batch's standing-side scan remains
-    shuffle-free."""
-    import shutil
-    from urllib.parse import urlparse
-
-    from entitymatch_spark.plans.incremental import commit_increment
-    from entitymatch_spark.sources.readers import _existing_bucket_spec
-
-    prefix = "default.em_state_cib"
-    parts = ("docs", "keys", "idf", "clusters", "scored", "cfg")
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    for part in parts:
-        spark.sql(f"drop table if exists {prefix}_{part}")
-        shutil.rmtree(f"{wh}/em_state_cib_{part}", ignore_errors=True)
-    save_state(setup["st0"], prefix, key_buckets=8)
-    try:
-        loaded = load_state(spark, prefix)
-        res = incremental_match(loaded, setup["batch"])
-        commit_increment(res, prefix)
-        assert _existing_bucket_spec(spark, f"{prefix}_keys") == (
-            8, ["key"], ["key"],
-        )
-        grown = load_state(spark, prefix)
-        exp = setup["inc"].state
-        assert sorted((r.doc_id, r.key) for r in grown.keys.collect()) == sorted(
-            (r.doc_id, r.key) for r in exp.keys.collect()
-        )
-        assert _clusters(grown.clusters) == _clusters(exp.clusters)
-    finally:
-        for part in parts:
-            spark.sql(f"drop table if exists {prefix}_{part}")
 
 
 def test_remove_docs_follows_calibrated_model(setup):

@@ -50,12 +50,15 @@ def test_spark_submit_pipeline(spark, tmp_path):
     assert set(clusters.columns) >= {"doc_id", "cluster_id"}
 
 
-def test_cli_state_lifecycle(spark, tmp_path):
+def test_cli_state_lifecycle(spark, tmp_path, monkeypatch):
     """build -> grow -> remove -> rethreshold -> in-place grow through
     the CLI's run() (in-process: the spark-submit plumbing itself is
     proven above); the clusters after the last two steps must equal the
     same chain through the library. The last grow passes no flags, so
-    it must run under the config saved with the state."""
+    it must run under the config saved with the state. The documented
+    relative ``--state-out st`` is a path under the working directory:
+    build and grow publish manifest generations 1 and 2 there and
+    create no catalog table."""
     import importlib.util
 
     from pyspark.sql import functions as F
@@ -75,7 +78,7 @@ def test_cli_state_lifecycle(spark, tmp_path):
     gone = base.limit(50).select("url")
     d = {k: str(tmp_path / k) for k in
          ("base", "batch", "gone", "regrow", "o1", "o2", "o3", "o4", "o5",
-          "s0", "s1", "s2", "s3")}
+          "o6", "o7", "s0", "s1", "s2", "s3")}
     base.write.parquet(d["base"])
     batch.write.parquet(d["batch"])
     gone.write.parquet(d["gone"])
@@ -132,6 +135,28 @@ def test_cli_state_lifecycle(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, regrown.collect())
     )
+
+    # under spark-submit, python and its local Hadoop filesystem start
+    # in one working directory: move both to tmp_path
+    monkeypatch.chdir(tmp_path)
+    local = spark._jvm.org.apache.hadoop.fs.FileSystem.getLocal(
+        spark._jsc.hadoopConfiguration()
+    )
+    cwd = local.getWorkingDirectory()
+    local.setWorkingDirectory(spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path)))
+    tables = {t.name for t in spark.catalog.listTables()}
+    try:
+        cli.run(p.parse_args(
+            ["--mode", "build", "--input", d["batch"], "--output", d["o6"],
+             "--state-out", "st"]), spark)
+        assert (tmp_path / "st" / "manifest-000001.json").exists()
+        cli.run(p.parse_args(
+            ["--mode", "grow", "--input", d["regrow"], "--output", d["o7"],
+             "--state-dir", "st"]), spark)
+        assert (tmp_path / "st" / "manifest-000002.json").exists()
+    finally:
+        local.setWorkingDirectory(cwd)
+    assert {t.name for t in spark.catalog.listTables()} == tables
 
 
 def test_get_spark_accepts_star_cpus_env(spark, monkeypatch):
